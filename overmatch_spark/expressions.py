@@ -120,32 +120,45 @@ def cell_edge_m(res: int) -> float:
     return WORLD_M / float(1 << res)
 
 
-def cell_ix(x: Column, res: int) -> Column:
-    return F.floor((x + F.lit(ORIGIN_M)) / F.lit(cell_edge_m(res))).cast("long")
+# `res` below is an int or a per-row int Column (knn's ladder levels),
+# `radius_m` a float or a per-row double Column. One formula serves
+# both: for a literal res Catalyst constant-folds WORLD_M / 2^res to
+# exactly cell_edge_m(res) (2^res is dyadic, so the division rounds
+# identically), leaving the optimized plan a plain double literal.
+
+def _edge(res: int | Column) -> Column:
+    return F.lit(WORLD_M) / F.pow(F.lit(2.0), F.lit(res).cast("double"))
 
 
-def cell_iy(y: Column, res: int) -> Column:
-    return F.floor((F.lit(ORIGIN_M) - y) / F.lit(cell_edge_m(res))).cast("long")
+def cell_ix(x: Column, res: int | Column) -> Column:
+    return F.floor((x + F.lit(ORIGIN_M)) / _edge(res)).cast("long")
+
+
+def cell_iy(y: Column, res: int | Column) -> Column:
+    return F.floor((F.lit(ORIGIN_M) - y) / _edge(res)).cast("long")
 
 
 def cell_id(ix: Column, iy: Column) -> Column:
     return F.shiftleft(ix, 30).cast("long") + iy
 
 
-def cell_of(x: Column, y: Column, res: int) -> Column:
+def cell_of(x: Column, y: Column, res: int | Column) -> Column:
     return cell_id(cell_ix(x, res), cell_iy(y, res))
 
 
-def cover_cells(x: Column, y: Column, res: int, radius_m: float) -> Column:
+def cover_cells(x: Column, y: Column, res: int | Column,
+                radius_m: float | Column) -> Column:
     """Array of cell ids EXACTLY covering the (x±r, y±r) buffer
-    square — the probe side of the candidate equi-join (J2). The
-    cover is enumerated dynamically from the square's corner cells,
-    so it is minimal at every resolution (≤ 2x2 cells when
-    edge >= 2r, vs a static 3x3): ~40% less probe-side shuffle
-    volume at the default resolution. Any superset of the true disk
-    is correct; J3's exact distance filter reproduces the reference
-    decisions regardless of `res` (property-tested)."""
-    r = F.lit(float(radius_m))
+    square — the probe side of the candidate equi-join (J2), and the
+    only cover in the engine (knn's per-row radius and per-row ladder
+    level included). The cover is enumerated dynamically from the
+    square's corner cells, so it is minimal at every resolution
+    (≤ 2x2 cells when edge >= 2r, vs a static 3x3): ~40% less
+    probe-side shuffle volume at the default resolution. Any superset
+    of the true disk is correct; J3's exact distance filter
+    reproduces the reference decisions regardless of `res`
+    (property-tested)."""
+    r = F.lit(radius_m).cast("double")
     ix_lo = cell_ix(x - r, res)
     ix_hi = cell_ix(x + r, res)
     iy_lo = cell_iy(y + r, res)  # y grows north, iy grows south

@@ -165,26 +165,6 @@ def video_frame_bytes(buf: bytes, idx: int) -> bytes:
     return bytes(buf[start:start + fsz])
 
 
-def video_frame_rgb(buf: bytes, idx: int) -> bytes:
-    """Raw RGB bytes of frame idx, container-dispatched. Only the
-    SELECTED frame's byte range is sliced — and, for mp4, decoded —
-    so sampling cost scales with frames kept, not frames stored."""
-    if bytes(buf[:4]) == VIDEO_MAGIC:
-        return video_frame_bytes(buf, idx)
-    from overmatch_spark.kernels.jpeg import jpeg_decode_rgb
-    from overmatch_spark.kernels.mp4 import is_mp4, parse_mp4, sample_bytes
-
-    if is_mp4(buf):
-        t = parse_mp4(buf)
-        if t.codec != "jpeg":
-            raise NotImplementedError(
-                f"mp4 sample codec {t.codec!r}: only Motion-JPEG decodes "
-                "in this sandbox (H.264/VP9 need external codecs)"
-            )
-        return jpeg_decode_rgb(sample_bytes(buf, t, idx)).tobytes()
-    raise NotImplementedError("unknown video container")
-
-
 class VideoReader:
     """Per-video demux handle: the container table is parsed ONCE,
     then every frame read is an O(1) byte-range slice (+ jpeg decode

@@ -2,10 +2,16 @@
 rule: "checkpoint per-partition progress with lineage + metrics so any
 run resumes mid-job without recomputing completed cells").
 
+The job is `conflate` cut at the cell key: `prepare` materializes
+conflate's own probe and build sides (operators.conflate._sides) plus
+a bucket column, and `run` applies conflate's own cell join and
+matcher (_cell_join + _match) one bucket at a time — so the resumable
+job cannot drift from one-shot conflation.
+
 Reference precedent: the KV loader's skip-existing resume + batch
 retry (/root/reference/api/load_matches.py:105-142,176-264). Here the
-unit of work is a SPATIAL BUCKET: a hash of the coarse cell id, so
-bucket boundaries respect the cell-join locality:
+unit of work is a SPATIAL BUCKET: a hash of the cell id, so bucket
+boundaries respect the cell-join locality:
 
   - layer_b rows live in exactly one bucket (their cell's bucket).
   - layer_a probe rows are exploded to their cover cells first; each
@@ -36,8 +42,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from overmatch_spark import expressions as X
-from overmatch_spark.udfs import indel_sim
+from overmatch_spark.operators.conflate import _cell_join, _match, _sides
 
 
 class ConflationJob:
@@ -62,38 +67,10 @@ class ConflationJob:
 
     # -- stage 0: bucketed materialization ---------------------------------
     def prepare(self, layer_a: DataFrame, layer_b: DataFrame) -> None:
-        bucket_of = lambda cell: F.pmod(F.xxhash64(cell), F.lit(self.n_buckets))
-
-        a = (
-            layer_a.filter(F.col("name").isNotNull() & (F.col("name") != ""))
-            .select(
-                "osm_id",
-                F.col("name").alias("a_name"),
-                F.col("housenumber").alias("a_housenumber"),
-                X.merc_x(F.col("lon")).alias("ax"),
-                X.merc_y(F.col("lat")).alias("ay"),
-            )
-            .withColumn(
-                "cell",
-                F.explode(
-                    X.cover_cells(F.col("ax"), F.col("ay"), self.res, self.buffer_m)
-                ),
-            )
-            .withColumn("bucket", bucket_of(F.col("cell")))
-        )
-        b = (
-            layer_b.select(
-                F.col("id").alias("overture_id"),
-                F.col("name").alias("b_name"),
-                F.col("housenumber").alias("b_housenumber"),
-                F.col("lon").alias("b_lon"),
-                F.col("lat").alias("b_lat"),
-                X.merc_x(F.col("lon")).alias("bx"),
-                X.merc_y(F.col("lat")).alias("by"),
-            )
-            .withColumn("cell", X.cell_of(F.col("bx"), F.col("by"), self.res))
-            .withColumn("bucket", bucket_of(F.col("cell")))
-        )
+        a, b = _sides(layer_a, layer_b, self.res, self.buffer_m)
+        bucket = F.pmod(F.xxhash64(F.col("cell")), F.lit(self.n_buckets))
+        a = a.withColumn("bucket", bucket)
+        b = b.withColumn("bucket", bucket)
         a.write.mode("overwrite").partitionBy("bucket").parquet(
             os.path.join(self.stage_dir, "a")
         )
@@ -146,32 +123,8 @@ class ConflationJob:
             # partition-pruned scans: only bucket=k bytes are read
             a = self.spark.read.parquet(a_path).filter(F.col("bucket") == k)
             b = self.spark.read.parquet(b_path).filter(F.col("bucket") == k)
-            cand = a.join(b, "cell").withColumn(
-                "dist",
-                X.planar_distance(
-                    F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")
-                ),
-            ).filter(F.col("dist") <= F.lit(self.buffer_m))
-            out = (
-                cand.filter(F.col("b_name").isNotNull() & (F.col("b_name") != ""))
-                .withColumn(
-                    "similarity", indel_sim(F.col("a_name"), F.col("b_name"))
-                )
-                .filter(F.col("similarity") >= F.lit(self.sim_threshold))
-                .filter(
-                    F.col("a_housenumber").isNull()
-                    | F.col("b_housenumber").isNull()
-                    | (F.col("a_housenumber") == F.col("b_housenumber"))
-                )
-                .select(
-                    "osm_id",
-                    "overture_id",
-                    F.col("b_lon").alias("lon"),
-                    F.col("b_lat").alias("lat"),
-                    X.round1(F.col("dist")).alias("distance_m"),
-                    "similarity",
-                )
-            )
+            cand = _cell_join(a, b, ["cell"], self.buffer_m)
+            out = _match(cand, self.sim_threshold)
             sink = os.path.join(self.sink_dir, f"bucket={k}")
             out.write.mode("overwrite").parquet(sink)  # idempotent per bucket
             n = self.spark.read.parquet(sink).count()

@@ -42,15 +42,6 @@ DEFAULT_BUFFER_M = 100.0
 DEFAULT_SIM = 0.6
 
 
-def with_mercator(df: DataFrame, lon: str = "lon", lat: str = "lat",
-                  x: str = "x", y: str = "y") -> DataFrame:
-    """EPSG:4326 -> EPSG:3857 (reference match.py:116-121), as pure
-    column expressions."""
-    return df.withColumn(x, X.merc_x(F.col(lon))).withColumn(
-        y, X.merc_y(F.col(lat))
-    )
-
-
 def detect_hot_cells(layer_b: DataFrame, res: int = DEFAULT_RES,
                      threshold: int = 50_000) -> list[int]:
     """Cells whose build-side row count would make a single join task
@@ -78,6 +69,105 @@ def detect_hot_cells_df(layer_b: DataFrame, res: int = DEFAULT_RES,
     )
 
 
+# --- the cell-join core: conflate, spatial_join and the resumable
+#     ConflationJob are compositions of these stages ---
+
+def _probe(df: DataFrame, cols: list, res: int, radius_m: float) -> DataFrame:
+    """J2 probe side: narrow projection + Mercator (ax, ay), exploded
+    to one row per cell of its buffer square's cover."""
+    return df.select(
+        *cols,
+        X.merc_x(F.col("lon")).alias("ax"),
+        X.merc_y(F.col("lat")).alias("ay"),
+    ).withColumn(
+        "cell", F.explode(X.cover_cells(F.col("ax"), F.col("ay"), res, radius_m))
+    )
+
+
+def _build(df: DataFrame, cols: list, res: int) -> DataFrame:
+    """J1 build side: narrow projection + Mercator (bx, by) + its one
+    cell."""
+    return df.select(
+        *cols,
+        X.merc_x(F.col("lon")).alias("bx"),
+        X.merc_y(F.col("lat")).alias("by"),
+    ).withColumn("cell", X.cell_of(F.col("bx"), F.col("by"), res))
+
+
+def _sides(layer_a: DataFrame, layer_b: DataFrame, res: int,
+           buffer_m: float) -> tuple[DataFrame, DataFrame]:
+    """The matcher's probe and build sides (narrow projections only —
+    payload stays out)."""
+    a = _probe(
+        # P6: null/empty-name rows produce no matches (match.py:203-207)
+        layer_a.filter(F.col("name").isNotNull() & (F.col("name") != "")),
+        [
+            "osm_id",
+            F.col("name").alias("a_name"),
+            F.col("housenumber").alias("a_housenumber"),
+        ],
+        res,
+        buffer_m,
+    )
+    b = _build(
+        layer_b,
+        [
+            F.col("id").alias("overture_id"),
+            F.col("name").alias("b_name"),
+            F.col("housenumber").alias("b_housenumber"),
+            F.col("lon").alias("b_lon"),
+            F.col("lat").alias("b_lat"),
+        ],
+        res,
+    )
+    return a, b
+
+
+def _cell_join(a: DataFrame, b: DataFrame, keys: list,
+               radius_m: float) -> DataFrame:
+    """J2 equi-join on the cell key(s), then J3 exact planar distance
+    (inclusive <=, match.py:225) as column `dist`.
+
+    No pair-dedup is needed: a build row lives in exactly one cell
+    and carries exactly one salt, while the probe side enumerates
+    distinct (cell, salt) keys — each qualifying pair joins exactly
+    once. (Property-tested: salt/res never change the output.)"""
+    dist = X.planar_distance(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
+    return (
+        a.join(b, keys, "inner")
+        .withColumn("dist", dist)
+        .filter(F.col("dist") <= F.lit(radius_m))
+        .drop(*keys)
+    )
+
+
+def _match(cand: DataFrame, sim_threshold: float) -> DataFrame:
+    """J4 + J5 on distance-refined candidates, then the output
+    projection."""
+    # J4: indel name similarity (inclusive >=, match.py:244); empty
+    # candidate names never match (match.py:239)
+    cand = (
+        cand.filter(F.col("b_name").isNotNull() & (F.col("b_name") != ""))
+        .withColumn("similarity", indel_sim(F.col("a_name"), F.col("b_name")))
+        .filter(F.col("similarity") >= F.lit(sim_threshold))
+    )
+    # J5: housenumber anti-condition (match.py:300-302): reject only
+    # when BOTH sides carry a housenumber and they differ
+    cand = cand.filter(
+        F.col("a_housenumber").isNull()
+        | F.col("b_housenumber").isNull()
+        | (F.col("a_housenumber") == F.col("b_housenumber"))
+    )
+    return cand.select(
+        "osm_id",
+        "overture_id",
+        F.col("b_lon").alias("lon"),
+        F.col("b_lat").alias("lat"),
+        X.round1(F.col("dist")).alias("distance_m"),
+        "similarity",
+    )
+
+
 def conflate(
     layer_a: DataFrame,
     layer_b: DataFrame,
@@ -101,34 +191,9 @@ def conflate(
     `broadcast_b` (property-tested): they change the physical plan,
     never the result.
     """
-    # --- prepare sides (narrow projections only — payload stays out) ---
-    a = (
-        layer_a
-        # P6: null/empty-name rows produce no matches (match.py:203-207)
-        .filter(F.col("name").isNotNull() & (F.col("name") != ""))
-        .select(
-            "osm_id",
-            F.col("name").alias("a_name"),
-            F.col("housenumber").alias("a_housenumber"),
-            X.merc_x(F.col("lon")).alias("ax"),
-            X.merc_y(F.col("lat")).alias("ay"),
-        )
-    )
-    b = layer_b.select(
-        F.col("id").alias("overture_id"),
-        F.col("name").alias("b_name"),
-        F.col("housenumber").alias("b_housenumber"),
-        F.col("lon").alias("b_lon"),
-        F.col("lat").alias("b_lat"),
-        X.merc_x(F.col("lon")).alias("bx"),
-        X.merc_y(F.col("lat")).alias("by"),
-    ).withColumn("cell", X.cell_of(F.col("bx"), F.col("by"), res))
+    a, b = _sides(layer_a, layer_b, res, buffer_m)
 
-    # --- J2: cell-cover explode on the probe side, equi-join on cell ---
-    a = a.withColumn(
-        "cell", F.explode(X.cover_cells(F.col("ax"), F.col("ay"), res, buffer_m))
-    )
-
+    join_keys = ["cell"]
     if hot_cells is not None and not isinstance(hot_cells, (list, tuple)):
         # DataFrame of hot cell ids: broadcast-join the flag so the
         # hot set never transits the driver (the 100x-scale path)
@@ -137,66 +202,27 @@ def conflate(
         hot = F.broadcast(
             hot_cells.select("cell").distinct().withColumn("_hot", F.lit(True))
         )
+        a, b = a.join(hot, "cell", "left"), b.join(hot, "cell", "left")
         k = F.when(F.coalesce(F.col("_hot"), F.lit(False)), F.lit(salt_factor)
                    ).otherwise(F.lit(1))
-        b = b.join(hot, "cell", "left").withColumn(
-            "salt", F.pmod(F.xxhash64(F.col("overture_id")), k).cast("int")
-        ).drop("_hot")
-        a = a.join(hot, "cell", "left").withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), k.cast("int") - F.lit(1)))
-        ).drop("_hot")
-        join_keys = ["cell", "salt"]
     elif hot_cells and salt_factor > 1:
         k = F.when(F.col("cell").isin(list(hot_cells)), F.lit(salt_factor)).otherwise(
             F.lit(1)
         )
+    else:
+        k = None
+    if k is not None:
+        # build rows take one salt, probes explode the whole range
         b = b.withColumn(
             "salt", F.pmod(F.xxhash64(F.col("overture_id")), k).cast("int")
-        )
+        ).drop("_hot")
         a = a.withColumn(
             "salt", F.explode(F.sequence(F.lit(0), k.cast("int") - F.lit(1)))
-        )
+        ).drop("_hot")
         join_keys = ["cell", "salt"]
-    else:
-        join_keys = ["cell"]
 
     right = F.broadcast(b) if broadcast_b else b
-    cand = a.join(right, join_keys, "inner")
-
-    # --- J3: exact planar distance (inclusive <=, match.py:225) ---
-    dist = X.planar_distance(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
-    cand = cand.withColumn("dist", dist).filter(F.col("dist") <= F.lit(buffer_m))
-
-    # No pair-dedup is needed: a build row lives in exactly one cell
-    # and carries exactly one salt, while the probe side enumerates
-    # distinct (cell, salt) keys — each qualifying pair joins exactly
-    # once. (Property-tested: salt/res never change the output.)
-    cand = cand.drop("cell", *(["salt"] if "salt" in join_keys else []))
-
-    # --- J4: indel name similarity (inclusive >=, match.py:244);
-    #     empty candidate names never match (match.py:239) ---
-    cand = (
-        cand.filter(F.col("b_name").isNotNull() & (F.col("b_name") != ""))
-        .withColumn("similarity", indel_sim(F.col("a_name"), F.col("b_name")))
-        .filter(F.col("similarity") >= F.lit(sim_threshold))
-    )
-
-    # --- J5: housenumber anti-condition (match.py:300-302): reject
-    #     only when BOTH sides carry a housenumber and they differ ---
-    cand = cand.filter(
-        F.col("a_housenumber").isNull()
-        | F.col("b_housenumber").isNull()
-        | (F.col("a_housenumber") == F.col("b_housenumber"))
-    )
-
-    return cand.select(
-        "osm_id",
-        "overture_id",
-        F.col("b_lon").alias("lon"),
-        F.col("b_lat").alias("lat"),
-        X.round1(F.col("dist")).alias("distance_m"),
-        "similarity",
-    )
+    return _match(_cell_join(a, right, join_keys, buffer_m), sim_threshold)
 
 
 def spatial_join(
@@ -218,28 +244,11 @@ def spatial_join(
     output invariant to `res`. Rows with null coordinates produce no
     pairs (null cell never matches) — filter/repair upstream if they
     must be reported."""
-    a = layer_a.select(
-        F.col(a_id).alias("a_id"),
-        X.merc_x(F.col("lon")).alias("ax"),
-        X.merc_y(F.col("lat")).alias("ay"),
-    ).withColumn(
-        "cell",
-        F.explode(X.cover_cells(F.col("ax"), F.col("ay"), res, radius_m)),
-    )
-    b = layer_b.select(
-        F.col(b_id).alias("b_id"),
-        X.merc_x(F.col("lon")).alias("bx"),
-        X.merc_y(F.col("lat")).alias("by"),
-    ).withColumn("cell", X.cell_of(F.col("bx"), F.col("by"), res))
+    a = _probe(layer_a, [F.col(a_id).alias("a_id")], res, radius_m)
+    b = _build(layer_b, [F.col(b_id).alias("b_id")], res)
     right = F.broadcast(b) if broadcast_b else b
-    dist = X.planar_distance(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"))
-    return (
-        a.join(right, "cell")
-        .withColumn("dist", dist)
-        .filter(F.col("dist") <= F.lit(radius_m))
-        .select(
-            "a_id", "b_id", X.round1(F.col("dist")).alias("distance_m")
-        )
+    return _cell_join(a, right, ["cell"], radius_m).select(
+        "a_id", "b_id", X.round1(F.col("dist")).alias("distance_m")
     )
 
 
@@ -257,7 +266,11 @@ def nearest_join(
     (operators.knn) with an empty exclusion set and NO matcher
     semantics (the conflation pipeline's null/empty-name skip does
     not apply here; inputs only need (id, lon, lat), like
-    spatial_join). Returns (a_id, b_id, distance_m)."""
+    spatial_join). Returns (a_id, b_id, distance_m).
+
+    `caches`: as in knn_fallback — the list the persisted
+    intermediates are appended to, for knn.release_caches(caches)
+    after the action; None leaves them untracked."""
     from overmatch_spark.operators.knn import knn_fallback
 
     a = layer_a.select(

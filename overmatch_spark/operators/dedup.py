@@ -139,13 +139,6 @@ def minhash_signature_from_hashes(th: Column, num_hashes: int) -> Column:
     )
 
 
-def minhash_signature(sh: Column, num_hashes: int) -> Column:
-    """Array of num_hashes minhash values over a shingle array.
-    Prefer materializing minhash_token_hashes once (as
-    minhash_lsh_pairs does) so the md5 runs once per shingle."""
-    return minhash_signature_from_hashes(minhash_token_hashes(sh), num_hashes)
-
-
 def sql_minhash_token_hashes(sh: str) -> str:
     return f"list_transform({sh}, t -> ({sql_h60('t')} % {P_MINHASH}))"
 
@@ -452,10 +445,6 @@ def sql_simhash_from_hashes(th: str) -> str:
             f"(CASE WHEN ({vote}) > 0 THEN CAST({1 << k} AS BIGINT) ELSE 0 END)"
         )
     return "(" + " + ".join(terms) + ")"
-
-
-def sql_simhash(sh: str) -> str:
-    return sql_simhash_from_hashes(sql_token_hashes(sh))
 
 
 def simhash_hamming_pairs(

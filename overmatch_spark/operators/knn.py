@@ -80,29 +80,12 @@ from overmatch_spark import expressions as X
 # tied candidate inside any bound/cover derived from a winner
 _TIE_SLACK_M = 0.002
 
-# Default registry for intermediates persisted by knn_fallback; the
-# returned DataFrame is lazy and REQUIRES them at action time, so the
-# operator cannot unpersist them itself. Callers that invoke
-# knn_fallback repeatedly in one session (benchmarks, loops) should
-# pass their OWN list via the `caches` parameter and unpersist it
-# after materializing results — the module-level registry is only the
-# convenience default for one-shot use, and release_caches() drains
-# it (interleaved callers sharing the default registry would release
-# each other's caches; own your list if that can happen).
-_PERSISTED: list = []
-
-
-def release_caches(caches: list | None = None) -> None:
-    """Unpersist every intermediate in `caches` (default: the
-    module-level registry). Only call AFTER the returned DataFrames
-    were materialized (or are no longer needed)."""
-    reg = _PERSISTED if caches is None else caches
-    while reg:
-        df = reg.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+def release_caches(caches: list) -> None:
+    """Unpersist every intermediate knn_fallback appended to `caches`.
+    Only call AFTER the returned DataFrames were materialized (or are
+    no longer needed): the lazy result reads them at action time."""
+    while caches:
+        caches.pop().unpersist()
 
 
 def _best_per_probe(cand: DataFrame, carry: tuple = ()) -> DataFrame:
@@ -128,49 +111,6 @@ def _best_per_probe(cand: DataFrame, carry: tuple = ()) -> DataFrame:
             F.col("best.overture_id").alias("overture_id"),
             F.col("best.dist").alias("dist"),
             *[F.col(f"best.{c}").alias(c) for c in carry],
-        )
-    )
-
-
-def _dynamic_cover(ax, ay, radius, res: int):
-    """Exact per-row cell cover of the (x±radius, y±radius) square at
-    `res`, with a per-row DYNAMIC radius column — F.sequence makes
-    the cover exactly as wide as each probe needs."""
-    ix_lo = X.cell_ix(ax - radius, res)
-    ix_hi = X.cell_ix(ax + radius, res)
-    iy_lo = X.cell_iy(ay + radius, res)
-    iy_hi = X.cell_iy(ay - radius, res)
-    return F.flatten(
-        F.transform(
-            F.sequence(ix_lo, ix_hi),
-            lambda i: F.transform(
-                F.sequence(iy_lo, iy_hi), lambda j: X.cell_id(i, j)
-            ),
-        )
-    )
-
-
-def _dyn_edge(res_col):
-    """Cell edge in meters for a per-row resolution column (exact for
-    integer resolutions: pow(2, r) is dyadic, so the division rounds
-    identically to the literal cell_edge_m(r))."""
-    return F.lit(X.WORLD_M) / F.pow(F.lit(2.0), res_col.cast("double"))
-
-
-def _dyn_cover(ax, ay, radius, res_col):
-    """_dynamic_cover with a per-row resolution column — the ladder
-    join's probe side, where each straggler covers at its own level."""
-    edge = _dyn_edge(res_col)
-    ix_lo = F.floor((ax - radius + F.lit(X.ORIGIN_M)) / edge).cast("long")
-    ix_hi = F.floor((ax + radius + F.lit(X.ORIGIN_M)) / edge).cast("long")
-    iy_lo = F.floor((F.lit(X.ORIGIN_M) - (ay + radius)) / edge).cast("long")
-    iy_hi = F.floor((F.lit(X.ORIGIN_M) - (ay - radius)) / edge).cast("long")
-    return F.flatten(
-        F.transform(
-            F.sequence(ix_lo, ix_hi),
-            lambda i: F.transform(
-                F.sequence(iy_lo, iy_hi), lambda j: X.cell_id(i, j)
-            ),
         )
     )
 
@@ -223,8 +163,11 @@ def knn_fallback(
 
     `caches`: list the persisted intermediates are appended to; the
     caller unpersists them (release_caches(caches)) after
-    materializing the result. Defaults to the module registry."""
-    reg = _PERSISTED if caches is None else caches
+    materializing the result. None means the caller does not track
+    them: they stay cached until spark.catalog.clearCache() or the
+    session ends."""
+    if caches is None:
+        caches = []
     # probes feed phase 1, the straggler anti-join, and phase 2 —
     # persist (narrow: id + 2 doubles per unmatched row). The matched
     # -id side is dropDuplicates'd: anti-join results ignore dup keys,
@@ -251,7 +194,7 @@ def knn_fallback(
         .dropDuplicates(["osm_id", "ax", "ay"])
         .persist()
     )
-    reg.append(probes)
+    caches.append(probes)
     # ONE cached build table (scanned/derived once, reused by phase 1,
     # the coarse histogram, and the ladder join), hash-partitioned on
     # the res0 `cell` key at cache time: phase 1 AND the phase-2 fine
@@ -277,7 +220,7 @@ def knn_fallback(
         .dropDuplicates(["overture_id", "bx", "by", "cell"])
         .persist()
     )
-    reg.append(b)
+    caches.append(b)
     b0 = b  # histogram / ladder consumers ignore the cell column
     edge_c = X.cell_edge_m(coarse_res)
 
@@ -285,7 +228,7 @@ def knn_fallback(
     r1 = X.cell_edge_m(res0) / 2.0
     probe1 = probes.withColumn(
         "cell",
-        F.explode(_dynamic_cover(F.col("ax"), F.col("ay"), F.lit(r1), res0)),
+        F.explode(X.cover_cells(F.col("ax"), F.col("ay"), res0, r1)),
     )
     cand1 = probe1.join(b.select("cell", "overture_id", "bx", "by"), "cell").withColumn(
         "dist",
@@ -301,7 +244,7 @@ def knn_fallback(
     # remaining probe split is the `rest` anti-join below, which reuses
     # the hash(osm_id) partitioning both caches already have.
     best1 = _best_per_probe(cand1, carry=("ax", "ay")).persist()
-    reg.append(best1)
+    caches.append(best1)
     exit1 = F.lit(r1 - _TIE_SLACK_M)
     done1 = best1.filter(F.col("dist") <= exit1).select(
         "osm_id", "overture_id", "dist"
@@ -383,7 +326,7 @@ def knn_fallback(
         .withColumn("lvl", _ladder_level(F.col("ub"), res0))
         .persist()
     )
-    reg.append(ubs)
+    caches.append(ubs)
 
     # ---- phase 2, step 2: ladder equi-join at each probe's level ----
     # FINE path: every hinted straggler (6x6 cover bound proved above)
@@ -397,7 +340,7 @@ def knn_fallback(
     cand_f = fine.select(
         "osm_id", "ax", "ay", "ub",
         F.explode(
-            _dynamic_cover(F.col("ax"), F.col("ay"), F.col("ub"), res0)
+            X.cover_cells(F.col("ax"), F.col("ay"), res0, F.col("ub"))
         ).alias("cell"),
     ).join(b.select("cell", "overture_id", "bx", "by"), "cell").drop("cell")
     # COARSE path (rare: probes whose nearest is beyond 2*edge(res0)):
@@ -413,7 +356,7 @@ def knn_fallback(
     probe_c = coarse.select(
         "osm_id", "ax", "ay", "ub", "lvl",
         F.explode(
-            _dyn_cover(F.col("ax"), F.col("ay"), F.col("ub"), F.col("lvl"))
+            X.cover_cells(F.col("ax"), F.col("ay"), F.col("lvl"), F.col("ub"))
         ).alias("lcell"),
     )
     # build side = needed-levels x b0 via a broadcast cross join (the
@@ -428,17 +371,9 @@ def knn_fallback(
         F.broadcast(needed)
         .crossJoin(b0)
         .select(
-            "lvl",
-            F.floor(
-                (F.col("bx") + F.lit(X.ORIGIN_M)) / _dyn_edge(F.col("lvl"))
-            ).cast("long").alias("bix"),
-            F.floor(
-                (F.lit(X.ORIGIN_M) - F.col("by")) / _dyn_edge(F.col("lvl"))
-            ).cast("long").alias("biy"),
-            "overture_id", "bx", "by",
+            "lvl", "overture_id", "bx", "by",
+            X.cell_of(F.col("bx"), F.col("by"), F.col("lvl")).alias("lcell"),
         )
-        .withColumn("lcell", X.cell_id(F.col("bix"), F.col("biy")))
-        .drop("bix", "biy")
     )
     cand_c = probe_c.join(b_ladder, ["lvl", "lcell"]).drop("lvl", "lcell")
     cand2 = cand_f.unionByName(cand_c).withColumn(

@@ -239,7 +239,7 @@ def sql_parse_street(addr: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# F6 — category -> OSM tag map (+P10 default), assembled tag map
+# F6 — category -> OSM tag map (+P10 default)
 # ---------------------------------------------------------------------------
 
 def category_tags(category: Column) -> Column:
@@ -259,28 +259,3 @@ def category_tags(category: Column) -> Column:
         )
         result = F.when(cat == c, m) if result is None else result.when(cat == c, m)
     return result.otherwise(F.create_map().cast("map<string,string>"))
-
-
-def build_tags(
-    category: Column,
-    website: Column,
-    phone: Column,
-    addr_full: Column,
-) -> Column:
-    """The full F1-F10 chain producing `overture_tags`
-    map<string,string> (tag-toss of addr:country/addr:full/source per
-    match.py:392-393 is implicit — we never emit them)."""
-    entries = [
-        (F.lit("website"), clean_website(website)),
-        (F.lit("phone"), drop_toll_free(normalize_phone(phone))),
-        (F.lit("addr:housenumber"), parse_housenumber(addr_full)),
-        (F.lit("addr:street"), parse_street(addr_full)),
-    ]
-    kv = F.map_filter(
-        F.map_from_arrays(
-            F.array(*[e[0] for e in entries]),
-            F.array(*[e[1] for e in entries]),
-        ),
-        lambda k, v: v.isNotNull(),
-    )
-    return F.map_concat(category_tags(category), kv)

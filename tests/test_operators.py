@@ -328,7 +328,7 @@ class TestKnnHistogramCap:
         import numpy as np
 
         from overmatch_spark import expressions as X
-        from overmatch_spark.operators.knn import knn_fallback
+        from overmatch_spark.operators.knn import knn_fallback, release_caches
         from overmatch_spark.spec import knn_spec
         from pyspark.sql import functions as F
 
@@ -368,29 +368,39 @@ class TestKnnHistogramCap:
         ).distinct().count()
         assert occupied > 500
 
-        got = (
-            knn_fallback(a, b, empty_matches, max_hist_cells=500)
-            .toPandas()
-            .sort_values("osm_id")
-            .reset_index(drop=True)
-        )
+        caches: list = []
+        try:
+            got = (
+                knn_fallback(
+                    a, b, empty_matches, max_hist_cells=500, caches=caches
+                )
+                .toPandas()
+                .sort_values("osm_id")
+                .reset_index(drop=True)
+            )
+        finally:
+            release_caches(caches)
         want = knn_spec(a_pd, b_pd, pd.DataFrame({"osm_id": []}))
         assert got["osm_id"].tolist() == want["osm_id"].tolist()
         assert got["overture_id"].tolist() == want["overture_id"].tolist()
         assert np.allclose(got["distance_m"], want["distance_m"], atol=0, rtol=0)
 
-    def test_construction_launches_no_jobs(self, spark):
-        """knn_fallback must contain ZERO driver-side actions: the
-        coarse-res sketch it used to run at plan-construction time
-        (an approx_count_distinct .first() that forced a full
-        derivation of the build side before the timed job started)
-        is a regression this test makes impossible to reintroduce.
-        Inputs are poisoned so that evaluating ANY row raises —
-        construction succeeding proves no job touched the data."""
-        import pytest as _pytest
 
-        from overmatch_spark.operators import knn as knn_mod
-        from overmatch_spark.operators.knn import knn_fallback
+class TestLazyConstruction:
+    @pytest.mark.parametrize(
+        "op", ["conflate", "spatial_join", "nearest_join", "knn_fallback"]
+    )
+    def test_construction_launches_no_jobs(self, spark, op):
+        """Building a spatial operator must run ZERO driver-side
+        actions (e.g. knn's old coarse-res sketch, an
+        approx_count_distinct .first() that forced a full derivation
+        of the build side before the timed job started). Inputs are
+        poisoned so that evaluating ANY row raises — construction
+        succeeding proves no job touched the data."""
+        from overmatch_spark.operators.conflate import (
+            conflate, nearest_join, spatial_join,
+        )
+        from overmatch_spark.operators.knn import knn_fallback, release_caches
         from pyspark.sql import functions as F
 
         # row-dependent guard keeps Catalyst from constant-folding the
@@ -398,25 +408,41 @@ class TestKnnHistogramCap:
         poison = F.when(
             F.col("id") >= 0, F.raise_error("evaluated at construction")
         ).otherwise(F.lit(None)).cast("double")
+        named = [
+            F.lit("x").alias("name"),
+            F.lit(None).cast("string").alias("housenumber"),
+        ]
         a = spark.range(4).select(
             F.col("id").cast("string").alias("osm_id"),
-            F.lit("x").alias("name"),
+            *named,
             poison.alias("lon"),
             poison.alias("lat"),
         )
         b = spark.range(4).select(
             F.col("id").cast("string").alias("id"),
+            *named,
             poison.alias("lon"),
             poison.alias("lat"),
         )
         m = spark.createDataFrame([], "osm_id string")
 
-        caches = []
-        out = knn_fallback(a, b, m, caches=caches)  # must not raise
-        # the poison is real: materializing DOES evaluate it
-        with _pytest.raises(Exception, match="evaluated at construction"):
-            out.count()
-        knn_mod.release_caches(caches)
+        caches: list = []
+        build = {
+            "conflate": lambda: conflate(a, b),
+            "spatial_join": lambda: spatial_join(a, b, 100.0),
+            "nearest_join": lambda: nearest_join(a, b, caches=caches),
+            "knn_fallback": lambda: knn_fallback(a, b, m, caches=caches),
+        }[op]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
+        try:
+            before = set(jobs())
+            out = build()  # must not raise
+            assert set(jobs()) == before
+            # the poison is real: materializing DOES evaluate it
+            with pytest.raises(Exception, match="evaluated at construction"):
+                out.count()
+        finally:
+            release_caches(caches)
 
 
 class TestMatchIds:
@@ -991,7 +1017,7 @@ class TestKnnHintless:
     def test_probe_with_empty_neighborhood(self, spark):
         """A probe >100 km from every candidate has NO phase-1 hint —
         exercises the histogram-pruned phase 2b exclusively."""
-        from overmatch_spark.operators.knn import knn_fallback
+        from overmatch_spark.operators.knn import knn_fallback, release_caches
 
         a = spark.createDataFrame(
             pd.DataFrame(
@@ -1016,7 +1042,11 @@ class TestKnnHintless:
             )
         )
         empty_matches = spark.createDataFrame([], "osm_id string")
-        got = knn_fallback(a, b, empty_matches).toPandas()
+        caches: list = []
+        try:
+            got = knn_fallback(a, b, empty_matches, caches=caches).toPandas()
+        finally:
+            release_caches(caches)
         assert len(got) == 1
         # true nearest by planar 3857 distance is ov/y (-77.5, 38.7)
         assert got.iloc[0]["overture_id"] == "ov/y"
