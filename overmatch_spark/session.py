@@ -7,6 +7,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """`spark.driver.memory` for this host: SPARK_GRAFT_DRIVER_MEM if
+    set, else a quarter of physical RAM, at least 1g and at most 16g.
+    In local mode the driver heap also holds the executors, and the
+    rest of RAM is left to the Python workers and to the default
+    local dir, which is on RAM-backed /dev/shm."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    ram_gib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") / 2**30
+    return f"{max(1, min(16, int(ram_gib // 4)))}g"
+
+
 def get_spark(
     app_name: str = "overmatch-spark",
     cpus: int | None = None,
@@ -54,9 +67,7 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        )
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # shuffle/spill on tmpfs: this sandbox's virtual disk has

@@ -166,6 +166,99 @@ class TestCheckpointResume:
         assert job.run() == 0
 
 
+class TestCheckpointConcurrency:
+    """ConflationJob runs its buckets as concurrent Spark jobs; the
+    exactly-once protocol must hold with several buckets in flight."""
+
+    @pytest.mark.parametrize("width", [8, 2])
+    def test_uncommitted_buckets_rerun_after_failure(
+        self, spark, layers, golden, tmp_path, monkeypatch, width
+    ):
+        """Bucket 2 writes its matches, then raises before its
+        lineage commit (a crash between write and commit). At width 8
+        all 8 buckets start at once; at width 2 the failure also
+        cancels buckets that had not started."""
+        import os
+
+        from pyspark import SparkContext
+        from pyspark.sql import DataFrameWriter
+
+        from overmatch_spark.operators.checkpoint import ConflationJob
+
+        sa, sb = _spark_layers(spark, layers)
+        job = ConflationJob(spark, str(tmp_path / "job"), n_buckets=8)
+        job.prepare(sa, sb)
+
+        failed, fail = 2, True
+        real_parquet = DataFrameWriter.parquet
+        written = []
+
+        def parquet(writer, path, *args, **kwargs):
+            real_parquet(writer, path, *args, **kwargs)
+            if path.startswith(job.sink_dir):
+                k = int(path.rsplit("=", 1)[1])
+                written.append(k)
+                if fail and k == failed:
+                    raise RuntimeError("injected bucket failure")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        monkeypatch.setattr(SparkContext, "defaultParallelism", width)
+        with pytest.raises(RuntimeError, match="injected bucket failure"):
+            job.run()
+
+        marker = os.path.join(job.lineage_dir, f"bucket={failed}", "_DONE.json")
+        assert not os.path.exists(marker)
+        committed = job.completed_buckets()
+        assert failed not in committed
+        for row in job.lineage():
+            sink = os.path.join(job.sink_dir, f"bucket={row['bucket']}")
+            assert row["n_matches"] == spark.read.parquet(sink).count()
+
+        # a fresh job on the same dir processes exactly the rest
+        fail = False
+        written.clear()
+        resumed = ConflationJob(spark, job.work_dir, n_buckets=8)
+        uncommitted = set(range(8)) - committed
+        assert resumed.run() == len(uncommitted)
+        assert sorted(written) == sorted(uncommitted)
+        assert resumed.completed_buckets() == set(range(8))
+        got = (
+            resumed.result()
+            .toPandas()
+            .sort_values(["osm_id", "overture_id"])
+            .reset_index(drop=True)[
+                ["osm_id", "overture_id", "lon", "lat", "distance_m", "similarity"]
+            ]
+        )
+        exp = golden[
+            ["osm_id", "overture_id", "lon", "lat", "distance_m", "similarity"]
+        ]
+        pd.testing.assert_frame_equal(got, exp, check_exact=True)
+        assert sum(r["n_matches"] for r in resumed.lineage()) == len(exp)
+
+    def test_bucket_jobs_inherit_job_group(self, spark, layers, tmp_path):
+        """A job group set before run() covers every bucket job, so
+        cancelJobGroup can stop a resume in progress."""
+        from overmatch_spark.operators.checkpoint import ConflationJob
+
+        sa, sb = _spark_layers(spark, layers)
+        job = ConflationJob(spark, str(tmp_path / "job"), n_buckets=4)
+        job.prepare(sa, sb)
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        last = max(tracker.getJobIdsForGroup(None), default=-1)
+        sc.setJobGroup("ckpt", "checkpoint resume")
+        try:
+            assert job.run() == 4
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        # at least one write job per bucket, and no job outside the group
+        assert len(tracker.getJobIdsForGroup("ckpt")) >= 4
+        assert [j for j in tracker.getJobIdsForGroup(None) if j > last] == []
+
+
 class TestImages:
     def test_payload_invariants(self, spark):
         from overmatch_spark.fixtures import caption_for, make_images

@@ -1,0 +1,22 @@
+"""Session defaults that are derived from the host, checked without
+starting a JVM."""
+
+import pytest
+
+from overmatch_spark import session
+
+
+@pytest.mark.parametrize(
+    "ram_gib, expected", [(2, "1g"), (15, "3g"), (16, "4g"), (64, "16g"), (512, "16g")]
+)
+def test_driver_memory_is_a_quarter_of_ram(monkeypatch, ram_gib, expected):
+    page = 4096
+    sysconf = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": ram_gib * 2**30 // page}
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(session.os, "sysconf", sysconf.__getitem__)
+    assert session.driver_memory() == expected
+
+
+def test_driver_memory_override(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert session.driver_memory() == "6g"
