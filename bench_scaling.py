@@ -1,22 +1,23 @@
 """Scaling-efficiency evidence (BASELINE.json north_rule): the same
 conflation job at two parallelism levels — N vs 4N cores — on the same
 input, reporting throughput at both plus the scaling efficiency.
-Writes BENCH/BASELINE.md.
+Appends to BENCH/BASELINE.md.
 
 The sandbox has no real cluster (driver instruction: evidence the
 two-cluster-size criterion with two parallelism levels on one box).
-Default mode runs local[8] vs local[32]; `--cluster` runs
-local-cluster[2,4] vs local-cluster[8,4] (real separate executor
-JVMs, the package shipped via addPyFile — the --py-files path).
+Default mode runs local[2] vs local[8] (`--levels N,4N` overrides);
+`--cluster` runs local-cluster[N,4] vs local-cluster[4N,4] (real
+separate executor JVMs, the package shipped via addPyFile — the
+--py-files path).
 
 Methodology notes (hard-won; see BENCH/BASELINE.md):
-  - workload: 19.2M derived features (lineitem keys x32) so fixed
-    driver/stage costs are amortized
-  - Python worker pool warmed before timing; best of 2 runs
-  - spark.sql.autoBroadcastJoinThreshold=-1: derived layers carry
-    ~100x-understated size estimates, and the resulting AQE
-    mis-broadcast both OOMs the driver and anti-scales (single-
-    threaded broadcast build + bandwidth-bound hash probe)
+  - workload: demo.bench_layers with the lineitem keys exploded
+    SCALING_EXPLODE times (default 8: 4.8M derived features at
+    sf0.1) so fixed driver/stage costs are amortized
+  - session: get_spark with demo.BENCH_CONF (its comment says why
+    broadcast joins are off), so driver memory and the local dir
+    follow the host defaults in session.py
+  - Python worker pool warmed before timing; best of the runs
   - runs must be strictly serialized on this box
 """
 
@@ -34,7 +35,10 @@ import json, os, sys, time, zipfile
 sys.path.insert(0, os.environ["REPO"])
 sys.path.insert(0, os.path.join(os.environ["REPO"], "scripts"))
 from window_probe import alu_med
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+
+from overmatch_spark import demo
+from overmatch_spark.session import get_spark
 
 mode, level = sys.argv[1], int(sys.argv[2])
 if mode == "cluster":
@@ -50,19 +54,8 @@ else:
     cpus = level
     master = f"local[{cpus}]"
 
-spark = (SparkSession.builder.appName(f"scaling-{level}")
-    .master(master)
-    .config("spark.sql.shuffle.partitions", str(2 * cpus))
-    .config("spark.driver.memory", "16g")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.local.dir", "/dev/shm/spark-shuffle")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate())
+spark = get_spark(f"scaling-{level}", cpus=cpus, shuffle_partitions=2 * cpus,
+                  extra_conf={**demo.BENCH_CONF, "spark.master": master})
 spark.sparkContext.setLogLevel("ERROR")
 
 if mode == "cluster":
@@ -76,20 +69,12 @@ if mode == "cluster":
                     z.write(p, os.path.relpath(p, os.environ["REPO"]))
     spark.sparkContext.addPyFile(zpath)
 
-from overmatch_spark import demo
 from overmatch_spark.operators.conflate import conflate
 from overmatch_spark.udfs import indel_sim
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-explode = int(os.environ.get("SCALING_EXPLODE", "32"))
-li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-    (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("k0")
-).repartition(2 * cpus).select(
-    F.explode(F.array(*[F.col("k0") * explode + F.lit(i)
-                        for i in range(explode)])).alias("k")
-)
-a = demo.spark_layer_a(spark, sf_dir, None, "k", df=li)
-b = demo.spark_layer_b(spark, sf_dir, None, "k", df=li)
+a, b = demo.bench_layers(spark, sf_dir, cpus,
+                         mult=int(os.environ["SCALING_EXPLODE"]))
 warm = (spark.range(0, 20000 * cpus, 1, 2 * cpus)
         .withColumn("s", F.col("id").cast("string"))
         .withColumn("w", indel_sim(F.col("s"), F.col("s"))))
@@ -308,8 +293,8 @@ def main():
 Same conflation job (J1-J5 over {lo["features"]:,} lineitem-derived
 features), same input, N vs 4N parallelism. Warm worker pool, best
 clean-bracketed run per side (per-run ALU probes; see
-BENCH/PROTOCOL.md §3). autoBroadcastJoinThreshold=-1 (see module
-docstring of bench_scaling.py for why). Window gate: {gate}.
+BENCH/PROTOCOL.md §3). Session conf demo.BENCH_CONF (see
+overmatch_spark/demo.py for why). Window gate: {gate}.
 
 | level | cores | wall (s) | throughput (features/s) |
 |---|---|---|---|

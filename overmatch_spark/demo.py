@@ -1,5 +1,7 @@
 """Demo spatial layers derived from the driver's TPC-H-ish tables
-(TESTDATA.md), used by __spark_entry__.py.
+(TESTDATA.md), used by __spark_entry__.py, and the lineitem-keyed
+benchmark layers plus session conf the scale scripts share
+(bench_layers, BENCH_CONF).
 
 The SAME derivation is written twice — once as Catalyst expressions
 (Spark) and once as SQL text (the DuckDB oracle) — and is designed so
@@ -160,6 +162,51 @@ def spark_layer_b(
         hn.alias("housenumber"),
         X.inv_merc_lon(bx).alias("lon"),
         X.inv_merc_lat(by).alias("lat"),
+    )
+
+
+# Session conf for benchmarks over bench_layers (get_spark's
+# extra_conf).
+# advisoryPartitionSizeInBytes=8m: lowered so AQE keeps parallelism on
+# this (deliberately small) benchmark input; at production scale the
+# default 64m advisory is correct and this override is dropped.
+# autoBroadcastJoinThreshold=-1: the bench layers are DERIVED from a
+# tiny parquet file, so Catalyst's size estimates are off by ~100x and
+# AQE mis-broadcasts a multi-million-row build side (measured: driver
+# OOM at 4.8M rows, and heavy anti-scaling from single-threaded
+# broadcast build + bandwidth-bound hash probes). Explicit
+# broadcast()/hints are unaffected. On real tables with real stats the
+# default threshold is correct.
+BENCH_CONF = {
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
+def bench_layers(
+    spark: SparkSession, sf_dir: str, cpus: int, mult: int = 1,
+) -> tuple[DataFrame, DataFrame]:
+    """Benchmark conflation layers (a, b) keyed on lineitem: each
+    row's key k0 = l_orderkey*8 + l_linenumber becomes `mult` keys
+    k0*mult + rep (rep in 0..mult-1), so there are mult x lineitem
+    features a side, repartitioned to 2*cpus because the lineitem
+    parquet is a single split. Ids are unique per (l_orderkey,
+    l_linenumber); the test data repeats about a quarter of those
+    pairs, and the layers repeat those rows with them.
+
+    The layers are lazy and unpersisted (the read names its schema, so
+    not even schema inference runs a job); a caller timing against
+    materialized input persists them."""
+    k0 = F.col("l_orderkey") * 8 + F.col("l_linenumber")
+    keys = (
+        spark.read.schema("l_orderkey long, l_linenumber int")
+        .parquet(f"{sf_dir}/lineitem.parquet")
+        .select(F.explode(F.sequence(k0 * mult, k0 * mult + (mult - 1))).alias("k"))
+        .repartition(2 * cpus)
+    )
+    return (
+        spark_layer_a(spark, sf_dir, None, "k", df=keys),
+        spark_layer_b(spark, sf_dir, None, "k", df=keys),
     )
 
 

@@ -30,7 +30,6 @@ ORIGIN_M = math.pi * R_MERC
 # SQL text twins (for DuckDB oracles) — kept adjacent to the Column
 # builders so the two can never drift apart silently.
 SQL_R = repr(R_MERC)
-SQL_ORIGIN = "(pi() * 6378137.0)"
 
 
 def merc_x(lon: Column) -> Column:

@@ -154,17 +154,6 @@ def video_header(buf: bytes):
     )
 
 
-def video_frame_bytes(buf: bytes, idx: int) -> bytes:
-    """Seek to frame idx WITHOUT touching other frames (the constant-
-    time offset math a real demuxer index provides)."""
-    w, h, n, _fps = video_header(buf)
-    if not 0 <= idx < n:
-        raise IndexError(idx)
-    fsz = w * h * 3
-    start = _V_HEAD + idx * fsz
-    return bytes(buf[start:start + fsz])
-
-
 class VideoReader:
     """Per-video demux handle: the container table is parsed ONCE,
     then every frame read is an O(1) byte-range slice (+ jpeg decode

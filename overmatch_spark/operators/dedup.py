@@ -95,8 +95,6 @@ P_MINHASH = 1_073_741_789
 def _minhash_perm_consts(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a_j, b_j) permutation constants — md5-derived
     plan literals, identical on any engine/host (a_j != 0)."""
-    import hashlib
-
     out = []
     for j in range(num_hashes):
         a = (

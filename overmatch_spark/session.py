@@ -50,6 +50,16 @@ def get_spark(
         # the knob is scale-safe (a partition bigger than the bound
         # simply stays sort-merge). Measured: removes both sorts from
         # every hot join at sf0.1 with identical results.
+        # Memory assumption: a shuffled-hash build side is held in
+        # execution memory and does not spill (a build that cannot get
+        # its memory fails the task), so every concurrently running
+        # task may need up to ~128 MB of it (more once decompressed):
+        # cores x 128 MB must fit in execution memory, about
+        # (heap - 300 MB) x spark.memory.fraction (0.6). In local mode
+        # the heap is driver_memory(): 3g on a 4-core, 15 GB host
+        # gives ~1.6 GB for 4 x 128 MB; 32 cores need a ~7g heap.
+        # On a cluster the same holds per executor (its cores vs
+        # spark.executor.memory).
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             "128m",

@@ -34,28 +34,13 @@ def main():
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     probe_before = probe(mb=32)
 
-    spark = get_spark(
-        "overmatch-scale32",
-        cpus=cpus,
-        extra_conf={
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        },
-    )
+    spark = get_spark("overmatch-scale32", cpus=cpus, extra_conf=demo.BENCH_CONF)
     spark.sparkContext.setLogLevel("ERROR")
-    mult = 32
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .select((F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("k0"))
-        .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))
-        .select((F.col("k0") * F.lit(mult) + F.col("rep")).alias("k"))
-        .repartition(2 * cpus)
-    )
     # persisted input layers — same input-materialization rationale as
     # bench.py's headline: timed runs scan materialized input bytes,
     # not the synthetic 20-expression derivation
-    a = demo.spark_layer_a(spark, sf_dir, None, "k", df=li).persist()
-    b = demo.spark_layer_b(spark, sf_dir, None, "k", df=li).persist()
+    a, b = demo.bench_layers(spark, sf_dir, cpus, mult=32)
+    a, b = a.persist(), b.persist()
     warm = (
         spark.range(0, 20_000 * cpus, 1, 2 * cpus)
         .withColumn("s", F.col("id").cast("string"))

@@ -11,6 +11,7 @@ measures the physical effect.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -61,21 +62,15 @@ def run(conflate_kwargs, a, b) -> float:
 
 
 def main():
+    from overmatch_spark import demo
     from overmatch_spark.operators.conflate import detect_hot_cells
     from overmatch_spark.session import get_spark
     from overmatch_spark.udfs import indel_sim
 
-    cpus = 32
-    spark = get_spark(
-        "skew-bench",
-        cpus=cpus,
-        extra_conf={
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        },
-    )
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("skew-bench", cpus=cpus, extra_conf=demo.BENCH_CONF)
     spark.sparkContext.setLogLevel("ERROR")
-    sf_dir = "/root/testdata/sf0.1"
     a, b = skewed_layers(spark, sf_dir, cpus)
     warm = (
         spark.range(0, 20000 * cpus, 1, 2 * cpus)
@@ -106,7 +101,7 @@ def main():
             "150k orders-derived features, ~2.7% of BOTH layers piled "
             "into one ~300 m cell (~4k x 4k = 16M candidate pairs in a "
             "single join key). Same output all three ways "
-            "(property-tested); wall times, local[32], best of 2:\n\n"
+            f"(property-tested); wall times, local[{cpus}], best of 2:\n\n"
             "| strategy | wall (s) |\n|---|---|\n"
             + "".join(f"| {k} | {v} |\n" for k, v in results.items())
             + f"\nhot cells detected by the pre-pass: {len(hot)}\n"

@@ -1,13 +1,19 @@
-"""Host-window quality probe (run BEFORE any scaling measurement).
+"""Host-window quality probe for the wall-time receipts.
 
 This shared box has noisy-neighbor windows: /tmp (virtual disk) fsync
 throughput swings 9 -> 570 MB/s and the memory-stream ceiling moves
 with it (see BENCH/BASELINE.md round-2 controls). Timing runs taken
 in a bad window under-measure scaling through no fault of the engine.
 
-Prints one JSON line: fsync MB/s on /tmp, single-core ALU ops/s, and
-an 8-process memory-stream efficiency sample. Gate: good window ~=
-fsync > 150 MB/s AND stream_eff_2to8 > 0.70.
+Imported by bench.py, bench_scaling.py, scripts/bench_scale32.py and
+scripts/bench_video.py, which gate or annotate their timed runs with
+`probe()` / `alu_med()`. The repo benchmark (perfbench/) does not use
+it: it subtracts the hypervisor's steal share instead.
+
+Run directly (`python scripts/window_probe.py`), it prints one JSON
+line: fsync MB/s on /tmp, single-core ALU ops/s, and an 8-process
+memory-stream efficiency sample. Gate: good window ~= fsync > 150 MB/s
+AND stream_eff_2to8 > 0.70.
 """
 from __future__ import annotations
 
@@ -90,7 +96,8 @@ def stream_eff(n_lo: int = 2, n_hi: int = 8) -> float:
 def probe(mb: int = 32) -> dict:
     """The light alu+fsync probe every bench artifact embeds — ONE
     definition so probe_before/probe_after fields stay comparable
-    across bench.py, bench_scaling.py and bench_scale32.py rows.
+    across bench.py, bench_scaling.py, bench_scale32.py and
+    bench_video.py rows.
     alu_mops is a median-of-3 as of r5-late (see alu_med): single
     samples are bimodal-flicker-prone on this host."""
     return {"alu_mops": alu_med(), "tmp_fsync_mbps": fsync_mbps(mb=mb)}

@@ -1,0 +1,94 @@
+"""The out-of-suite entry points (scripts/*.py, bench.py,
+bench_scaling.py and the worker program bench_scaling runs) stay
+runnable: each compiles, and every name it imports from this repo
+still exists. Plus the shared benchmark layer setup,
+demo.bench_layers: lazy, m x lineitem rows a side, ids unique per
+lineitem key."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import importlib.util
+import types
+from pathlib import Path
+
+import pytest
+
+REPO = Path(__file__).resolve().parent.parent
+SCRIPTS = REPO / "scripts"
+SF = "/root/testdata/sf0.001"
+
+
+def _sources():
+    import bench_scaling
+
+    for p in [*sorted(SCRIPTS.glob("*.py")), REPO / "bench.py",
+              REPO / "bench_scaling.py"]:
+        yield pytest.param(p.read_text(), str(p), id=p.name)
+    yield pytest.param(bench_scaling.WORKER, "<WORKER>", id="bench_scaling.WORKER")
+
+
+def _local(module: str) -> bool:
+    top = module.split(".")[0]
+    return any((d / top).is_dir() or (d / f"{top}.py").is_file()
+               for d in (REPO, SCRIPTS))
+
+
+@pytest.mark.parametrize("src,name", list(_sources()))
+def test_entry_point_compiles_and_its_repo_imports_resolve(
+    src, name, monkeypatch
+):
+    tree = ast.parse(src, name)
+    compile(tree, name, "exec")
+    monkeypatch.syspath_prepend(str(SCRIPTS))
+    modules = {}  # local name -> imported repo module
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and _local(node.module or ""):
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                if not hasattr(mod, alias.name):  # a submodule, or gone
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                value = getattr(mod, alias.name)
+                if isinstance(value, types.ModuleType):
+                    modules[alias.asname or alias.name] = value
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if _local(alias.name):
+                    assert importlib.util.find_spec(alias.name), (
+                        f"{name}: module {alias.name} is gone"
+                    )
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
+                and node.value.id in modules):
+            assert hasattr(modules[node.value.id], node.attr), (
+                f"{name}: {node.value.id}.{node.attr} is gone"
+            )
+
+
+@pytest.mark.parametrize("mult", [1, 3])
+def test_bench_layers(spark, mult):
+    """Building the layers runs no job; each layer has mult rows per
+    lineitem row, with ids unique per lineitem key (the test data
+    repeats some (l_orderkey, l_linenumber) pairs, so ids are counted
+    against distinct keys); at mult=1 the ids carry the keys."""
+    from pyspark.sql import functions as F
+
+    from overmatch_spark import demo
+
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
+    before = set(jobs())
+    a, b = demo.bench_layers(spark, SF, 2, mult=mult)
+    assert set(jobs()) == before
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
+        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("k")
+    )
+    n, n_keys = li.agg(F.count("*"), F.countDistinct("k")).first()
+    for layer, id_col in ((a, "osm_id"), (b, "id")):
+        counts = layer.agg(F.count("*"), F.countDistinct(id_col)).first()
+        assert tuple(counts) == (mult * n, mult * n_keys)
+
+    if mult == 1:
+        got = a.select(F.split("osm_id", "/").getItem(1).cast("long").alias("k"))
+        assert sorted(got.collect()) == sorted(li.collect())
