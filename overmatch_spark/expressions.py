@@ -178,8 +178,8 @@ def cover_cells(x: Column, y: Column, res: int | Column,
 
 def tile_fx(lon: Column, z: int) -> Column:
     """Fractional slippy x (tile + intra-tile position) — the single
-    definition both tile_x and the raster pixel math derive from, so
-    raster pixels align bit-for-bit with vector tile assignment."""
+    definition both tile_x and the in-tile pixel math
+    (tiles._tile_pixels, vector and raster) derive from."""
     n = float(1 << z)
     return (lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -264,10 +264,17 @@ def dedup_corpus(
         jaccard_threshold=jaccard_threshold, shingle_k=shingle_k,
         caches=caches,
     )
-    if score_col is not None:
-        nodes = df.select(F.col(id_col).alias("doc_id"), F.col(score_col))
-    else:
-        nodes = df.select(F.col(id_col).alias("doc_id"))
+    return _survivors(df, pairs, id_col, score_col)
+
+
+def _survivors(
+    df: DataFrame, pairs: DataFrame, id_col: str, score_col: str | None
+) -> DataFrame:
+    """The survivor step of every one-call dedup: `df`'s ids (plus the
+    optional score) as nodes -> dedup_clusters over `pairs` -> the
+    rows of `df` that survive, by a left-semi join on ids only."""
+    score = [] if score_col is None else [F.col(score_col)]
+    nodes = df.select(F.col(id_col).alias("doc_id"), *score)
     clusters = dedup_clusters(pairs, nodes=nodes, score_col=score_col)
     survivors = clusters.filter(F.col("survivor")).select(
         F.col("doc_id").alias(id_col)
@@ -606,6 +613,9 @@ def dedup_clusters(
         jump = lab.select(
             F.col("node").alias("label"), F.col("label").alias("jlabel")
         )
+        # convergence is observed on the round's own checkpoint action
+        # (rows whose label moved), not counted by a second job
+        moved = Observation()
         new = (
             lab.join(nb.select(F.col("src").alias("node"), "nmin"), "node", "left")
             .join(jump, "label", "left")
@@ -615,19 +625,19 @@ def dedup_clusters(
                     F.col("label"),
                     F.coalesce(F.col("nmin"), F.col("label")),
                     F.coalesce(F.col("jlabel"), F.col("label")),
-                ).alias("label"),
+                ).alias("new_label"),
+                F.col("label").alias("old_label"),
             )
+            .observe(
+                moved,
+                F.count_if(F.col("new_label") != F.col("old_label")).alias("n"),
+            )
+            .select("node", F.col("new_label").alias("label"))
             .localCheckpoint()
-        )
-        changed = (
-            new.join(lab.withColumnRenamed("label", "old"), "node")
-            .filter(F.col("label") != F.col("old"))
-            .limit(1)
-            .count()
         )
         lab.unpersist()  # release the superseded round's blocks
         lab = new
-        if changed == 0:
+        if not moved.get["n"]:
             break
     sym.unpersist()
     # NB: the FINAL lab's checkpointed blocks back the returned

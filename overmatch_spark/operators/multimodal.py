@@ -186,23 +186,13 @@ def dedup_images_by_content(
     ride a shuffle, the non-negotiable at 10^12 images."""
     from pyspark.sql import functions as F
 
-    from overmatch_spark.operators.dedup import dedup_clusters, hamming_pairs
+    from overmatch_spark.operators.dedup import _survivors, hamming_pairs
 
     sig = compute_phash(images).select(
         F.col("image_id").alias("doc_id"), F.col("phash_dct").alias("sig")
     )
     pairs = hamming_pairs(sig, k=k, bits=64)
-    if score_col is not None:
-        nodes = images.select(
-            F.col(id_col).alias("doc_id"), F.col(score_col)
-        )
-    else:
-        nodes = images.select(F.col(id_col).alias("doc_id"))
-    clusters = dedup_clusters(pairs, nodes=nodes, score_col=score_col)
-    survivors = clusters.filter(F.col("survivor")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return images.join(survivors, id_col, "left_semi")
+    return _survivors(images, pairs, id_col, score_col)
 
 
 def resize_nearest(images: DataFrame, out_w: int, out_h: int) -> DataFrame:

@@ -8,8 +8,10 @@ by `run_pmtiles.py:49-51` and published by
 `api/upload_pmtiles.py:176-254`).  This module reimplements that
 artifact step natively: per-tile Mapbox Vector Tile (MVT 2.1)
 encoding runs DISTRIBUTED over the existing tile pyramid
-(`tiles.tile_table` output) via one `mapInPandas` pass, and the
-single-file PMTiles v3 assembly streams tiles in tile-id order
+(`tiles.tile_table` output) via one `mapInPandas` pass — each
+feature's pixel in its tile comes from the tile assignment
+(`tiles.assign_tiles`, Catalyst), so the encoder does no tile math —
+and the single-file PMTiles v3 assembly streams tiles in tile-id order
 through the driver with `toLocalIterator` — the driver holds one
 tile blob plus the (16 B/tile) directory at a time, never the whole
 pyramid.  Only the S3 upload itself remains out of scope (network).
@@ -53,6 +55,7 @@ from pyspark.sql.types import (
 )
 
 MVT_EXTENT = 4096
+MVT_LAYER = "matches"
 
 # ---------------------------------------------------------------------------
 # protobuf wire primitives (public protobuf encoding spec)
@@ -119,15 +122,11 @@ def _mvt_value(v) -> bytes:
     return _tag(1, 2) + _varint(len(s)) + s
 
 
-def mvt_encode_layer(
-    name: str,
-    feats: list[dict],
-    extent: int = MVT_EXTENT,
-) -> bytes:
+def mvt_encode_layer(name: str, feats: list[dict]) -> bytes:
     """One MVT Tile containing one point layer.
 
     ``feats``: dicts with ``id`` (uint64), ``px``/``py`` (tile-local
-    integer coords in [0, extent)), and ``props`` (str -> scalar).
+    integer coords in [0, MVT_EXTENT)), and ``props`` (str -> scalar).
     Keys/values are interned into the layer tables in first-seen
     order, so byte output is deterministic for a given feature order.
     """
@@ -174,7 +173,7 @@ def mvt_encode_layer(
         layer += _tag(3, 2) + _varint(len(kb)) + kb
     for vb in vals:
         layer += _len_delim(4, vb)
-    layer += _tag(5, 0) + _varint(extent)
+    layer += _tag(5, 0) + _varint(MVT_EXTENT)
     return _len_delim(3, bytes(layer))
 
 
@@ -418,26 +417,14 @@ _ENC_SCHEMA = StructType(
 )
 
 
-def _tile_px(lon: float, z: int, x: int, extent: int) -> int:
-    fx = (lon + 180.0) / 360.0 * (1 << z)
-    return max(0, min(extent - 1, int((fx - x) * extent)))
-
-
-def _tile_py(lat: float, z: int, y: int, extent: int) -> int:
-    rad = math.radians(lat)
-    fy = (1.0 - math.asinh(math.tan(rad)) / math.pi) / 2.0 * (1 << z)
-    return max(0, min(extent - 1, int((fy - y) * extent)))
-
-
-def mvt_tiles(
-    tile_tbl: DataFrame, layer: str = "matches", extent: int = MVT_EXTENT
-) -> DataFrame:
+def mvt_tiles(tile_tbl: DataFrame) -> DataFrame:
     """K3 (artifact half): tile pyramid table -> one gzip'd MVT blob
     per tile, encoded where the tile rows live (mapInPandas; the
     driver never sees feature rows).  Input is ``tiles.tile_table``
-    output: (z, x, y, features array<struct>, n_features) with
-    features already density-dropped and deterministically sorted, so
-    blob bytes are reproducible."""
+    output: (z, x, y, features array<struct>) with features already
+    density-dropped, deterministically sorted and carrying their
+    in-tile px/py from ``tiles.assign_tiles``, so blob bytes are
+    reproducible and no tile math runs here."""
 
     def encode(batches) -> Iterator:
         import pandas as pd
@@ -452,8 +439,8 @@ def mvt_tiles(
                     feats.append(
                         {
                             "id": int(d["match_id"]),
-                            "px": _tile_px(float(d["lon"]), z, x, extent),
-                            "py": _tile_py(float(d["lat"]), z, y, extent),
+                            "px": int(d["px"]),
+                            "py": int(d["py"]),
                             "props": {
                                 "osm_id": d["osm_id"],
                                 "overture_id": d["overture_id"],
@@ -462,7 +449,7 @@ def mvt_tiles(
                             },
                         }
                     )
-                blob = _gz(mvt_encode_layer(layer, feats, extent))
+                blob = _gz(mvt_encode_layer(MVT_LAYER, feats))
                 out.append((hilbert_tid(z, x, y), z, x, y, blob))
             yield pd.DataFrame(
                 out, columns=["tileid", "z", "x", "y", "data"]
@@ -476,22 +463,17 @@ def mvt_tiles(
 # ---------------------------------------------------------------------------
 
 
-def write_pmtiles(
-    tile_tbl: DataFrame,
-    path: str,
-    layer: str = "matches",
-    extent: int = MVT_EXTENT,
-) -> dict:
+def write_pmtiles(tile_tbl: DataFrame, path: str) -> dict:
     """Assemble a vector (MVT) PMTiles v3 archive from a tile
     pyramid table.  See ``_assemble_archive`` for the streaming
     bound."""
-    enc = mvt_tiles(tile_tbl, layer=layer, extent=extent)
+    enc = mvt_tiles(tile_tbl)
     meta = {
         "name": "overmatch_spark matches",
         "format": "pbf",
         "vector_layers": [
             {
-                "id": layer,
+                "id": MVT_LAYER,
                 "fields": {
                     "osm_id": "Number",
                     "overture_id": "String",
@@ -648,7 +630,6 @@ def matches_to_pmtiles(
     zooms: tuple | None = None,
     max_per_tile: int = 100_000,
     num_partitions: int | None = None,
-    layer: str = "matches",
 ) -> dict:
     """One-call glue: conflation matches (osm_id, overture_id, lon,
     lat, ...) -> stable ids -> multi-zoom assignment -> density drop
@@ -672,7 +653,7 @@ def matches_to_pmtiles(
     pyr = tile_table(
         kept, ids.select("match_id", "osm_id", "overture_id", "lon", "lat")
     )
-    return write_pmtiles(pyr, path, layer=layer)
+    return write_pmtiles(pyr, path)
 
 
 class PMTilesReader:

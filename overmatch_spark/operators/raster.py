@@ -3,11 +3,14 @@
 
 The vector half (operators/pmtiles.py) archives per-tile MVT feature
 geometry; this module rasterizes the SAME point layer into per-tile
-density images: each (z, x, y) tile becomes a size x size 8-bit
-grayscale PNG whose pixel value is the (clamped) point count falling
-in that pixel.  Rasterization is distributed — `applyInPandas` over
-the tile key, one `numpy.bincount` per tile — and the archive is the
-same streaming PMTiles v3 assembly with `tile_type=png`,
+density images: each (z, x, y) tile becomes a 256 x 256 8-bit
+grayscale PNG whose pixel value is the point count falling in that
+pixel, saturated at 255.  Tile and pixel come from the one tile
+assignment (`tiles._tile_pixels`, at 256 px instead of the MVT
+extent), so raster tiles align with vector tiles by construction.
+Rasterization is distributed — `applyInPandas` over the tile key,
+one `numpy.bincount` per tile — and the archive is the same
+streaming PMTiles v3 assembly with `tile_type=png`,
 `tile_compression=none` (PNG is already DEFLATE-compressed; spec
 forbids double-tagging).
 
@@ -24,81 +27,32 @@ tiles above the density cap stop being renderable.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
-from overmatch_spark.operators.pmtiles import _assemble_archive, hilbert_tid
+from overmatch_spark.operators.pmtiles import (
+    _ENC_SCHEMA,
+    _assemble_archive,
+    hilbert_tid,
+)
+from overmatch_spark.operators.tiles import _tile_pixels
 
 _PNG = 2  # PMTiles v3 tile-type enum
 _NONE = 1  # PMTiles v3 compression enum: none
-
-_RASTER_SCHEMA = StructType(
-    [
-        StructField("tileid", LongType()),
-        StructField("z", IntegerType()),
-        StructField("x", IntegerType()),
-        StructField("y", IntegerType()),
-        StructField("data", BinaryType()),
-    ]
-)
+_SIZE = 256  # tile edge in pixels
 
 
-def raster_tiles(
-    points: DataFrame,
-    zooms=(10, 12),
-    size: int = 256,
-    clamp: int = 255,
-) -> DataFrame:
+def raster_tiles(points: DataFrame, zooms=(10, 12)) -> DataFrame:
     """Point layer (lon, lat) -> one grayscale density PNG per
-    occupied tile at each zoom.  Pixel value = min(count, clamp).
+    occupied tile at each zoom.  Pixel value = min(count, 255).
 
-    Distributed shape: ONE scan computes an array of per-zoom
-    (z, x, y, pix) structs per point and explodes it (pure Catalyst —
-    floor math, no UDF; a union-per-zoom would re-scan the source
-    len(zooms) times), then one hash exchange on the tile key feeds
-    `applyInPandas`, where a single `bincount` per tile builds the
-    size^2 histogram and the stdlib PNG encoder emits bytes.  Pixels
-    never leave their tile's partition; the driver sees nothing.
-
-    Tile/pixel math derives from expressions.tile_x/tile_y/tile_fx/
-    tile_fy — the SAME definitions as the vector assignment, so
-    raster tiles align bit-for-bit with vector tiles by construction."""
-    if not 1 <= clamp <= 255:
-        raise ValueError(
-            f"clamp must be 1..255 for 8-bit gray PNG (got {clamp}); "
-            "values above 255 would wrap, not saturate"
-        )
-    from overmatch_spark.expressions import tile_fx, tile_fy, tile_x, tile_y
-
-    per_zoom = []
-    for z in zooms:
-        lon, lat = F.col("lon"), F.col("lat")
-        fx, fy = tile_fx(lon, z), tile_fy(lat, z)
-        x, y = tile_x(lon, z), tile_y(lat, z)
-        px = F.least(
-            F.lit(size - 1),
-            F.greatest(F.lit(0), F.floor((fx - x) * size)),
-        ).cast("int")
-        py = F.least(
-            F.lit(size - 1),
-            F.greatest(F.lit(0), F.floor((fy - y) * size)),
-        ).cast("int")
-        per_zoom.append(
-            F.struct(
-                F.lit(z).alias("z"),
-                x.alias("x"),
-                y.alias("y"),
-                (px + py * size).alias("pix"),
-            )
-        )
-    pts = points.select(
-        F.explode(F.array(*per_zoom)).alias("t")
-    ).select("t.z", "t.x", "t.y", "t.pix")
+    Distributed shape: ONE scan assigns every point its per-zoom tile
+    and pixel (`tiles._tile_pixels`, pure Catalyst), then one hash
+    exchange on the tile key feeds `applyInPandas`, where a single
+    `bincount` per tile builds the 256^2 histogram and the stdlib PNG
+    encoder emits bytes.  Pixels never leave their tile's partition;
+    the driver sees nothing."""
+    pts = _tile_pixels(points, zooms, _SIZE).select(
+        "z", "x", "y", (F.col("px") + F.col("py") * _SIZE).alias("pix")
+    )
 
     def rasterize(pdf):
         import numpy as np
@@ -110,35 +64,29 @@ def raster_tiles(
         x = int(pdf["x"].iloc[0])
         y = int(pdf["y"].iloc[0])
         counts = np.bincount(
-            pdf["pix"].to_numpy(), minlength=size * size
-        ).reshape(size, size)
-        img = np.minimum(counts, clamp).astype(np.uint8)
+            pdf["pix"].to_numpy(), minlength=_SIZE * _SIZE
+        ).reshape(_SIZE, _SIZE)
+        img = np.minimum(counts, 255).astype(np.uint8)
         return pd.DataFrame(
             [(hilbert_tid(z, x, y), z, x, y, png_encode_gray(img))],
             columns=["tileid", "z", "x", "y", "data"],
         )
 
     return pts.groupBy("z", "x", "y").applyInPandas(
-        rasterize, schema=_RASTER_SCHEMA
+        rasterize, schema=_ENC_SCHEMA
     )
 
 
-def write_raster_pmtiles(
-    points: DataFrame,
-    path: str,
-    zooms=(10, 12),
-    size: int = 256,
-    clamp: int = 255,
-) -> dict:
+def write_raster_pmtiles(points: DataFrame, path: str, zooms=(10, 12)) -> dict:
     """Rasterize and archive in one call: PMTiles v3 with
     tile_type=png, tile_compression=none."""
-    enc = raster_tiles(points, zooms=zooms, size=size, clamp=clamp)
     meta = {
         "name": "overmatch_spark density raster",
         "format": "png",
-        "pixel_meaning": f"point count clamped at {clamp}",
-        "tile_size": size,
+        "pixel_meaning": "point count clamped at 255",
+        "tile_size": _SIZE,
     }
     return _assemble_archive(
-        enc, path, tile_type=_PNG, tile_compression=_NONE, metadata=meta
+        raster_tiles(points, zooms=zooms), path,
+        tile_type=_PNG, tile_compression=_NONE, metadata=meta,
     )

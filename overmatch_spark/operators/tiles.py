@@ -2,10 +2,13 @@
 
 The reference shells out to tippecanoe
 (/root/reference/scripts/build_pmtiles.py:186-198); here tile
-assignment is pure Catalyst math (expressions.tile_x/tile_y), the
-density drop is a deterministic per-tile top-k, and the tile table is
-an ordinary DataFrame ready for any sink. Distribution: one shuffle
-on (z, x, y) — exactly the partitioning a tile server wants.
+assignment is pure Catalyst math: ONE per-zoom step (`_tile_pixels`)
+gives each point its zoom, slippy tile and in-tile pixel in a single
+scan, for vector tiles (MVT extent 4096, `assign_tiles`) and raster
+tiles (256 px, operators/raster.py) alike. The density drop is a
+deterministic per-tile top-k, and the tile table is an ordinary
+DataFrame ready for any sink. Distribution: one shuffle on (z, x, y)
+— exactly the partitioning a tile server wants.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from overmatch_spark import expressions as X
+from overmatch_spark.operators.pmtiles import MVT_EXTENT
 
 
 def assign_match_ids(matches: DataFrame,
@@ -83,21 +87,41 @@ def assign_match_ids(matches: DataFrame,
     return out
 
 
-def assign_tiles(matches: DataFrame, zooms=(10, 12, 14)) -> DataFrame:
-    """F24: one row per (feature, zoom) with slippy z/x/y."""
-    per_zoom = [
-        matches.select(
-            "match_id",
-            F.lit(z).alias("z"),
-            X.tile_x(F.col("lon"), z).alias("x"),
-            X.tile_y(F.col("lat"), z).alias("y"),
+def _tile_pixels(points: DataFrame, zooms, size: int, *keep) -> DataFrame:
+    """The one tile assignment: per point, ONE scan explodes an array
+    of per-zoom (z, x, y, px, py) structs — slippy tile x/y and the
+    in-tile pixel floor((tile_fx - x) * size), clamped to
+    [0, size - 1] (a union per zoom would re-scan the source
+    len(zooms) times). Pure Catalyst, no UDF; `keep` columns ride
+    along."""
+    lon, lat = F.col("lon"), F.col("lat")
+
+    def pixel(frac, tile):
+        return F.least(
+            F.lit(size - 1), F.greatest(F.lit(0), F.floor((frac - tile) * size))
+        ).cast("int")
+
+    per_zoom = []
+    for z in zooms:
+        x, y = X.tile_x(lon, z), X.tile_y(lat, z)
+        per_zoom.append(
+            F.struct(
+                F.lit(z).alias("z"),
+                x.alias("x"),
+                y.alias("y"),
+                pixel(X.tile_fx(lon, z), x).alias("px"),
+                pixel(X.tile_fy(lat, z), y).alias("py"),
+            )
         )
-        for z in zooms
-    ]
-    out = per_zoom[0]
-    for df in per_zoom[1:]:
-        out = out.unionByName(df)
-    return out
+    return points.select(
+        *keep, F.explode(F.array(*per_zoom)).alias("t")
+    ).select(*keep, "t.*")
+
+
+def assign_tiles(matches: DataFrame, zooms=(10, 12, 14)) -> DataFrame:
+    """F24: one row per (feature, zoom) with slippy z/x/y and the
+    feature's MVT pixel px/py inside that tile."""
+    return _tile_pixels(matches, zooms, MVT_EXTENT, "match_id")
 
 
 def density_drop(tiles: DataFrame, max_per_tile: int) -> DataFrame:
@@ -128,7 +152,8 @@ def auto_max_zoom(matches: DataFrame, counts=(1000, 100_000, 10_000_000)) -> int
 
 def tile_table(tiles_kept: DataFrame, features: DataFrame) -> DataFrame:
     """K3: the tile pyramid as a table — groupBy (z,x,y) collecting
-    feature structs, ordered deterministically within each tile."""
+    feature structs (with their in-tile px/py), ordered by match_id
+    within each tile."""
     joined = tiles_kept.filter(F.col("kept")).join(features, "match_id")
     return joined.groupBy("z", "x", "y").agg(
         F.sort_array(
@@ -139,8 +164,9 @@ def tile_table(tiles_kept: DataFrame, features: DataFrame) -> DataFrame:
                     F.col("overture_id"),
                     F.col("lon"),
                     F.col("lat"),
+                    F.col("px"),
+                    F.col("py"),
                 )
             )
-        ).alias("features"),
-        F.count("*").cast("long").alias("n_features"),
+        ).alias("features")
     )

@@ -39,9 +39,6 @@ def get_spark(
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE rewrite sort-merge joins to shuffled-hash at runtime
         # when every build-side partition is small (guide §3.1): the
         # engine's equi-joins (cell joins, id anti-joins, band

@@ -159,7 +159,20 @@ def main():
     )
     sections.append(("Raster tile pyramid (density PNGs)", raster_plan, None))
 
-    # 10. bucketed payload re-attach (VERDICT r5 #2): when the payload
+    # 10. vector tile assignment: every zoom's tile and pixel come
+    # from ONE scan of the features (one Generate), not a union of
+    # one scan per zoom
+    from overmatch_spark.operators.tiles import assign_tiles
+
+    tiles_plan = grab_plan(
+        assign_tiles(
+            b.select(F.col("id").alias("match_id"), "lon", "lat"),
+            zooms=(10, 12),
+        )
+    )
+    sections.append(("Vector tile assignment, two zooms", tiles_plan, None))
+
+    # 11. bucketed payload re-attach (VERDICT r5 #2): when the payload
     # table lives bucketed on its id (io.write_bucketed), the
     # attach_payload join must read the bucketed scan with NO Exchange
     # above it — only the (narrow) match side shuffles, so payload
@@ -283,6 +296,13 @@ def main():
         and "hashpartitioning(z#" in raster_plan
         and len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", raster_plan)) == 1
         and "CartesianProduct" not in raster_plan,
+    )
+
+    check(
+        "tile assignment over two zooms: ONE scan, ONE Generate, no Union",
+        len(re.findall(r"\(\d+\) Scan ", tiles_plan)) == 1
+        and len(re.findall(r"\(\d+\) Generate", tiles_plan)) == 1
+        and "Union" not in tiles_plan,
     )
 
     ap_exchanges = re.findall(

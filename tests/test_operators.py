@@ -537,6 +537,53 @@ class TestLazyConstruction:
         finally:
             release_caches(caches)
 
+    @pytest.mark.parametrize(
+        "op",
+        ["assign_tiles", "density_drop", "tile_table", "mvt_tiles",
+         "raster_tiles"],
+    )
+    def test_tile_construction_launches_no_jobs(self, spark, op):
+        """The tile operators are lazy too: building any stage of the
+        vector pyramid (or the raster one) over poisoned lon/lat runs
+        no Spark job."""
+        from pyspark.sql import functions as F
+
+        from overmatch_spark.operators.pmtiles import mvt_tiles
+        from overmatch_spark.operators.raster import raster_tiles
+        from overmatch_spark.operators.tiles import (
+            assign_tiles, density_drop, tile_table,
+        )
+
+        poison = F.when(
+            F.col("id") >= 0, F.raise_error("evaluated at construction")
+        ).otherwise(F.lit(None)).cast("double")
+        m = spark.range(4).select(
+            F.col("id").alias("match_id"),
+            F.col("id").alias("osm_id"),
+            F.col("id").cast("string").alias("overture_id"),
+            poison.alias("lon"),
+            poison.alias("lat"),
+        )
+
+        def kept():
+            return density_drop(assign_tiles(m, zooms=(10, 12)), 2)
+
+        build = {
+            "assign_tiles": lambda: assign_tiles(m, zooms=(10, 12)),
+            "density_drop": kept,
+            "tile_table": lambda: tile_table(kept(), m),
+            "mvt_tiles": lambda: mvt_tiles(tile_table(kept(), m)),
+            "raster_tiles": lambda: raster_tiles(
+                m.select("lon", "lat"), zooms=(10, 12)
+            ),
+        }[op]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
+        before = set(jobs())
+        out = build()  # must not raise
+        assert set(jobs()) == before
+        with pytest.raises(Exception, match="evaluated at construction"):
+            out.collect()
+
 
 class TestMatchIds:
     def test_ids_equal_global_row_number(self, spark):

@@ -174,6 +174,44 @@ class TestArchive:
         assert rd.bounds[1] <= 35.6 <= rd.bounds[3]
         assert rd.bounds[1] <= 41.0 <= rd.bounds[3]
 
+    def test_feature_pixels_are_the_catalyst_pixels(
+        self, spark, pyramid, tmp_path
+    ):
+        """Each archived feature's (px, py) is exactly Spark's
+        floor((tile_fx - x) * 4096), clamped to [0, 4095] — the same
+        expression the raster tiles use, with no Python re-derivation
+        in the encoder."""
+        from pyspark.sql import functions as F
+
+        from overmatch_spark import expressions as X
+
+        path = str(tmp_path / "pixels.pmtiles")
+        write_pmtiles(pyramid, path)
+        feats = pyramid.select(
+            "z", "x", "y", F.explode("features").alias("f")
+        ).select("z", "x", "y", "f.match_id", "f.lon", "f.lat")
+
+        def pixel(frac, tile):
+            return F.least(
+                F.lit(4095), F.greatest(F.lit(0), F.floor((frac - tile) * 4096))
+            )
+
+        lon, lat = F.col("lon"), F.col("lat")
+        want = {}
+        for z in (10, 12):
+            for r in feats.filter(F.col("z") == z).select(
+                "x", "y", "match_id",
+                pixel(X.tile_fx(lon, z), F.col("x")).alias("px"),
+                pixel(X.tile_fy(lat, z), F.col("y")).alias("py"),
+            ).collect():
+                want[(z, r["x"], r["y"], r["match_id"])] = (r["px"], r["py"])
+        rd = PMTilesReader(path)
+        got = {}
+        for z, x, y in {k[:3] for k in want}:
+            for f in rd.get_tile(z, x, y)["matches"]["features"]:
+                got[(z, x, y, f["id"])] = (f["px"], f["py"])
+        assert got == want
+
     def test_deterministic_bytes(self, spark, pyramid, tmp_path):
         p1, p2 = str(tmp_path / "a.pmtiles"), str(tmp_path / "b.pmtiles")
         write_pmtiles(pyramid, p1)

@@ -1,5 +1,5 @@
-"""Session defaults that are derived from the host, checked without
-starting a JVM."""
+"""Session defaults: the ones derived from the host, checked without
+starting a JVM, and the Spark defaults the session relies on."""
 
 import pytest
 
@@ -20,3 +20,16 @@ def test_driver_memory_is_a_quarter_of_ram(monkeypatch, ram_gib, expected):
 def test_driver_memory_override(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
     assert session.driver_memory() == "6g"
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.adaptive.skewJoin.enabled",
+    ],
+)
+def test_adaptive_execution_is_on_by_default(spark, key):
+    """get_spark does not set these; it relies on Spark's defaults."""
+    assert spark.conf.get(key) == "true"
