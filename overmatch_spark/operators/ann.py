@@ -1,10 +1,24 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Baseline: brute-force cosine top-k (exact; one broadcast of the probe
-set, no shuffle of the corpus). Scale path: hyperplane-LSH bucketing
-(operators.dedup.embedding_bucket) so the corpus self-join only
-touches same-bucket candidates; at 10^12 scale the bucket column
-becomes the table's partition key and probes prune partitions.
+All six top-k operators are one candidate-then-verify composition:
+project each side (`_sides`), join the corpus to the BROADCAST probes
+on a key and drop self-pairs (`_candidates`), then rank per probe by
+(score, cand_id) (`_rank`). The exact verify is `_cosine_topk`; the PQ
+verify (`_adc_topk`) shortlists by ADC distance over codes only, then
+re-ranks the shortlist by exact cosine against the raw vectors joined
+back by id. The operators differ only in key and verify:
+
+  brute_force_topk  no key (cross join)                          cosine
+  multiprobe_topk   `bucket`: the hyperplane-LSH bucket vs the
+                    probe's bucket + `extra` lowest-margin flips  cosine
+  lsh_topk          multiprobe_topk with extra=0                  cosine
+  ivf_topk          `ivf`: nearest centroid vs the probe's
+                    nprobe nearest lists                          cosine
+  pq_topk           no key                                        ADC
+  ivfpq_topk        `ivf`                                         ADC
+
+At scale the key is the corpus table's partition column, so probes
+prune partitions; only the probe side is ever broadcast.
 """
 
 from __future__ import annotations
@@ -12,7 +26,53 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from overmatch_spark.operators.dedup import cosine, embedding_bucket, hyperplanes
+from overmatch_spark.operators.dedup import (
+    cosine,
+    embedding_bucket,
+    hyperplanes,
+    plane_dots,
+)
+
+
+def _sides(
+    corpus: DataFrame, probes: DataFrame, vec_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The corpus as (cand_id, cv) and the probes as (probe_id, pv)."""
+
+    def side(df: DataFrame, id_as: str, vec_as: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(id_as),
+            F.col(vec_col).cast("array<double>").alias(vec_as),
+        )
+
+    return side(corpus, "cand_id", "cv"), side(probes, "probe_id", "pv")
+
+
+def _candidates(c: DataFrame, p: DataFrame, key: str | None = None) -> DataFrame:
+    """Corpus rows joined to the broadcast probe rows with an equal
+    `key` column (None: every pair), self-pairs dropped. The corpus
+    is scanned once and never shuffled for the join."""
+    b = F.broadcast(p)
+    pairs = c.crossJoin(b) if key is None else c.join(b, key)
+    return pairs.filter(F.col("cand_id") != F.col("probe_id"))
+
+
+def _rank(scored: DataFrame, score: Column, k: int) -> DataFrame:
+    """Each probe's first k rows by (score, cand_id), as `rank` 1..k."""
+    w = Window.partitionBy("probe_id").orderBy(score, F.col("cand_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k over (probe_id, pv, cand_id, cv) pairs."""
+    scored = pairs.withColumn(
+        "cos_sim", F.round(cosine(F.col("pv"), F.col("cv")), 9)
+    )
+    return _rank(scored, F.col("cos_sim").desc(), k).select(
+        "probe_id", "cand_id", "cos_sim", "rank"
+    )
 
 
 def brute_force_topk(
@@ -22,30 +82,10 @@ def brute_force_topk(
     id_col: str,
     k: int = 5,
 ) -> DataFrame:
-    """Exact top-k by cosine for each probe. Probes are broadcast; the
-    corpus is scanned once, no shuffle until the final per-probe
-    top-k (a partial top-k would use F.max_by at scale)."""
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(p))
-        .filter(F.col("cand_id") != F.col("probe_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("pv"), F.col("cv")), 9))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", "cos_sim", "rank")
-    )
+    """Exact top-k by cosine for each probe: every corpus vector is a
+    candidate (a partial top-k would use F.max_by at scale)."""
+    c, p = _sides(corpus, probes, vec_col, id_col)
+    return _cosine_topk(_candidates(c, p), k)
 
 
 def lsh_topk(
@@ -57,31 +97,12 @@ def lsh_topk(
     num_planes: int = 6,
     dim: int = 64,
 ) -> DataFrame:
-    """Approximate top-k: candidates restricted to the probe's LSH
-    bucket. Recall < 1 by design; the bucket fan-out (probing
-    neighboring buckets by flipping low-margin bits) is the standard
-    extension and slots in at the `bucket` join."""
-    planes = hyperplanes(num_planes, dim)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("bucket", embedding_bucket(F.col("cv"), planes))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-    ).withColumn("bucket", embedding_bucket(F.col("pv"), planes))
-    scored = (
-        c.join(F.broadcast(p), "bucket")
-        .filter(F.col("cand_id") != F.col("probe_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("pv"), F.col("cv")), 9))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", "cos_sim", "rank")
+    """Approximate top-k: candidates restricted to the probe's own LSH
+    bucket (dedup.embedding_bucket). Recall < 1 by design;
+    multiprobe_topk with extra > 0 also searches the neighboring
+    buckets."""
+    return multiprobe_topk(
+        corpus, probes, vec_col, id_col, k, num_planes, dim, extra=0
     )
 
 
@@ -180,70 +201,52 @@ def ivf_topk(
     partitions); each probe scans only its nprobe nearest inverted
     lists and re-ranks by exact cosine. Approximate like every IVF;
     recall is the nprobe dial."""
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("ivf", ivf_assign(F.col("cv"), centroids))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-    ).withColumn(
-        "ivf", F.explode(ivf_probe_lists(F.col("pv"), centroids, nprobe))
-    )
-    scored = (
-        c.join(F.broadcast(p), "ivf")
-        .filter(F.col("cand_id") != F.col("probe_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("pv"), F.col("cv")), 9))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", "cos_sim", "rank")
-    )
+    c, p = _sides(corpus, probes, vec_col, id_col)
+    c = c.withColumn("ivf", ivf_assign(F.col("cv"), centroids))
+    lists = ivf_probe_lists(F.col("pv"), centroids, nprobe)
+    return _cosine_topk(_candidates(c, p.withColumn("ivf", F.explode(lists)), "ivf"), k)
 
 
-def clustered_view(vec: Column, id_expr: Column, n_clusters: int = 16,
-                   spread: int = 4, amp: float = 6.0,
-                   scale: float = 0.3) -> Column:
+# The clustered fixture: cluster = id % _CLUSTERS; its center is _AMP
+# at coordinate cluster * _SPREAD of a _DIM-dim vector, and the
+# original vector shrinks to _SCALE noise around it. The Spark view,
+# its DuckDB twin and the analytic centers all read these.
+_CLUSTERS, _SPREAD, _AMP, _SCALE, _DIM = 16, 4, 6.0, 0.3, 64
+
+
+def clustered_view(vec: Column, id_expr: Column) -> Column:
     """Deterministic CLUSTERED view of an embedding column: shrink the
-    original (near-isotropic) vector to `scale` noise and add a
-    one-hot cluster center (`amp` at coordinate cluster*spread, with
-    cluster = id % n_clusters). Models the clustered geometry real
-    embedding corpora have — where an IVF quantizer's list pruning
-    actually pays (the driver's isotropic vectors provably bound any
-    pruning index to recall ≈ scan fraction; see BENCH/BASELINE.md).
-    Pure elementwise arithmetic -> identical doubles on any engine."""
-    c = (id_expr % n_clusters).cast("int")
+    original (near-isotropic) vector to noise and add a one-hot
+    cluster center. Models the clustered geometry real embedding
+    corpora have — where an IVF quantizer's list pruning actually pays
+    (the driver's isotropic vectors provably bound any pruning index
+    to recall ≈ scan fraction; see BENCH/BASELINE.md). Pure
+    elementwise arithmetic -> identical doubles on any engine."""
+    c = (id_expr % _CLUSTERS).cast("int")
     return F.transform(
         vec,
-        lambda x, i: x * F.lit(float(scale))
-        + F.when(i == c * spread, F.lit(float(amp))).otherwise(F.lit(0.0)),
+        lambda x, i: x * F.lit(_SCALE)
+        + F.when(i == c * _SPREAD, F.lit(_AMP)).otherwise(F.lit(0.0)),
     )
 
 
-def sql_clustered_view(vec: str, id_expr: str, n_clusters: int = 16,
-                       spread: int = 4, amp: float = 6.0,
-                       scale: float = 0.3) -> str:
+def sql_clustered_view(vec: str, id_expr: str) -> str:
     """DuckDB twin of clustered_view (1-based list indexing)."""
     return (
         f"list_transform(range(1, len({vec}) + 1), "
-        f"i -> {vec}[i] * {float(scale)!r} "
-        f"+ CASE WHEN i - 1 = (CAST({id_expr} AS INTEGER) % {n_clusters}) "
-        f"* {spread} THEN {float(amp)!r} ELSE 0.0 END)"
+        f"i -> {vec}[i] * {_SCALE!r} "
+        f"+ CASE WHEN i - 1 = (CAST({id_expr} AS INTEGER) % {_CLUSTERS}) "
+        f"* {_SPREAD} THEN {_AMP!r} ELSE 0.0 END)"
     )
 
 
-def clustered_centers(n_clusters: int = 16, dim: int = 64,
-                      spread: int = 4, amp: float = 6.0) -> list[list[float]]:
+def clustered_centers() -> list[list[float]]:
     """The TRUE centers of the clustered fixture — the exact coarse
     quantizer for it (an IVF quantizer is an offline artifact; for a
     synthetic mixture the analytic centers are the trained result)."""
     return [
-        [float(amp) if j == c * spread else 0.0 for j in range(dim)]
-        for c in range(n_clusters)
+        [_AMP if j == c * _SPREAD else 0.0 for j in range(_DIM)]
+        for c in range(_CLUSTERS)
     ]
 
 
@@ -275,34 +278,20 @@ def sql_ivf_probe_list(vec: str, centroids: list[list[float]],
 
 def multiprobe_buckets(vec: Column, planes: list[list[int]],
                        extra: int) -> Column:
-    """Array of LSH buckets to probe: the base bucket plus `extra`
-    single-bit flips of the LOWEST-|margin| hyperplanes — the buckets
-    whose sign decision was least certain are exactly the ones a true
-    neighbor most plausibly fell into (standard multi-probe LSH). All
-    buckets are distinct (distinct single-bit flips), so no candidate
-    is scored twice. Margin ties break on plane index for engine-
-    portable determinism."""
-    dots = [
-        F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(c)) for c in hp]),
-                lambda x, c: x * c,
-            ),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        for hp in planes
-    ]
-    base = None
-    for j, d in enumerate(dots):
-        term = (d > 0).cast("long") * F.lit(1 << j).cast("long")
-        base = term if base is None else base + term
+    """Array of LSH buckets to probe: the base bucket
+    (dedup.embedding_bucket) plus `extra` single-bit flips of the
+    LOWEST-|margin| hyperplanes — the buckets whose sign decision was
+    least certain are exactly the ones a true neighbor most plausibly
+    fell into (standard multi-probe LSH). All buckets are distinct
+    (distinct single-bit flips), so no candidate is scored twice.
+    Margin ties break on plane index for engine-portable determinism.
+    extra=0 gives the base bucket alone."""
+    base = embedding_bucket(vec, planes)
     margins = F.array_sort(
         F.array(
             *[
                 F.struct(F.abs(d).alias("m"), F.lit(j).alias("j"))
-                for j, d in enumerate(dots)
+                for j, d in enumerate(plane_dots(vec, planes))
             ]
         )
     )
@@ -330,28 +319,11 @@ def multiprobe_topk(
     (extra+1)x the candidate volume — the corpus side is untouched
     (still one bucket per vector, still partition-prunable at scale)."""
     planes = hyperplanes(num_planes, dim)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).withColumn("bucket", embedding_bucket(F.col("cv"), planes))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-    ).withColumn(
-        "bucket", F.explode(multiprobe_buckets(F.col("pv"), planes, extra))
-    )
-    scored = (
-        c.join(F.broadcast(p), "bucket")
-        .filter(F.col("cand_id") != F.col("probe_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("pv"), F.col("cv")), 9))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", "cos_sim", "rank")
+    c, p = _sides(corpus, probes, vec_col, id_col)
+    c = c.withColumn("bucket", embedding_bucket(F.col("cv"), planes))
+    buckets = multiprobe_buckets(F.col("pv"), planes, extra)
+    return _cosine_topk(
+        _candidates(c, p.withColumn("bucket", F.explode(buckets)), "bucket"), k
     )
 
 
@@ -415,6 +387,39 @@ def pq_adc(codes: Column, lut: Column, m: int) -> Column:
     return out
 
 
+def _adc_topk(
+    c: DataFrame,
+    p: DataFrame,
+    codebooks: list[list[list[float]]],
+    k: int,
+    shortlist: int,
+    key: str | None = None,
+    probe_key: Column | None = None,
+) -> DataFrame:
+    """PQ verify. The candidate join carries the corpus as codes only
+    (at rest, `codes` is the stored column and raw vectors live in a
+    separate id-keyed table) against each probe's broadcast m x k* ADC
+    lookup table; the (adc, cand_id) shortlist then joins the raw
+    vectors BY ID for the exact-cosine re-rank. `key` names a column
+    of `c`, and `probe_key` gives each probe's values for it (it may
+    explode); the re-rank joins the probes before that explode."""
+    coded = c.select(
+        "cand_id",
+        *([] if key is None else [key]),
+        pq_encode(F.col("cv"), codebooks).alias("codes"),
+    )
+    luts = p.withColumn("lut", pq_lut(F.col("pv"), codebooks))
+    if key is not None:
+        luts = luts.withColumn(key, probe_key)
+    scored = _candidates(coded, luts.drop("pv"), key).withColumn(
+        "adc", pq_adc(F.col("codes"), F.col("lut"), len(codebooks))
+    )
+    short = _rank(scored, F.col("adc").asc(), shortlist).select(
+        "probe_id", "cand_id"
+    )
+    return _cosine_topk(short.join(c, "cand_id").join(p, "probe_id"), k)
+
+
 def pq_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -424,13 +429,9 @@ def pq_topk(
     k: int = 5,
     shortlist: int = 20,
 ) -> DataFrame:
-    """PQ-ADC top-k with exact cosine re-rank: the corpus rides the
-    candidate scan as 4-bit codes ONLY (at rest, `codes` is the
-    stored column and raw vectors live in a separate id-keyed table);
-    each probe broadcasts its m x k* ADC lookup table; the ADC
-    shortlist (deterministic (adc, cand_id) order) then joins raw
-    vectors BY ID for the exact re-rank — the standard
-    memory-bounded retrieval stack at 10^12-vector scale.
+    """PQ-ADC top-k with exact cosine re-rank (`_adc_topk` over every
+    pair) — the standard memory-bounded retrieval stack at
+    10^12-vector scale.
 
     PROBE-BATCH BOUND (inherent to flat PQ, not a defect): every
     probe broadcasts one ~1 KB LUT and the ADC scan touches ALL
@@ -440,42 +441,8 @@ def pq_topk(
     re-rank tails, <= ~10k probes); LARGE probe sets belong on
     ivfpq_topk, whose inverted-list pruning bounds the scan to
     nprobe/k_lists of the codes per probe."""
-    m = len(codebooks)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    coded = c.select("cand_id", pq_encode(F.col("cv"), codebooks).alias("codes"))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-    ).withColumn("lut", pq_lut(F.col("pv"), codebooks))
-    scored = (
-        coded.join(F.broadcast(p.select("probe_id", "lut")))
-        .filter(F.col("cand_id") != F.col("probe_id"))
-        .withColumn("adc", pq_adc(F.col("codes"), F.col("lut"), m))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("adc").asc(), F.col("cand_id").asc()
-    )
-    short = (
-        scored.withColumn("srank", F.row_number().over(w))
-        .filter(F.col("srank") <= shortlist)
-        .select("probe_id", "cand_id")
-    )
-    rer = (
-        short.join(c, "cand_id")
-        .join(p.select("probe_id", "pv"), "probe_id")
-        .withColumn("cos_sim", F.round(cosine(F.col("pv"), F.col("cv")), 9))
-    )
-    w2 = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", "cos_sim", "rank")
-    )
+    c, p = _sides(corpus, probes, vec_col, id_col)
+    return _adc_topk(c, p, codebooks, k, shortlist)
 
 
 def sql_pq_codes(vec: str, codebooks: list[list[list[float]]]) -> str:
@@ -522,55 +489,7 @@ def ivfpq_topk(
     touches only nprobe lists and never a raw vector; the ADC
     shortlist re-ranks by exact cosine via the id-keyed join back to
     raw storage. Both quantizers are pinned offline artifacts."""
-    m = len(codebooks)
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    coded = c.select(
-        "cand_id",
-        ivf_assign(F.col("cv"), centroids).alias("ivf"),
-        pq_encode(F.col("cv"), codebooks).alias("codes"),
-    )
-    p = (
-        probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).cast("array<double>").alias("pv"),
-        )
-        .withColumn("lut", pq_lut(F.col("pv"), codebooks))
-        .withColumn(
-            "ivf", F.explode(ivf_probe_lists(F.col("pv"), centroids, nprobe))
-        )
-    )
-    scored = (
-        coded.join(F.broadcast(p.select("probe_id", "lut", "ivf")), "ivf")
-        .filter(F.col("cand_id") != F.col("probe_id"))
-        .withColumn("adc", pq_adc(F.col("codes"), F.col("lut"), m))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("adc").asc(), F.col("cand_id").asc()
-    )
-    short = (
-        scored.withColumn("srank", F.row_number().over(w))
-        .filter(F.col("srank") <= shortlist)
-        .select("probe_id", "cand_id")
-    )
-    rer = (
-        short.join(c, "cand_id")
-        .join(
-            probes.select(
-                F.col(id_col).alias("probe_id"),
-                F.col(vec_col).cast("array<double>").alias("pv"),
-            ),
-            "probe_id",
-        )
-        .withColumn("cos_sim", F.round(cosine(F.col("pv"), F.col("cv")), 9))
-    )
-    w2 = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "cand_id", "cos_sim", "rank")
-    )
+    c, p = _sides(corpus, probes, vec_col, id_col)
+    c = c.withColumn("ivf", ivf_assign(F.col("cv"), centroids))
+    lists = ivf_probe_lists(F.col("pv"), centroids, nprobe)
+    return _adc_topk(c, p, codebooks, k, shortlist, "ivf", F.explode(lists))

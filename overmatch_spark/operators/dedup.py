@@ -703,81 +703,70 @@ def hyperplanes(num_planes: int, dim: int) -> list[list[int]]:
     return out
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Exact-fold cosine similarity of two array<double> columns (the
-    fold order matches DuckDB's list_reduce, so oracles agree to the
-    last ulp)."""
-    dot = F.aggregate(
+def _dot(a: Column, b: Column) -> Column:
+    """Left-fold dot product of two array<double> columns (the fold
+    order matches DuckDB's list_reduce, so oracles agree to the last
+    ulp)."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
     )
-    na = F.sqrt(F.aggregate(F.zip_with(a, a, lambda x, y: x * y), F.lit(0.0),
-                            lambda s, v: s + v))
-    nb = F.sqrt(F.aggregate(F.zip_with(b, b, lambda x, y: x * y), F.lit(0.0),
-                            lambda s, v: s + v))
-    return dot / (na * nb)
+
+
+def _sql_dot(u: str, v: str) -> str:
+    return (
+        f"list_reduce(list_transform(range(1, len({u}) + 1), "
+        f"i -> {u}[i] * {v}[i]), (s, x) -> s + x)"
+    )
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Exact-fold cosine similarity of two array<double> columns."""
+    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def sql_cosine(a: str, b: str) -> str:
-    def dot(u, v):
-        return (
-            f"list_reduce(list_transform(range(1, len({u}) + 1), "
-            f"i -> {u}[i] * {v}[i]), (s, x) -> s + x)"
-        )
+    return f"({_sql_dot(a, b)} / (sqrt({_sql_dot(a, a)}) * sqrt({_sql_dot(b, b)})))"
 
-    return f"({dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)})))"
+
+def plane_dots(vec: Column, planes: list[list[int]]) -> list[Column]:
+    """Dot product of `vec` with each hyperplane."""
+    return [_dot(vec, F.array(*[F.lit(float(c)) for c in hp])) for hp in planes]
+
+
+def sql_plane_dots(vec: str, planes: list[list[int]]) -> list[str]:
+    return [
+        _sql_dot(vec, "([" + ", ".join(f"{float(c)!r}" for c in hp) + "])")
+        for hp in planes
+    ]
 
 
 def embedding_bucket(vec: Column, planes: list[list[int]]) -> Column:
     """LSH bucket id = sign bits of the hyperplane dot products."""
-    terms = []
-    for j, hp in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(c)) for c in hp]),
-                lambda x, c: x * c,
-            ),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        terms.append((dot > 0).cast("long") * F.lit(1 << j).cast("long"))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
+    out = None
+    for j, dot in enumerate(plane_dots(vec, planes)):
+        term = (dot > 0).cast("long") * F.lit(1 << j).cast("long")
+        out = term if out is None else out + term
     return out
 
 
 def sql_embedding_bucket(vec: str, planes: list[list[int]]) -> str:
-    terms = []
-    for j, hp in enumerate(planes):
-        consts = "[" + ", ".join(f"{float(c)!r}" for c in hp) + "]"
-        dot = (
-            f"list_reduce(list_transform(range(1, len({vec}) + 1), "
-            f"i -> {vec}[i] * ({consts})[i]), (s, x) -> s + x)"
-        )
-        terms.append(f"(CASE WHEN ({dot}) > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
+    return "(" + " + ".join(
+        f"(CASE WHEN ({d}) > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
+        for j, d in enumerate(sql_plane_dots(vec, planes))
+    ) + ")"
 
 
 def sql_multiprobe_buckets(vec: str, planes: list[list[int]],
                            extra: int) -> str:
     """DuckDB twin of operators.ann.multiprobe_buckets: list of the
-    base bucket plus `extra` lowest-|margin| single-bit flips. Fold
-    order, sort order (struct field-lexicographic) and tie-break
-    (plane index) match the Spark expression exactly."""
-    dots = []
-    for hp in planes:
-        consts = "[" + ", ".join(f"{float(c)!r}" for c in hp) + "]"
-        dots.append(
-            f"list_reduce(list_transform(range(1, len({vec}) + 1), "
-            f"i -> {vec}[i] * ({consts})[i]), (s, x) -> s + x)"
-        )
-    base = "(" + " + ".join(
-        f"(CASE WHEN ({d}) > 0 THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
-        for j, d in enumerate(dots)
-    ) + ")"
+    base bucket (sql_embedding_bucket) plus `extra` lowest-|margin|
+    single-bit flips. Fold order, sort order (struct
+    field-lexicographic) and tie-break (plane index) match the Spark
+    expression exactly."""
+    base = sql_embedding_bucket(vec, planes)
     margins = "[" + ", ".join(
-        f"{{'m': abs({d}), 'j': {j}}}" for j, d in enumerate(dots)
+        f"{{'m': abs({d}), 'j': {j}}}"
+        for j, d in enumerate(sql_plane_dots(vec, planes))
     ) + "]"
     powers = "[" + ", ".join(
         f"CAST({1 << k} AS BIGINT)" for k in range(len(planes))

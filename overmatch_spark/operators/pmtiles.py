@@ -326,34 +326,31 @@ def _encode_directory(entries: list[tuple[int, int, int, int]]) -> bytes:
     return bytes(out)
 
 
-# Root directories above this many entries are split into fixed-size
-# leaf directories (spec: keep the root small enough to fetch with the
-# header in one request; 16,384-entry leaves keep any single directory
-# fetch bounded at ~10^12-tile scale while the root stays tiny — one
-# entry per leaf).
-_LEAF_SPLIT_THRESHOLD = 16384
+# Root directories above this many entries are split into leaf
+# directories of this many entries (spec: keep the root small enough
+# to fetch with the header in one request; 16,384-entry leaves keep
+# any single directory fetch bounded at ~10^12-tile scale while the
+# root stays tiny — one entry per leaf). Read at call time.
 _LEAF_SIZE = 16384
 
 
 def _build_directories(
     entries: list[tuple[int, int, int, int]],
-    split_threshold: int = _LEAF_SPLIT_THRESHOLD,
-    leaf_size: int = _LEAF_SIZE,
 ) -> tuple[bytes, bytes, int]:
     """(gzip'd root dir, concatenated gzip'd leaf dirs, n_leaves).
 
     Small archives keep every tile entry in the root (n_leaves=0).
-    Past ``split_threshold`` entries, tile entries are chunked into
-    ``leaf_size`` leaves and the root holds ONE entry per leaf — the
+    Past ``_LEAF_SIZE`` entries, tile entries are chunked into
+    ``_LEAF_SIZE`` leaves and the root holds ONE entry per leaf — the
     spec's run_length=0 pointer form: tile_id = first id covered,
     offset/length = the leaf's byte span in the leaf section."""
-    if len(entries) <= split_threshold:
+    if len(entries) <= _LEAF_SIZE:
         return _gz(_encode_directory(entries)), b"", 0
     root_entries = []
     leaf_bytes = bytearray()
     n_leaves = 0
-    for i in range(0, len(entries), leaf_size):
-        chunk = entries[i : i + leaf_size]
+    for i in range(0, len(entries), _LEAF_SIZE):
+        chunk = entries[i : i + _LEAF_SIZE]
         blob = _gz(_encode_directory(chunk))
         root_entries.append((chunk[0][0], len(leaf_bytes), len(blob), 0))
         leaf_bytes += blob
@@ -494,7 +491,6 @@ def _assemble_archive(
     tile_type: int,
     tile_compression: int,
     metadata: dict,
-    leaf_split: int | None = None,
 ) -> dict:
     """Assemble a PMTiles v3 archive from an encoded-tile DataFrame
     (tileid, z, x, y, data) — data bytes already tile-compressed (or
@@ -554,12 +550,7 @@ def _assemble_archive(
         b_minlon, b_maxlon = lon_of(minx[z]), lon_of(maxx[z] + 1)
         b_minlat, b_maxlat = lat_of(maxy[z] + 1), lat_of(miny[z])
 
-        if leaf_split is None:
-            root, leaves, n_leaves = _build_directories(entries)
-        else:
-            root, leaves, n_leaves = _build_directories(
-                entries, split_threshold=leaf_split, leaf_size=leaf_split
-            )
+        root, leaves, n_leaves = _build_directories(entries)
         metadata = dict(metadata)
         for layer_meta in metadata.get("vector_layers", []):
             layer_meta.setdefault("minzoom", min_z)
@@ -714,22 +705,11 @@ class PMTilesReader:
         run_length) — transparently expanding leaf pointers."""
         for e in self.entries:
             if e[3] == 0:
-                _, loff, lln, _ = e
-                leaf = _decode_directory(
-                    gzip.decompress(
-                        self._raw[
-                            self._leaf_off
-                            + loff : self._leaf_off
-                            + loff
-                            + lln
-                        ]
-                    )
-                )
-                yield from leaf
+                yield from self._leaf(e[1], e[2])[0]
             else:
                 yield e
 
-    def _find(self, entries, tid, keys=None):
+    def _find(self, entries, tid, keys):
         """Spec search: the last entry with id <= tid governs tid —
         a run_length>=1 entry matches if tid falls in its run; a
         run_length==0 entry is a leaf pointer that covers everything
@@ -737,8 +717,6 @@ class PMTilesReader:
         sorted id list (built once per directory, not per lookup)."""
         import bisect
 
-        if keys is None:
-            keys = [e[0] for e in entries]
         i = bisect.bisect_right(keys, tid) - 1
         if i < 0:
             return None

@@ -62,6 +62,19 @@ def _knn_bnlj_shapes_ok(knn_plan: str) -> bool:
     return True
 
 
+def _adc_joins(plan: str, join: str) -> list[tuple[str, str]]:
+    """(join detail, streamed columns) for each `join` node whose
+    consumer computes `adc`: the consumer's Input line is exactly what
+    the join outputs."""
+    out = []
+    for block in re.split(rf"\(\d+\) {join}", plan)[1:]:
+        detail, consumer = block.split("\n\n")[:2]
+        inp = re.search(r"Input \[\d+\]: \[([^\]]+)\]", consumer)
+        if "AS adc#" in consumer and inp:
+            out.append((detail, inp.group(1)))
+    return out
+
+
 def main():
     from pyspark.sql import functions as F
 
@@ -147,6 +160,22 @@ def main():
         )
     )
     sections.append(("PQ ADC top-k (codes-only candidate join)", pq_plan, None))
+
+    # 8b. the same payload discipline through the inverted lists: the
+    # ivfpq ADC join (hash join on the list id) streams codes and
+    # LUTs only
+    from overmatch_spark.operators.ann import ivfpq_topk, reference_ivf_centroids
+
+    ivfpq_plan = grab_plan(
+        ivfpq_topk(
+            emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
+            reference_ivf_centroids(16), reference_pq_codebooks(), k=5,
+            nprobe=2, shortlist=20,
+        )
+    )
+    sections.append(
+        ("IVF+PQ ADC top-k (codes-only candidate join)", ivfpq_plan, None)
+    )
 
     # 9. raster tile pyramid: the whole multi-zoom rasterization must
     # cost ONE hash exchange (the groupBy(z,x,y) feeding
@@ -274,19 +303,28 @@ def main():
         and "CartesianProduct" not in sj_plan
         and "EvalPython" not in sj_plan,
     )
-    # The ADC join is the BNLJ whose consumer computes `adc` (the
-    # broadcast LUT cross join); its Input line must carry codes#,
-    # never a raw cv# vector — raw vectors belong to the scan-side
-    # code derivation and the id-keyed re-rank join only.
-    adc_inputs = [
-        seg[:400]
-        for seg in re.split(r"\(\d+\) BroadcastNestedLoopJoin", pq_plan)[1:]
-    ]
+    # The ADC join is the one whose consumer computes `adc`: for pq the
+    # BNLJ (the broadcast LUT cross join), for ivfpq the
+    # BroadcastHashJoin on the list id. It must stream codes# and lut#,
+    # never a raw cv# vector — raw vectors belong to the scan-side code
+    # derivation and the id-keyed re-rank join only.
+    pq_adc = _adc_joins(pq_plan, "BroadcastNestedLoopJoin")
     check(
         "pq ADC candidate join streams codes only (no raw vectors)",
-        len(adc_inputs) >= 1
+        len(pq_adc) >= 1
         and all(
-            "codes#" in seg and "cv#" not in seg for seg in adc_inputs
+            "codes#" in cols and "lut#" in cols and "cv#" not in cols
+            for _, cols in pq_adc
+        ),
+    )
+    ivfpq_adc = _adc_joins(ivfpq_plan, "BroadcastHashJoin")
+    check(
+        "ivfpq ADC candidate join streams codes only (no raw vectors)",
+        len(ivfpq_adc) >= 1
+        and all(
+            "ivf#" in detail
+            and "codes#" in cols and "lut#" in cols and "cv#" not in cols
+            for detail, cols in ivfpq_adc
         ),
     )
 

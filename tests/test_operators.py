@@ -584,6 +584,42 @@ class TestLazyConstruction:
         with pytest.raises(Exception, match="evaluated at construction"):
             out.collect()
 
+    @pytest.mark.parametrize(
+        "op",
+        ["brute_force_topk", "lsh_topk", "multiprobe_topk", "ivf_topk",
+         "pq_topk", "ivfpq_topk"],
+    )
+    def test_ann_construction_launches_no_jobs(self, spark, op):
+        """The six ANN top-k operators are lazy: building one over a
+        poisoned embedding column runs no Spark job."""
+        from pyspark.sql import functions as F
+
+        from overmatch_spark.operators import ann
+
+        poison = F.when(
+            F.col("id") >= 0, F.raise_error("evaluated at construction")
+        ).otherwise(F.lit(None)).cast("array<double>")
+        e = spark.range(8).select(
+            F.col("id").alias("vec_id"), poison.alias("embedding")
+        )
+        probes = e.filter(F.col("vec_id") < 2)
+        args = (e, probes, "embedding", "vec_id")
+        cents, books = ann.clustered_centers(), ann.reference_pq_codebooks()
+        build = {
+            "brute_force_topk": lambda: ann.brute_force_topk(*args),
+            "lsh_topk": lambda: ann.lsh_topk(*args),
+            "multiprobe_topk": lambda: ann.multiprobe_topk(*args),
+            "ivf_topk": lambda: ann.ivf_topk(*args, cents, nprobe=1),
+            "pq_topk": lambda: ann.pq_topk(*args, books),
+            "ivfpq_topk": lambda: ann.ivfpq_topk(*args, cents, books, nprobe=1),
+        }[op]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
+        before = set(jobs())
+        out = build()  # must not raise
+        assert set(jobs()) == before
+        with pytest.raises(Exception, match="evaluated at construction"):
+            out.collect()
+
 
 class TestMatchIds:
     def test_ids_equal_global_row_number(self, spark):
@@ -614,6 +650,43 @@ class TestMatchIds:
         e = want.sort_values(key).reset_index(drop=True)
         assert (g["match_id"] == e["match_id"]).all()
         assert g["match_id"].min() == 1 and g["match_id"].max() == n
+
+
+class TestLsh:
+    def test_bucket_restriction_and_multiprobe_recall(self, spark):
+        """lsh_topk pairs each probe only with candidates in its own
+        embedding_bucket. multiprobe_topk(extra=2) ranks a superset of
+        those candidates exactly, so every true top-5 neighbor that
+        lsh_topk finds, multiprobe_topk finds too, and its recall@5
+        against brute force is at least lsh_topk's."""
+        from pyspark.sql import functions as F
+
+        from overmatch_spark.operators.ann import (
+            brute_force_topk,
+            lsh_topk,
+            multiprobe_topk,
+        )
+        from overmatch_spark.operators.dedup import embedding_bucket, hyperplanes
+
+        e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+        probes = e.filter(F.col("vec_id") < 30)
+        args = (e, probes, "embedding", "vec_id")
+        bucket = embedding_bucket(
+            F.col("embedding").cast("array<double>"), hyperplanes(6, 64)
+        )
+        of = dict(e.select("vec_id", bucket).collect())
+        lsh = lsh_topk(*args, k=5).toPandas()
+        assert len(lsh) > 0
+        assert all(of[p] == of[c] for p, c in zip(lsh.probe_id, lsh.cand_id))
+
+        def pairs(df):
+            return set(zip(df.probe_id, df.cand_id))
+
+        truth = pairs(brute_force_topk(*args, k=5).toPandas())
+        assert len(truth) == 150
+        hits_lsh = pairs(lsh) & truth
+        hits_mp = pairs(multiprobe_topk(*args, k=5, extra=2).toPandas()) & truth
+        assert hits_lsh <= hits_mp  # so recall@5 is at least lsh_topk's
 
 
 class TestIvf:

@@ -246,11 +246,12 @@ class TestArchive:
             n += len(tile["matches"]["features"])
         assert n == 30
 
-    def test_leaf_directories(self, spark, pyramid, tmp_path):
-        """Forced leaf split (leaf_split=2): every tile must still be
+    def test_leaf_directories(self, spark, pyramid, tmp_path, monkeypatch):
+        """Forced leaf split (_LEAF_SIZE=2): every tile must still be
         findable through the root's run_length=0 pointer entries, and
         iter_tile_entries must expand to the same tile-entry set as an
         unsplit archive."""
+        from overmatch_spark.operators import pmtiles
         from overmatch_spark.operators.pmtiles import (
             _MVT,
             _GZIP,
@@ -263,9 +264,8 @@ class TestArchive:
         leaf_p = str(tmp_path / "leaf.pmtiles")
         meta = {"name": "t", "format": "pbf", "vector_layers": []}
         _assemble_archive(enc, flat_p, _MVT, _GZIP, meta)
-        summary = _assemble_archive(
-            enc, leaf_p, _MVT, _GZIP, meta, leaf_split=2
-        )
+        monkeypatch.setattr(pmtiles, "_LEAF_SIZE", 2)
+        summary = _assemble_archive(enc, leaf_p, _MVT, _GZIP, meta)
         enc.unpersist()
         flat, leafy = PMTilesReader(flat_p), PMTilesReader(leaf_p)
         assert summary["leaf_dirs"] > 1
