@@ -62,6 +62,23 @@ def _knn_bnlj_shapes_ok(knn_plan: str) -> bool:
     return True
 
 
+_IDS = {"doc_id", "id_a", "id_b"}
+
+
+def _key_exchanges(plan: str, keys: list[str]) -> list[set[str]]:
+    """Column names carried by each Exchange that hash-partitions on
+    exactly `keys` (a key self-join's shuffle)."""
+    out = []
+    for cols, part in re.findall(
+        r"\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]\n"
+        r"Arguments: hashpartitioning\(([^)]*)\)",
+        plan,
+    ):
+        if [c.split("#")[0] for c in part.split(", ")[:-1]] == keys:
+            out.append({c.split("#")[0] for c in cols.split(", ")})
+    return out
+
+
 def _adc_joins(plan: str, join: str) -> list[tuple[str, str]]:
     """(join detail, streamed columns) for each `join` node whose
     consumer computes `adc`: the consumer's Input line is exactly what
@@ -121,6 +138,27 @@ def main():
     mh_plan = grab_plan(minhash_lsh_pairs(docs, "text", "doc_id"))
     sections.append(("MinHash LSH pairs (band join de-payloaded)", mh_plan, None))
 
+    # 4b. the other pair operators share the minhash self-join
+    # (dedup._self_pairs): only keys, ids and the declared carry
+    # column may ride their key exchanges
+    from overmatch_spark.operators.dedup import (
+        embedding_near_dups, simhash_hamming_pairs, winnow_pairs,
+    )
+
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    winnow_plan = grab_plan(winnow_pairs(docs, "text", "doc_id"))
+    sections.append(("Winnowing pairs (fingerprint self-join)", winnow_plan, None))
+    hamming_plan = grab_plan(simhash_hamming_pairs(docs, "text", "doc_id"))
+    sections.append(("SimHash hamming pairs (block self-join)", hamming_plan, None))
+    embdup_plan = grab_plan(embedding_near_dups(emb, "embedding", "vec_id"))
+    sections.append(("Embedding near-dups (bucket self-join)", embdup_plan, None))
+    pair_plans = [
+        ("minhash", mh_plan, ["band", "key"], ()),
+        ("winnow", winnow_plan, ["fp"], ()),
+        ("simhash hamming", hamming_plan, ["bi", "bv"], ("sig",)),
+        ("embedding near-dup", embdup_plan, ["bucket"], ("v",)),
+    ]
+
     # 5. match-id assignment: no Window at all (the two-phase offset
     # plan), hence no single-partition global sort
     from overmatch_spark.operators.tiles import assign_match_ids
@@ -152,7 +190,6 @@ def main():
     # as a column OF the ADC join itself
     from overmatch_spark.operators.ann import pq_topk, reference_pq_codebooks
 
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     pq_plan = grab_plan(
         pq_topk(
             emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
@@ -269,6 +306,15 @@ def main():
         "minhash band exchange carries ids only (no shingle arrays)",
         band_inputs and all("sh#" not in s for s in band_inputs),
     )
+    for name, plan, keys, carry in pair_plans:
+        allowed = {*keys, *_IDS, *carry}
+        allowed |= {f"{c}_{s}" for c in carry for s in "ab"}
+        shuffled = [c for c in _key_exchanges(plan, keys) if c & _IDS]
+        check(
+            f"{name} self-join exchange on ({', '.join(keys)}) carries "
+            f"only its keys, the ids{''.join(f' and {c}' for c in carry)}",
+            shuffled and all(c <= allowed for c in shuffled),
+        )
     check("match-id assignment plan has no Window node", "Window" not in ids_plan)
     check(
         "knn reuses ONE cached build table across phases (>=3 cache scans)",

@@ -11,6 +11,17 @@ from overmatch_spark.spec import conflate_spec, knn_spec
 
 N = 600
 
+# Dedup operators built without any Spark job.
+LAZY_DEDUP = [
+    "exact_dedup", "minhash_lsh_pairs", "winnow_pairs",
+    "simhash_hamming_pairs", "simhash_dedup", "hamming_pairs",
+    "phash_near_dups", "embedding_near_dups",
+]
+# Dedup operators that act on purpose: connected components run one
+# checkpoint action per round (dedup_corpus and
+# multimodal.dedup_images_by_content through dedup_clusters).
+DEDUP_ACTS = ["dedup_clusters", "dedup_corpus", "dedup_images_by_content"]
+
 
 @pytest.fixture(scope="module")
 def layers():
@@ -621,6 +632,62 @@ class TestLazyConstruction:
             out.collect()
 
 
+    @pytest.mark.parametrize("op", LAZY_DEDUP)
+    def test_dedup_construction_launches_no_jobs(self, spark, op):
+        """The dedup operators are lazy: building one over a poisoned
+        input with an upstream aggregate (whose partition count only a
+        job could tell) runs no Spark job."""
+        from pyspark.sql import functions as F
+
+        from overmatch_spark.operators import dedup
+        from overmatch_spark.operators.multimodal import phash_near_dups
+
+        poison = F.when(
+            F.col("id") >= 0, F.raise_error("evaluated at construction")
+        ).otherwise(F.lit(None))
+        d = spark.range(16).groupBy((F.col("id") % 8).alias("doc_id")).agg(
+            F.first(poison.cast("string")).alias("text"),
+            F.first(poison.cast("long")).alias("sig"),
+            F.first(poison.cast("array<double>")).alias("v"),
+        )
+        args = (d, "text", "doc_id")
+        build = {
+            "exact_dedup": lambda: dedup.exact_dedup(*args),
+            "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(*args),
+            "winnow_pairs": lambda: dedup.winnow_pairs(*args),
+            "simhash_hamming_pairs": lambda: dedup.simhash_hamming_pairs(*args),
+            "simhash_dedup": lambda: dedup.simhash_dedup(*args),
+            "hamming_pairs": lambda: dedup.hamming_pairs(d),
+            "phash_near_dups": lambda: phash_near_dups(d, "sig", "doc_id"),
+            "embedding_near_dups": lambda: dedup.embedding_near_dups(
+                d, "v", "doc_id"
+            ),
+        }[op]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
+        before = set(jobs())
+        out = build()  # must not raise
+        assert set(jobs()) == before
+        with pytest.raises(Exception, match="evaluated at construction"):
+            out.collect()
+
+    def test_dedup_operators_lazy_or_allowlisted(self):
+        """Every public DataFrame operator of dedup.py is either built
+        without a job (test above) or named in DEDUP_ACTS."""
+        import inspect
+
+        from overmatch_spark.operators import dedup
+
+        ops = {
+            name
+            for name, fn in inspect.getmembers(dedup, inspect.isfunction)
+            if fn.__module__ == dedup.__name__
+            and not name.startswith("_")
+            and inspect.signature(fn).return_annotation == "DataFrame"
+        }
+        assert ops <= set(LAZY_DEDUP) | set(DEDUP_ACTS)
+        assert not set(LAZY_DEDUP) & set(DEDUP_ACTS)
+
+
 class TestMatchIds:
     def test_ids_equal_global_row_number(self, spark):
         """W7: the width-proportional two-phase plan must emit ids
@@ -929,7 +996,9 @@ class TestWinnowing:
         import pandas as pd
         from pyspark.sql import functions as F
 
-        from overmatch_spark.operators.dedup import winnow_hashes, winnow_pairs
+        from overmatch_spark.operators.dedup import (
+            winnow_gram_hashes, winnow_mins, winnow_pairs,
+        )
 
         k, w = 3, 3
         span = "alpha beta gamma delta epsilon"  # 5 words = k + w - 1
@@ -945,7 +1014,8 @@ class TestWinnowing:
         fps = {
             r["doc_id"]: set(r["fps"])
             for r in df.select(
-                "doc_id", winnow_hashes(F.col("text"), k, w).alias("fps")
+                "doc_id",
+                winnow_mins(winnow_gram_hashes(F.col("text"), k), w).alias("fps"),
             ).collect()
         }
         # the span-sharing docs must intersect; doc 3 must not
@@ -1087,6 +1157,71 @@ class TestSimhashHamming:
         assert (got["cluster_id"] == 0).all()
         assert got["survivor"].sum() == 1
 
+
+    @staticmethod
+    def _permuted_chain(n):
+        """Pairs of a path over n nodes whose ids are a seeded
+        permutation, so pointer jumping gives no log-diameter bound."""
+        import random
+
+        ids = random.Random(3).sample(range(n), n)
+        return [(min(a, b), max(a, b)) for a, b in zip(ids, ids[1:])]
+
+    def test_deep_permuted_chain_matches_union_find(self, spark):
+        """The smallest seeded permuted chain that needs more than 15
+        rounds equals a union-find. Every round's state used to keep
+        the size estimate of the plan it replaced, its digits doubling
+        per round, so planning slowed round by round until it
+        stalled."""
+        from overmatch_spark.operators.dedup import dedup_clusters
+
+        pairs = self._permuted_chain(23)
+        # the rounds the operator runs, replayed in Python
+        nb = {}
+        for a, b in pairs:
+            nb.setdefault(a, []).append(b)
+            nb.setdefault(b, []).append(a)
+        lab, rounds, moved = {v: v for v in nb}, 0, True
+        while moved:
+            new = {
+                v: min(lab[v], lab[lab[v]], *(lab[u] for u in nb[v]))
+                for v in nb
+            }
+            moved, lab, rounds = new != lab, new, rounds + 1
+        assert rounds > 15
+
+        root = {v: v for v in nb}
+
+        def find(v):
+            while root[v] != v:
+                v = root[v]
+            return v
+
+        for a, b in pairs:
+            ra, rb = find(a), find(b)
+            root[max(ra, rb)] = min(ra, rb)
+        want = {v: find(v) for v in nb}
+
+        out = dedup_clusters(spark.createDataFrame(pairs, "id_a long, id_b long"))
+        # the last round's state starts from the default estimate (19
+        # digits), not from 16 rounds of products
+        size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert size < 10**25
+        got = out.toPandas()
+        assert dict(zip(got["doc_id"], got["cluster_id"])) == want
+        assert got["survivor"].sum() == 1
+
+    def test_unconverged_raises(self, spark):
+        """A 16-node permuted chain needs 7 rounds: with max_iters=3
+        the labels still move, and the operator raises instead of
+        returning wrong clusters."""
+        from overmatch_spark.operators.dedup import dedup_clusters
+
+        pairs = spark.createDataFrame(
+            self._permuted_chain(16), "id_a long, id_b long"
+        )
+        with pytest.raises(RuntimeError, match="max_iters=3"):
+            dedup_clusters(pairs, max_iters=3)
 
 class TestPublicSpatialApi:
     def test_spatial_join_and_nearest_join(self, spark):
