@@ -27,7 +27,7 @@ Physical notes (SURVEY.md §4.2):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from overmatch_spark import expressions as X
@@ -124,9 +124,10 @@ def _sides(layer_a: DataFrame, layer_b: DataFrame, res: int,
 
 
 def _cell_join(a: DataFrame, b: DataFrame, keys: list,
-               radius_m: float) -> DataFrame:
+               radius_m: float | Column) -> DataFrame:
     """J2 equi-join on the cell key(s), then J3 exact planar distance
-    (inclusive <=, match.py:225) as column `dist`.
+    (inclusive <=, match.py:225) as column `dist`. `radius_m` is a
+    float or a per-row Column (knn's per-probe upper bound).
 
     No pair-dedup is needed: a build row lives in exactly one cell
     and carries exactly one salt, while the probe side enumerates
@@ -257,12 +258,11 @@ def nearest_join(
     layer_b: DataFrame,
     a_id: str = "osm_id",
     b_id: str = "id",
-    res0: int = 16,
-    coarse_res: int = 13,
     caches: list | None = None,
 ) -> DataFrame:
-    """Exact nearest-neighbor join as a PUBLIC operator: for EVERY
-    layer_a row, its single nearest layer_b row — the kNN fallback
+    """Exact nearest-neighbor join as a PUBLIC operator: for every
+    layer_a id, its single nearest layer_b row (an id on several rows
+    gets the nearest over all of them) — the kNN fallback
     (operators.knn) with an empty exclusion set and NO matcher
     semantics (the conflation pipeline's null/empty-name skip does
     not apply here; inputs only need (id, lon, lat), like
@@ -280,9 +280,7 @@ def nearest_join(
     b = layer_b.select(F.col(b_id).alias("id"), "lon", "lat")
     spark = layer_a.sparkSession
     empty = spark.createDataFrame([], "osm_id string")
-    out = knn_fallback(
-        a, b, empty, res0=res0, coarse_res=coarse_res, caches=caches
-    )
+    out = knn_fallback(a, b, empty, caches=caches)
     return out.select(
         F.col("osm_id").alias("a_id"),
         F.col("overture_id").alias("b_id"),

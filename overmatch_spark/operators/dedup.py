@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import hashlib
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -528,7 +529,7 @@ def simhash_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # Cluster formation: near-dup pairs -> connected components -> survivors
 # ---------------------------------------------------------------------------
 
-def _checkpoint(df: DataFrame) -> DataFrame:
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, JavaObject]:
     """`df` materialized by one action (localCheckpoint) and rebuilt as
     a new relation over the same rows, with no size estimate of its
     own. A checkpoint keeps the estimate of the plan it replaced, and
@@ -537,12 +538,17 @@ def _checkpoint(df: DataFrame) -> DataFrame:
     285, ... 1.24 million at round 15), and from about round 13 the
     planner's BigInt products dominate (15 rounds: 58 s, 12: 9 s).
     The rebuilt relation starts every round from the default estimate
-    (19 digits)."""
+    (19 digits).
+
+    Also returns the JVM RDD that holds the checkpoint's blocks:
+    `DataFrame.unpersist()` does nothing on a localCheckpointed frame,
+    so `rdd.unpersist(False)` is the only way to free them before GC."""
     ckpt = df.localCheckpoint()
     jdf = df.sparkSession._jsparkSession.internalCreateDataFrame(
         ckpt._jdf.queryExecution().toRdd(), ckpt._jdf.schema(), False
     )
-    return DataFrame(jdf, df.sparkSession)
+    blocks = ckpt._jdf.queryExecution().analyzed().rdd()
+    return DataFrame(jdf, df.sparkSession), blocks
 
 
 def dedup_clusters(
@@ -586,10 +592,10 @@ def dedup_clusters(
     # A checkpoint on every iteration state: the loop would otherwise
     # grow the LOGICAL plan each round and Catalyst re-analysis cost
     # explodes — the classic iterative-DataFrame pitfall.
-    sym = _checkpoint(
+    sym, sym_blocks = _checkpoint(
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     )
-    lab = _checkpoint(
+    lab, lab_blocks = _checkpoint(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -609,7 +615,7 @@ def dedup_clusters(
         # convergence is observed on the round's own checkpoint action
         # (rows whose label moved), not counted by a second job
         moved = Observation()
-        lab = _checkpoint(
+        lab, blocks = _checkpoint(
             lab.join(nb.select(F.col("src").alias("node"), "nmin"), "node", "left")
             .join(jump, "label", "left")
             .select(
@@ -627,12 +633,19 @@ def dedup_clusters(
             )
             .select("node", F.col("new_label").alias("label"))
         )
+        # round r is materialized and reads nothing of round r-1's
+        # blocks (a checkpoint cuts the lineage): free them now, not
+        # at GC, so a deep component holds two rounds, not all
+        lab_blocks.unpersist(False)
+        lab_blocks = blocks
         if not moved.get["n"]:
             break
     else:
         raise RuntimeError(
             f"dedup_clusters: labels still moving after max_iters={max_iters} rounds"
         )
+    # the result reads only the last round's labels
+    sym_blocks.unpersist(False)
     out = lab.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )

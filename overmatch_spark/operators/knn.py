@@ -37,11 +37,15 @@ nearest-neighbor fallback for them. Two-phase exact algorithm:
   contains the whole disk that provably holds the nearest + its
   mm-rounded ties.
 
-The coarse histogram resolution self-tunes (escalates coarser) until
-the occupied-cell count fits the broadcast budget — at planetary
-scale a fixed resolution could exceed driver memory; the common case
-is a single approx_count_distinct probe of the requested resolution
-against the cached build table, and tuning never changes results.
+The coarse histogram is capped inside the DAG to its _MAX_HIST_CELLS
+densest cells (a TopK over occupied-cell counts), so it always fits
+the broadcast budget and plan construction runs no Spark job; any
+non-empty subset of occupied cells still gives valid upper bounds.
+
+Every phase is keyed on the probe POINT (osm_id, ax, ay): an osm_id
+at several coordinates is searched from each of them, and the result
+is one per-osm_id min over all its points, the rule of the oracles
+(spec.knn_spec, the DuckDB `PARTITION BY osm_id`).
 
 Naive ring-expansion to coarser cells is NOT used: at coarse
 resolutions dense cells make the candidate fan-out quadratic (probes
@@ -75,10 +79,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from overmatch_spark import expressions as X
+from overmatch_spark.operators.conflate import _build, _cell_join
 
 # mm-rounded tie-break keys differ by < 1 mm; 2 mm slack keeps every
 # tied candidate inside any bound/cover derived from a winner
 _TIE_SLACK_M = 0.002
+# the hintless upper bounds' histogram: its resolution (cell edge
+# ~4.9 km) and the broadcast cap on its occupied cells. Neither
+# changes the result (any occupied cell bounds the nearest); both are
+# read at call time.
+_COARSE_RES = 13
+_MAX_HIST_CELLS = 300_000
+# a probe point: an osm_id may sit at several coordinates, and each
+# is searched on its own until the final per-osm_id min
+_POINT = ["osm_id", "ax", "ay"]
+
 
 def release_caches(caches: list) -> None:
     """Unpersist every intermediate knn_fallback appended to `caches`.
@@ -88,29 +103,24 @@ def release_caches(caches: list) -> None:
         caches.pop().unpersist()
 
 
-def _best_per_probe(cand: DataFrame, carry: tuple = ()) -> DataFrame:
-    """Exact min with the engine's tie-break rule. `carry` lists extra
-    probe-side columns to ride along in the min-struct: they sit AFTER
-    the (dk, overture_id) pair, which is already unique per group, so
-    they never influence which candidate wins — they just travel with
-    the winner (used by phase 1 to keep ax/ay without a later join)."""
+def _best_per_probe(cand: DataFrame, keys: list) -> DataFrame:
+    """Exact min per group of `keys` with the engine's tie-break rule
+    (rint(dist*1000), overture_id)."""
     return (
-        cand.groupBy("osm_id")
+        cand.groupBy(*keys)
         .agg(
             F.min(
                 F.struct(
                     F.rint(F.col("dist") * F.lit(1000.0)).alias("dk"),
                     F.col("overture_id").alias("overture_id"),
                     F.col("dist").alias("dist"),
-                    *[F.col(c).alias(c) for c in carry],
                 )
             ).alias("best")
         )
         .select(
-            "osm_id",
+            *keys,
             F.col("best.overture_id").alias("overture_id"),
             F.col("best.dist").alias("dist"),
-            *[F.col(f"best.{c}").alias(c) for c in carry],
         )
     )
 
@@ -151,15 +161,14 @@ def knn_fallback(
     layer_b: DataFrame,
     matches: DataFrame,
     res0: int = 16,
-    coarse_res: int = 13,
-    max_hist_cells: int = 300_000,
     caches: list | None = None,
 ) -> DataFrame:
-    """Nearest layer_b feature for every named layer_a row absent from
-    `matches`. Returns (osm_id, overture_id, distance_m).
+    """Nearest layer_b feature for every named layer_a osm_id absent
+    from `matches`; an osm_id at several coordinates gets the nearest
+    over all of them. Returns (osm_id, overture_id, distance_m).
 
-    Output is invariant to res0/coarse_res/max_hist_cells (they shape
-    the physical search only — property- and oracle-tested).
+    Output is invariant to res0 (it shapes the physical search only —
+    property- and oracle-tested).
 
     `caches`: list the persisted intermediates are appended to; the
     caller unpersists them (release_caches(caches)) after
@@ -177,12 +186,12 @@ def knn_fallback(
     # dedup's hash(osm_id) partitioning is exactly the join's.
     # Full-row dropDuplicates after the anti-join: duplicate input
     # rows (same id AND coords) contribute nothing — every downstream
-    # consumer is a per-osm_id min — so collapsing them here shrinks
-    # the phase-1 cover explode, the joins, and the distance math by
-    # the duplicate fraction (24% on the bench corpus). Exchange-free:
+    # consumer is a min — so collapsing them here shrinks the phase-1
+    # cover explode, the joins, and the distance math by the
+    # duplicate fraction (24% on the bench corpus). Exchange-free:
     # the anti-join leaves hash(osm_id) partitioning, which already
-    # clusters the (osm_id, ax, ay) grouping keys, so the dedup is a
-    # local aggregate and the cache keeps the osm_id partitioning.
+    # clusters the point keys, so the dedup is a local aggregate and
+    # the cache keeps the osm_id partitioning.
     probes = (
         layer_a.filter(F.col("name").isNotNull() & (F.col("name") != ""))
         .join(matches.select("osm_id").dropDuplicates(), "osm_id", "left_anti")
@@ -191,7 +200,7 @@ def knn_fallback(
             X.merc_x(F.col("lon")).alias("ax"),
             X.merc_y(F.col("lat")).alias("ay"),
         )
-        .dropDuplicates(["osm_id", "ax", "ay"])
+        .dropDuplicates(_POINT)
         .persist()
     )
     caches.append(probes)
@@ -210,40 +219,32 @@ def knn_fallback(
     # local aggregate on top of the repartition and the cache keeps
     # the cell partitioning both joins reuse.
     b = (
-        layer_b.select(
-            F.col("id").alias("overture_id"),
-            X.merc_x(F.col("lon")).alias("bx"),
-            X.merc_y(F.col("lat")).alias("by"),
-        )
-        .withColumn("cell", X.cell_of(F.col("bx"), F.col("by"), res0))
+        _build(layer_b, [F.col("id").alias("overture_id")], res0)
         .repartition("cell")
         .dropDuplicates(["overture_id", "bx", "by", "cell"])
         .persist()
     )
     caches.append(b)
-    b0 = b  # histogram / ladder consumers ignore the cell column
-    edge_c = X.cell_edge_m(coarse_res)
+    b_cell = b.select("cell", "overture_id", "bx", "by")
 
     # ---- phase 1: dynamic exact cover at radius edge/2 ----
+    # A plain join, not _cell_join's `dist <= radius` filter: the
+    # candidates beyond r1 are the stragglers' hints, so all stay.
     r1 = X.cell_edge_m(res0) / 2.0
     probe1 = probes.withColumn(
         "cell",
         F.explode(X.cover_cells(F.col("ax"), F.col("ay"), res0, r1)),
     )
-    cand1 = probe1.join(b.select("cell", "overture_id", "bx", "by"), "cell").withColumn(
+    cand1 = probe1.join(b_cell, "cell").withColumn(
         "dist",
         X.planar_distance(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")),
     )
     # best1 feeds BOTH the provable-exit filter and the phase-2 hints;
-    # persist it (tiny: <= one row per probe) so the phase-1 join is
-    # not recomputed lazily for each consumer. It CARRIES the probe's
-    # (ax, ay) inside the min-struct — the (dk, overture_id) prefix is
-    # unique per group so the carried columns never affect the winner
-    # — which lets `hinted` read straight off best1 and turns the old
-    # probes-vs-best1 LEFT join (+ its persist) into nothing: the only
-    # remaining probe split is the `rest` anti-join below, which reuses
-    # the hash(osm_id) partitioning both caches already have.
-    best1 = _best_per_probe(cand1, carry=("ax", "ay")).persist()
+    # persist it (tiny: <= one row per probe point) so the phase-1
+    # join is not recomputed lazily for each consumer. Keyed on the
+    # point, it carries (ax, ay) for `hinted` without a join back to
+    # the probes.
+    best1 = _best_per_probe(cand1, _POINT).persist()
     caches.append(best1)
     exit1 = F.lit(r1 - _TIE_SLACK_M)
     done1 = best1.filter(F.col("dist") <= exit1).select(
@@ -251,43 +252,38 @@ def knn_fallback(
     )
 
     # ---- phase 2, step 1: an upper bound for every straggler ----
-    # hinted: the phase-1 candidate distance is a per-row upper bound
-    # (hint osm_ids are disjoint from done1 by the exit filter)
+    # hinted: the phase-1 candidate distance is a per-point upper bound
     hinted = best1.filter(F.col("dist") > exit1).select(
-        "osm_id", "ax", "ay",
-        (F.col("dist") + F.lit(_TIE_SLACK_M)).alias("ub"),
+        *_POINT, (F.col("dist") + F.lit(_TIE_SLACK_M)).alias("ub"),
     )
     # hintless: min over occupied coarse cells of the max possible
     # distance to the cell bbox (each occupied cell holds >=1 point,
     # so min(maxd) bounds the nearest). The broadcast histogram keeps
     # this the plan's only nested-loop join; the groupBy is a partial
-    # aggregate, so the shuffle carries ONE row per probe — never the
-    # probe x cell product (the Window this replaces shuffled it all).
-    # rest = probes with NO phase-1 candidate at all (not in best1)
-    rest = probes.join(
-        best1.select("osm_id"), "osm_id", "left_anti"
-    ).select("osm_id", "ax", "ay")
-    # Broadcast-bound guard: keep the max_hist_cells DENSEST occupied
+    # aggregate, so the shuffle carries ONE row per probe point —
+    # never the probe x cell product.
+    # rest = probe points with NO phase-1 candidate at all
+    rest = probes.join(best1.select(*_POINT), _POINT, "left_anti")
+    # Broadcast-bound guard: keep the _MAX_HIST_CELLS DENSEST occupied
     # cells (deterministic tie-break on the cell id). Correct for ANY
     # non-empty subset: every kept cell is occupied, so for each probe
     # min-over-kept-cells of maxdist still upper-bounds the distance
     # to SOME real point, hence to the nearest — the ladder search is
-    # exact under any valid upper bound (property-tested). This
-    # replaced a driver-side adaptive-resolution sketch whose action
-    # forced a full derivation of the build side at plan-construction
-    # time (measured 6-12 s of the cold wall); the cap is a tiny TopK
-    # over occupied-cell counts, executed inside the DAG. Scale bound:
-    # the TopK's single-partition merge sees at most
-    # min(4^coarse_res, shuffle_partitions * max_hist_cells) histogram
-    # rows (post-aggregate, 16 B each) — one bounded task, guard path
-    # only.
+    # exact under any valid upper bound (property-tested). The cap is
+    # a tiny TopK executed inside the DAG, so no driver-side action
+    # runs at plan-construction time. Scale bound: the TopK's
+    # single-partition merge sees at most
+    # min(4^_COARSE_RES, shuffle_partitions * _MAX_HIST_CELLS)
+    # histogram rows (post-aggregate, 16 B each) — one bounded task,
+    # guard path only.
+    edge_c = X.cell_edge_m(_COARSE_RES)
     hist = (
-        b0.groupBy(
-            X.cell_of(F.col("bx"), F.col("by"), coarse_res).alias("ccell")
+        b.groupBy(
+            X.cell_of(F.col("bx"), F.col("by"), _COARSE_RES).alias("ccell")
         )
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("ccell"))
-        .limit(max_hist_cells)
+        .limit(_MAX_HIST_CELLS)
     )
     ix = F.shiftright(F.col("ccell"), 30)
     iy = F.col("ccell") - F.shiftleft(ix, 30).cast("long")
@@ -305,24 +301,21 @@ def knn_fallback(
         F.abs(F.col("ylo") - F.col("ay")), F.abs(F.col("yhi") - F.col("ay"))
     )
     maxdist = F.sqrt(mxx * mxx + mxy * mxy)
-    rest_ub = pc.groupBy("osm_id").agg(
-        (F.min(maxdist) + F.lit(_TIE_SLACK_M)).alias("ub")
-    )
-    # one narrow row per HINTLESS straggler; persisted because both
-    # the ladder cover and the needed-level prune read it (without the
-    # cache the whole upper-bound pipeline, histogram included, would
-    # run twice). Hinted stragglers are NOT in this table: their ub is
-    # provably <= sqrt(2)*1.5*edge + slack ≈ 2.13*edge (phase-1
-    # candidate in the far corner of the cover bbox), so their res0
-    # dynamic cover is <= floor(2*2.13)+2 = 6 cells per axis — the
-    # same 6x6 bound the ladder guarantees — and they go straight to
-    # the fine path below with no level computation. That keeps the
-    # ladder/histogram machinery on the hintless-only branch, which is
-    # EMPTY on any corpus dense enough that every probe sees a phase-1
-    # candidate (the common case), so the coarse join's inputs carry
-    # zero rows there instead of every hinted straggler.
+    # one narrow row per HINTLESS straggler point; persisted because
+    # both the ladder cover and the needed-level prune read it
+    # (without the cache the whole upper-bound pipeline, histogram
+    # included, would run twice). Hinted stragglers are NOT in this
+    # table: their ub is provably <= sqrt(2)*1.5*edge + slack ≈
+    # 2.13*edge (phase-1 candidate in the far corner of the cover
+    # bbox), so their res0 dynamic cover is <= floor(2*2.13)+2 = 6
+    # cells per axis — the same 6x6 bound the ladder guarantees — and
+    # they go straight to the fine path below with no level
+    # computation. That keeps the ladder/histogram machinery on the
+    # hintless-only branch, which is EMPTY on any corpus dense enough
+    # that every probe sees a phase-1 candidate (the common case).
     ubs = (
-        rest.join(rest_ub, "osm_id")
+        pc.groupBy(*_POINT)
+        .agg((F.min(maxdist) + F.lit(_TIE_SLACK_M)).alias("ub"))
         .withColumn("lvl", _ladder_level(F.col("ub"), res0))
         .persist()
     )
@@ -332,56 +325,50 @@ def knn_fallback(
     # FINE path: every hinted straggler (6x6 cover bound proved above)
     # plus hintless ones whose ladder level is res0. Either path is
     # exact at any level. The fine path covers explode at res0 and
-    # join the SAME b-side projection/key as phase 1, so the build
-    # side needs no extra enumeration and the exchange is reusable.
+    # join the SAME cached build side as phase 1, so the build side
+    # needs no extra enumeration and the exchange is reusable.
     fine = hinted.unionByName(
         ubs.filter(F.col("lvl") == F.lit(res0)).drop("lvl")
+    ).withColumn(
+        "cell",
+        F.explode(X.cover_cells(F.col("ax"), F.col("ay"), res0, F.col("ub"))),
     )
-    cand_f = fine.select(
-        "osm_id", "ax", "ay", "ub",
-        F.explode(
-            X.cover_cells(F.col("ax"), F.col("ay"), res0, F.col("ub"))
-        ).alias("cell"),
-    ).join(b.select("cell", "overture_id", "bx", "by"), "cell").drop("cell")
+    cand_f = _cell_join(fine, b_cell, ["cell"], F.col("ub"))
     # COARSE path (rare: probes whose nearest is beyond 2*edge(res0)):
     # build side enumerates only the coarse ladder levels some probe
-    # actually chose — a LAZY broadcast hash semi-join on the level
-    # id. A driver-collected level list was tried and reverted: it
-    # made plan construction eager and froze the level set at build
-    # time, so a recomputation of the (non-deterministic-input) cache
-    # after executor loss could choose a level the frozen list lacks
-    # and silently drop the probe; the semi-join re-evaluates with
-    # whatever the data says at action time, always consistent.
+    # actually chose. A driver-collected level list was tried and
+    # reverted: it made plan construction eager and froze the level
+    # set at build time, so a recomputation of the
+    # (non-deterministic-input) cache after executor loss could choose
+    # a level the frozen list lacks and silently drop the probe; the
+    # lazy level set re-evaluates with whatever the data says at
+    # action time, always consistent.
     coarse = ubs.filter(F.col("lvl") < F.lit(res0))
-    probe_c = coarse.select(
-        "osm_id", "ax", "ay", "ub", "lvl",
+    probe_c = coarse.withColumn(
+        "lcell",
         F.explode(
             X.cover_cells(F.col("ax"), F.col("ay"), F.col("lvl"), F.col("ub"))
-        ).alias("lcell"),
+        ),
     )
-    # build side = needed-levels x b0 via a broadcast cross join (the
-    # lazy replacement for explode(all levels) + semi-join, which
-    # streamed |b| x n_levels rows through the filter even in the
-    # common case where NO probe is coarse — this emits exactly
-    # |needed| x |b| rows, i.e. zero when the coarse set is empty,
-    # while staying lazy/consistent under cache recomputation; the
-    # driver-collected level list remains rejected, see above)
+    # build side = needed-levels x b via a broadcast cross join: it
+    # emits exactly |needed| x |b| rows, i.e. zero when the coarse set
+    # is empty, while staying lazy/consistent under cache
+    # recomputation
     needed = coarse.select("lvl").distinct()
     b_ladder = (
         F.broadcast(needed)
-        .crossJoin(b0)
+        .crossJoin(b)
         .select(
             "lvl", "overture_id", "bx", "by",
             X.cell_of(F.col("bx"), F.col("by"), F.col("lvl")).alias("lcell"),
         )
     )
-    cand_c = probe_c.join(b_ladder, ["lvl", "lcell"]).drop("lvl", "lcell")
-    cand2 = cand_f.unionByName(cand_c).withColumn(
-        "dist",
-        X.planar_distance(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")),
-    ).filter(F.col("dist") <= F.col("ub"))
-    done2 = _best_per_probe(cand2)
+    cand_c = _cell_join(probe_c, b_ladder, ["lvl", "lcell"], F.col("ub"))
+    cand2 = cand_f.unionByName(cand_c).select("osm_id", "overture_id", "dist")
 
-    return done1.unionByName(done2).select(
+    # one per-osm_id min over every point's answer: the phase-1 exits
+    # and the phase-2 candidates of all the id's other points
+    best = _best_per_probe(done1.unionByName(cand2), ["osm_id"])
+    return best.select(
         "osm_id", "overture_id", X.round1(F.col("dist")).alias("distance_m")
     )

@@ -94,8 +94,9 @@ def knn_spec(
     matches: pd.DataFrame,
 ) -> pd.DataFrame:
     """Spec for the kNN fallback (J8 — north-rule extension): for each
-    named layer_a row with ZERO matches, the single nearest layer_b
-    feature, ties broken by (distance, id)."""
+    named layer_a osm_id with ZERO matches, the single nearest layer_b
+    feature over all of the id's rows, ties broken by (rint(dist*1000),
+    id) — the oracle SQL's `PARTITION BY osm_id` rule."""
     a = layer_a[layer_a["name"].notna() & (layer_a["name"] != "")].reset_index(
         drop=True
     )
@@ -107,19 +108,18 @@ def knn_spec(
     by = geo.merc_y(b["lat"].to_numpy())
     b_ids = b["id"].to_numpy()
 
-    rows = []
-    for i in range(len(unmatched)):
+    best = {}  # osm_id -> (dk, id, dist), the min over the id's rows
+    for i, osm_id in enumerate(unmatched["osm_id"]):
         d = np.sqrt((ax[i] - bx) ** 2 + (ay[i] - by) ** 2)
         # tie-break (rint(dist*1000), id) — same rule as the engine
-        order = np.lexsort((b_ids, np.rint(d * 1000.0)))
-        j = order[0]
-        rows.append(
-            (
-                unmatched["osm_id"].iloc[i],
-                b_ids[j],
-                float(geo.round_half_even_1(d[j])),
-            )
-        )
+        j = np.lexsort((b_ids, np.rint(d * 1000.0)))[0]
+        cand = (np.rint(d[j] * 1000.0), b_ids[j], d[j])
+        if osm_id not in best or cand < best[osm_id]:
+            best[osm_id] = cand
+    rows = [
+        (osm_id, bid, float(geo.round_half_even_1(dist)))
+        for osm_id, (_, bid, dist) in best.items()
+    ]
     return (
         pd.DataFrame(rows, columns=["osm_id", "overture_id", "distance_m"])
         .sort_values(["osm_id"])

@@ -62,9 +62,7 @@ class TestKnn:
             caches: list = []
             try:
                 got = (
-                    knn_fallback(
-                        sa, sb, m, res0=res0, coarse_res=12, caches=caches
-                    )
+                    knn_fallback(sa, sb, m, res0=res0, caches=caches)
                     .toPandas()
                     .sort_values("osm_id")
                     .reset_index(drop=True)
@@ -422,16 +420,109 @@ class TestDedupKernels:
         assert got == pytest.approx(1 / np.sqrt(2), rel=1e-12)
 
 
+class TestKnnDuplicateIds:
+    """One osm_id at two points: the answer is the nearest over BOTH
+    points (the oracle's `PARTITION BY osm_id`), whichever phase each
+    point resolves in. p1 sits 1 m east of a res-16 cell centre and p2
+    20 cells east of it, so a build point 320 m west of p2 lies outside
+    p2's phase-1 cover (p2 is hintless) while one 400 m east of p1 is a
+    phase-1 hint beyond the exit radius."""
+
+    @staticmethod
+    def _case(spark, b_offsets):
+        """(layer_a, layer_b, pandas twins) for the two points and a
+        build point per (name, point index, x offset in metres)."""
+        import math
+
+        from overmatch_spark import expressions as X
+
+        def lonlat(x, y):
+            lon = x / X.R_MERC * 180.0 / math.pi
+            lat = (
+                (math.atan(math.exp(y / X.R_MERC)) * 2.0 - math.pi / 2.0)
+                * 180.0 / math.pi
+            )
+            return lon, lat
+
+        e = X.cell_edge_m(16)
+        cx = (32768 + 0.5) * e - X.ORIGIN_M
+        cy = X.ORIGIN_M - (32668 + 0.5) * e
+        pts = [(cx + 1.0, cy), (cx + 20 * e + 1.0, cy)]
+        a_pd = pd.DataFrame(
+            [("n/1", "x", None, *lonlat(*p)) for p in pts],
+            columns=["osm_id", "name", "housenumber", "lon", "lat"],
+        )
+        b_pd = pd.DataFrame(
+            [
+                (bid, "B", None, *lonlat(pts[i][0] + dx, pts[i][1]))
+                for bid, i, dx in b_offsets
+            ],
+            columns=["id", "name", "housenumber", "lon", "lat"],
+        )
+        a = spark.createDataFrame(
+            a_pd, "osm_id string, name string, housenumber string, "
+            "lon double, lat double",
+        )
+        b = spark.createDataFrame(
+            b_pd, "id string, name string, housenumber string, "
+            "lon double, lat double",
+        )
+        return a, b, a_pd, b_pd
+
+    @pytest.mark.parametrize(
+        "op,b_offsets,want",
+        [
+            # p1 hinted (400 m), p2 hintless (320 m): p2 wins
+            ("knn_fallback", [("b/1", 0, 400.0), ("b/2", 1, -320.0)],
+             ("b/2", 320.0)),
+            # the same input through the public wrapper
+            ("nearest_join", [("b/1", 0, 400.0), ("b/2", 1, -320.0)],
+             ("b/2", 320.0)),
+            # p1 exits in phase 1 (100 m), p2 is hintless: ONE row, p1's
+            ("knn_fallback", [("b/3", 0, 100.0), ("b/2", 1, -320.0)],
+             ("b/3", 100.0)),
+        ],
+        ids=["hinted_and_hintless", "nearest_join", "exit_and_hintless"],
+    )
+    def test_nearest_over_all_points_of_an_id(self, spark, op, b_offsets, want):
+        from overmatch_spark.operators.conflate import nearest_join
+        from overmatch_spark.operators.knn import knn_fallback, release_caches
+
+        a, b, a_pd, b_pd = self._case(spark, b_offsets)
+        empty = pd.DataFrame({"osm_id": []})
+        spec = knn_spec(a_pd, b_pd, empty)
+        assert list(spec.itertuples(index=False, name=None)) == [("n/1", *want)]
+        caches: list = []
+        try:
+            if op == "nearest_join":
+                out = nearest_join(a.select("osm_id", "lon", "lat"),
+                                   b.select("id", "lon", "lat"), caches=caches)
+                rows = [(r.a_id, r.b_id, r.distance_m) for r in out.collect()]
+            else:
+                out = knn_fallback(
+                    a, b, spark.createDataFrame(empty, "osm_id string"),
+                    caches=caches,
+                )
+                rows = [
+                    (r.osm_id, r.overture_id, r.distance_m)
+                    for r in out.collect()
+                ]
+        finally:
+            release_caches(caches)
+        assert rows == [("n/1", *want)]
+
+
 class TestKnnHistogramCap:
-    def test_histogram_budget_cap_is_output_invariant(self, spark):
+    def test_histogram_budget_cap_is_output_invariant(self, spark, monkeypatch):
         """Phase-2b broadcast guard: a build side spread over far more
         coarse cells than the histogram budget gets its broadcast
-        histogram capped to the max_hist_cells densest cells — any
+        histogram capped to the _MAX_HIST_CELLS densest cells — any
         non-empty subset of occupied cells yields valid (looser)
         upper bounds, so results match the numpy spec exactly."""
         import numpy as np
 
         from overmatch_spark import expressions as X
+        from overmatch_spark.operators import knn
         from overmatch_spark.operators.knn import knn_fallback, release_caches
         from overmatch_spark.spec import knn_spec
         from pyspark.sql import functions as F
@@ -468,16 +559,15 @@ class TestKnnHistogramCap:
             X.merc_x(F.col("lon")).alias("bx"), X.merc_y(F.col("lat")).alias("by")
         )
         occupied = b0.select(
-            X.cell_of(F.col("bx"), F.col("by"), 13).alias("c")
+            X.cell_of(F.col("bx"), F.col("by"), knn._COARSE_RES).alias("c")
         ).distinct().count()
         assert occupied > 500
 
+        monkeypatch.setattr(knn, "_MAX_HIST_CELLS", 500)
         caches: list = []
         try:
             got = (
-                knn_fallback(
-                    a, b, empty_matches, max_hist_cells=500, caches=caches
-                )
+                knn_fallback(a, b, empty_matches, caches=caches)
                 .toPandas()
                 .sort_values("osm_id")
                 .reset_index(drop=True)
@@ -1210,6 +1300,22 @@ class TestSimhashHamming:
         got = out.toPandas()
         assert dict(zip(got["doc_id"], got["cluster_id"])) == want
         assert got["survivor"].sum() == 1
+
+    def test_rounds_release_their_blocks(self, spark):
+        """Each round frees the previous round's checkpoint blocks
+        (DataFrame.unpersist() does nothing on a localCheckpointed
+        frame), so a 7-round call leaves at most two persisted RDDs,
+        not one per round until GC."""
+        from overmatch_spark.operators.dedup import dedup_clusters
+
+        persisted = spark.sparkContext._jsc.getPersistentRDDs
+        pairs = spark.createDataFrame(
+            self._permuted_chain(16), "id_a long, id_b long"
+        )
+        before = persisted().size()
+        out = dedup_clusters(pairs)
+        assert persisted().size() - before <= 2
+        assert out.count() == 16
 
     def test_unconverged_raises(self, spark):
         """A 16-node permuted chain needs 7 rounds: with max_iters=3
