@@ -27,11 +27,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "scripts"))
 
 from pyspark.sql import functions as F
-
-BENCH_TABLE = ("lineitem", None)  # key derived below
+from window_probe import CLEAN_MOPS, bracketed_runs, probe
 
 
 def run_noop(df) -> None:
@@ -55,9 +56,9 @@ _T0 = time.time()
 # ~5-6 min, but this box's contended windows inflate single runs 3-5x
 # (measured: one unsalted-skew run 11.5s clean -> 62.8s contended),
 # which can push the total past the driver's wall limit and lose the
-# ENTIRE artifact. Past the soft budget, repeat runs and secondary
-# recall points are dropped (each drop is marked in the JSON) so the
-# primary numbers always land.
+# ENTIRE artifact. Past the soft budget, repeat runs and the scale
+# rows are dropped (each drop is marked in the JSON) so the primary
+# numbers always land.
 SOFT_BUDGET_S = int(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "400"))
 
 
@@ -66,7 +67,7 @@ def over_budget() -> bool:
 
 
 # Hard skip tier (r5): a catastrophically contended window pushed the
-# suite to elapsed ~536 s BEFORE the ANN sections; attempting their
+# suite to elapsed ~536 s before its last sections; attempting their
 # ~200 s contended cost from there hit the driver's wall limit and the
 # kill lost the ENTIRE artifact (stdout empty, receipts unwritten) --
 # the exact failure the soft budget was built to prevent. Past
@@ -80,44 +81,6 @@ def hard_over() -> bool:
     return time.time() - _T0 > HARD_SKIP_S
 
 
-_SCRIPTS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
-if _SCRIPTS_DIR not in sys.path:
-    sys.path.insert(0, _SCRIPTS_DIR)
-
-
-def probe_window() -> dict:
-    """Light host-window probe recorded alongside the numbers: this
-    shared box has contended windows (fsync 9->570 MB/s swings, ALU
-    ~14 contended vs ~28 clean Mops), and absolute wall times taken in
-    a bad window under-measure the engine. The probe makes the window
-    quality visible IN the artifact instead of asking the reader to
-    trust the timing conditions. One shared definition
-    (window_probe.probe) keeps fields comparable across artifacts."""
-    from window_probe import probe
-
-    return probe(mb=32)
-
-
-def bench_layers(spark, sf_dir, cpus):
-    """Conflation layers derived from lineitem (unique key =
-    l_orderkey*8 + l_linenumber), repartitioned because the driver's
-    parquet is a single split."""
-    from overmatch_spark import demo
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("k")
-    ).repartition(2 * cpus)
-    li.createOrReplaceTempView("bench_keys")
-    # persist the derived layers: the ~20-expression synthetic
-    # derivation is INPUT MATERIALIZATION, not workload — on a real
-    # deployment the layers are parquet tables and every query scans
-    # the same bytes. Caching makes each timed query start from the
-    # same materialized input instead of re-deriving it.
-    a = demo.spark_layer_a(spark, sf_dir, None, "k", df=li).persist()
-    b = demo.spark_layer_b(spark, sf_dir, None, "k", df=li).persist()
-    return a, b
-
-
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -126,39 +89,23 @@ def main():
     from overmatch_spark import demo
     from overmatch_spark import expressions as X
     from overmatch_spark.operators.conflate import conflate
-    from overmatch_spark.operators.knn import knn_fallback
+    from overmatch_spark.operators.knn import knn_fallback, release_caches
     from overmatch_spark.session import get_spark
-    from overmatch_spark.udfs import indel_sim
 
-    # advisory shuffle size lowered so AQE keeps parallelism on this
-    # (deliberately small) benchmark input; at production scale the
-    # default 64m advisory is correct and this override is dropped
-    # autoBroadcastJoinThreshold=-1: the bench layers are DERIVED from
-    # a tiny parquet file, so Catalyst's size estimates are off by
-    # ~100x and AQE mis-broadcasts a multi-million-row build side
-    # (measured: driver OOM at 4.8M rows, and heavy anti-scaling from
-    # single-threaded broadcast build + bandwidth-bound hash probes).
-    # Explicit broadcast()/hints are unaffected. On real tables with
-    # real stats the default threshold is correct.
-    spark = get_spark(
-        "overmatch-bench",
-        cpus=cpus,
-        extra_conf={
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        },
-    )
+    spark = get_spark("overmatch-bench", cpus=cpus, extra_conf=demo.BENCH_CONF)
     spark.sparkContext.setLogLevel("ERROR")
 
-    a, b = bench_layers(spark, sf_dir, cpus)
+    def layers(mult: int = 1):
+        # persist the derived layers: the ~20-expression synthetic
+        # derivation is INPUT MATERIALIZATION, not workload — on a real
+        # deployment the layers are parquet tables and every query
+        # scans the same bytes. Caching makes each timed query start
+        # from the same materialized input instead of re-deriving it.
+        a, b = demo.bench_layers(spark, sf_dir, cpus, mult=mult)
+        return a.persist(), b.persist()
 
-    # ---- warm-up: spin up the Python worker pool on every core ----
-    warm = (
-        spark.range(0, 20_000 * cpus, 1, 2 * cpus)
-        .withColumn("s", F.col("id").cast("string"))
-        .withColumn("w", indel_sim(F.col("s"), F.col("s")))
-    )
-    run_noop(warm)
+    a, b = layers()
+    demo.warm_workers(spark, cpus)
     n_features = a.count()
 
     times = {}
@@ -176,42 +123,18 @@ def main():
     # conflate is the HEADLINE cold number and it runs FIRST, so it
     # inherits whatever window the suite started in (measured: 6.24 s
     # fired into a dirty opening window vs 3.7 s clean — a 68% penalty
-    # on the number every artifact leads with). Same discipline as the
-    # knn section: per-run ALU brackets, a bounded pre-run wait on a
-    # dirty probe (a probe poll costs ~0.1 s vs a 3-6 s wasted run),
-    # and a 3rd run only when no clean-bracketed run has landed yet
-    # and budget allows. min-of-runs semantics unchanged.
-    from window_probe import alu_med
-
-    conf_runs: list = []
-    conf_brackets: list = []
-    conf_wait_s = 0.0
-    _CONF_WAIT_CAP_S = 40.0
-    pre = round(alu_med(), 2)
-    for i in range(3):
-        if pre <= 24 and not over_budget():
-            w0 = time.time()
-            while time.time() - w0 < _CONF_WAIT_CAP_S - conf_wait_s:
-                time.sleep(2)
-                pre = round(alu_med(), 2)
-                if pre > 24:
-                    break
-            conf_wait_s += time.time() - w0
-        t0 = time.time()
-        run_noop(conflate(a, b))
-        conf_runs.append(round(time.time() - t0, 3))
-        post = round(alu_med(), 2)
-        conf_brackets.append([pre, post])
-        if i >= 1 and (
-            any(p > 24 and q > 24 for p, q in conf_brackets)
-            or over_budget()
-        ):
-            break
-        pre = post
-    times["conflate"] = round(min(conf_runs), 3)
+    # on the number every artifact leads with). Per-run ALU brackets
+    # and a bounded wait on a dirty probe (a probe costs ~1.6 s vs a
+    # 3-6 s wasted run); a 3rd run only when run 2 was not clean and
+    # budget allows (BENCH/PROTOCOL.md §3).
+    conf_runs, conf_brackets, conf_wait_s = bracketed_runs(
+        lambda: run_noop(conflate(a, b)),
+        max_runs=3, min_runs=2, wait_cap_s=40, stop=over_budget,
+    )
+    times["conflate"] = min(conf_runs)
     _note(
         f"conflate: {times['conflate']}s (runs {conf_runs}, alu brackets "
-        f"{conf_brackets}, waited {round(conf_wait_s, 1)}s)"
+        f"{conf_brackets}, waited {conf_wait_s}s)"
     )
 
     # downstream queries reuse a cached match table, as a real
@@ -236,83 +159,40 @@ def main():
         .agg(F.count("*").alias("n")),
     )
 
-    from overmatch_spark.operators import knn as knn_mod
-
     # knn COLD and WARM reported separately (r3 advisory: best-of runs
     # sharing one caches list let Spark's CacheManager reuse run 1's
     # persisted intermediates, so the reported min was a warm partial
-    # re-execution, not a fresh run). Cold = caches released between
-    # runs, every run re-executes the full operator; warm = a repeat
-    # execution against the populated cache set (the steady state of a
-    # pipeline that calls the operator repeatedly in one session).
+    # re-execution, not a fresh run). Cold = each run first releases
+    # the previous run's caches, so it re-executes the full operator;
+    # warm = a repeat execution against the last cold run's cache set
+    # (the steady state of a pipeline that calls the operator
+    # repeatedly in one session).
     # res0=15 (vs the conservative default 16): phase-1 exit radius
     # doubles, cutting the straggler fraction on this corpus density —
     # measured ~15% faster cold (output invariant to res0, golden- and
     # property-tested, incl. the odd-res0 ladder floor)
     knn_kwargs = {"res0": 15}
-    # up to 3 cold runs, same per-run ALU-bracket discipline as the
-    # scale rows: run 1 pays one-time JIT/codegen (measured 17 s vs
-    # 11.3 s run 2 in one window) so at least 2 runs always execute;
-    # a post-JIT run bracketed by clean probes ends the loop, a third
-    # run only fires when run 2's window was dirty and budget allows
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
-    )
-    from window_probe import alu_med
+    caches: list = []
 
-    knn_cold_runs = []
-    # per-run ALU brackets [pre, post] — a run counts CLEAN only when
-    # both its own probes are in the clean band (BENCH/PROTOCOL.md).
-    # Bounded clean-window gate for the retry runs: a cold run fired
-    # into a dirty window is a wasted 15-60 s, a probe costs ~0.1 s —
-    # so before each post-JIT retry whose pre-run probe is dirty, poll
-    # (3 s interval, 45 s TOTAL cap across the section, budget-aware)
-    # for alu recovery and fire on the first clean probe. Waiting
-    # replaces dirty-run burn, it does not add to it: the cap is less
-    # than the cost of one contended run. The wait refreshes only the
-    # NEXT run's pre-run probe; the previous run's bracket (its own
-    # pre/post pair) is never rewritten.
-    knn_brackets: list = []
-    knn_wait_s = 0.0
-    _KNN_WAIT_CAP_S = 45.0
-    pre = round(alu_med(), 2)
-    for i in range(4):
-        if i >= 1 and pre <= 24 and not over_budget():
-            w0 = time.time()
-            while time.time() - w0 < _KNN_WAIT_CAP_S - knn_wait_s:
-                time.sleep(2)
-                pre = round(alu_med(), 2)
-                if pre > 24:
-                    break
-            knn_wait_s += time.time() - w0
-        caches: list = []
-        t0 = time.time()
+    def knn_cold():
+        release_caches(caches)
         run_noop(knn_fallback(a, b, m, caches=caches, **knn_kwargs))
-        knn_cold_runs.append(round(time.time() - t0, 3))
-        post = round(alu_med(), 2)
-        knn_brackets.append([pre, post])
-        if i == 3:
-            break  # caches stay for the warm twin
-        if i >= 1 and ((pre > 24 and post > 24) or over_budget()):
-            break
-        # a 4th run exists only to hunt a clean bracket in a flickering
-        # window; it needs early-section headroom (runs 1-3 already
-        # cost 30-120 s here when contended)
-        if i == 2 and time.time() - _T0 > 200:
-            break
-        knn_mod.release_caches(caches)  # next run is cold too
-        pre = post
+
+    # run 1 pays one-time JIT/codegen (measured 17 s vs 11.3 s run 2
+    # in one window), so at least 2 runs always execute
+    knn_cold_runs, knn_brackets, knn_wait_s = bracketed_runs(
+        knn_cold, max_runs=3, min_runs=2, wait_cap_s=45, stop=over_budget,
+    )
     times["knn"] = min(knn_cold_runs)
     _note(
         f"knn cold runs: {knn_cold_runs} (alu brackets {knn_brackets}, "
-        f"waited {round(knn_wait_s, 1)}s for clean windows)"
+        f"waited {knn_wait_s}s for clean windows)"
     )
     t0 = time.time()
-    # reuses run 2's caches: steady-state repeat execution
     run_noop(knn_fallback(a, b, m, caches=caches, **knn_kwargs))
     knn_warm = round(time.time() - t0, 3)
     _note(f"knn warm: {knn_warm}s")
-    knn_mod.release_caches(caches)
+    release_caches(caches)
 
     # LLM-pipeline representative: MinHash+LSH near-dup pairs over the
     # documents table (banded candidate generation + exact-Jaccard
@@ -358,9 +238,6 @@ def main():
     # scale rows: it is a primary north-rule receipt, and r5 measured a
     # contended window leaving it one-sample-per-side at the tail
     # (speedup 0.96 — meaningless) while 109 s went to 8x repeats.
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
-    )
     from bench_skew import skewed_layers
 
     from overmatch_spark.operators.conflate import detect_hot_cells
@@ -404,244 +281,51 @@ def main():
         _note(f"skew salted: {skew_salted}s")
         sk_a.unpersist(), sk_b.unpersist()
 
-    # ---- ANN recall@5 vs brute force (multi-probe closes the LSH
-    # recall cliff; VERDICT r1 #6) ----
-    from overmatch_spark.operators.ann import (
-        brute_force_topk,
-        ivf_topk,
-        lsh_topk,
-        multiprobe_topk,
-        reference_ivf_centroids,
-    )
-
-    if hard_over():
-        _note("ann sections skipped: past hard budget")
-        recall_lsh = recall_mp = recall_ivf = None
-        curve, pq_curve = {}, {}
-        curve_truncated = True
-        clustered_ann = {"skipped": "hard budget"}
-        ivfpq_clustered = {"skipped": "hard budget"}
-    else:
-        # the ANN receipts run over ~2k vectors: at the bench default
-        # of 2*cpus shuffle partitions every tiny stage schedules 64
-        # tasks of pure overhead, and the ~15-action block measured
-        # 180-307 s of the suite wall. Scoped to 8 partitions
-        # (restored below): measured 2x faster post-JIT with
-        # bit-identical recalls (the dial is physical only)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        probes = e.filter(F.col("vec_id") < 50)
-        truth = brute_force_topk(e, probes, "embedding", "vec_id", k=5).select(
-            "probe_id", "cand_id"
-        ).persist()
-        n_truth = truth.count()
-
-        def recall(df):
-            hit = df.select("probe_id", "cand_id").join(
-                truth, ["probe_id", "cand_id"], "left_semi"
-            ).count()
-            return round(hit / n_truth, 4)
-
-        recall_lsh = recall(lsh_topk(e, probes, "embedding", "vec_id", k=5))
-        recall_mp = recall(
-            multiprobe_topk(e, probes, "embedding", "vec_id", k=5, extra=2)
-        )
-        recall_ivf = recall(
-            ivf_topk(
-                e, probes, "embedding", "vec_id", reference_ivf_centroids(),
-                k=5, nprobe=2,
-            )
-        )
-        # recall/cost curve (VERDICT r2 #3): candidate volume is
-        # nprobe/k_lists of the corpus per probe; the driver embeddings
-        # are near-isotropic (recall ~ 1.4-2.4x scan fraction), so the
-        # documented >=0.8 dial is the k=64 quantizer at nprobe=32.
-        # Section order = receipt importance (r4 lesson: a contended
-        # window blew the budget and the guard dropped the ivfpq receipt,
-        # a verdict deliverable): primary dial point, then clustered +
-        # ivfpq, THEN the budget-gated secondary points.
-        c64 = reference_ivf_centroids(64)
-        curve = {
-            "ivf64_np32": {
-                "recall_at5": recall(
-                    ivf_topk(e, probes, "embedding", "vec_id", c64, k=5, nprobe=32)
-                ),
-                "scan_frac": round(32 / 64, 4),
-            }
-        }
-        curve_truncated = False  # sibling flag (r4 advisory: a bool entry
-        # inside the curve dict broke consumers iterating recall points)
-
-        # ---- ANN on CLUSTERED geometry (VERDICT r3 #4): the driver
-        # embeddings are near-isotropic, which provably bounds ANY
-        # list-pruning index to recall ~ scan fraction; the deterministic
-        # clustered view (ann.clustered_view — same vectors, shrunk to
-        # noise around 16 analytic centers) shows the dial's real value
-        # where real embedding corpora live: high recall at a small scan
-        # fraction ----
-        from overmatch_spark.operators.ann import (
-            clustered_centers,
-            clustered_view,
-            ivfpq_topk,
-            pq_topk,
-            reference_pq_codebooks,
-        )
-
-        ecv = e.select(
-            "vec_id",
-            clustered_view(
-                F.col("embedding").cast("array<double>"), F.col("vec_id")
-            ).alias("embedding"),
-        )
-        probes_c = ecv.filter(F.col("vec_id") < 50)
-        truth_c = brute_force_topk(ecv, probes_c, "embedding", "vec_id", k=5).select(
-            "probe_id", "cand_id"
-        ).persist()
-        n_truth_c = truth_c.count()
-        hits_c = (
-            ivf_topk(
-                ecv, probes_c, "embedding", "vec_id", clustered_centers(),
-                k=5, nprobe=1,
-            )
-            .select("probe_id", "cand_id")
-            .join(truth_c, ["probe_id", "cand_id"], "left_semi")
-            .count()
-        )
-        clustered_ann = {
-            "recall_at5": round(hits_c / n_truth_c, 4),
-            "scan_frac": round(1 / 16, 4),
-        }
-        # IVF+PQ composed (FAISS-IVFPQ shape): list pruning AND 64x code
-        # compression at once, exact re-rank on the shortlist. NOT
-        # budget-gated: it is a primary receipt (r4's guard dropped it)
-        # and costs one bounded nprobe=1 scan over 2k clustered vectors.
-        hits_ivfpq = (
-            ivfpq_topk(
-                ecv, probes_c, "embedding", "vec_id", clustered_centers(),
-                reference_pq_codebooks(), k=5, nprobe=1, shortlist=50,
-            )
-            .select("probe_id", "cand_id")
-            .join(truth_c, ["probe_id", "cand_id"], "left_semi")
-            .count()
-        )
-        ivfpq_clustered = {
-            "recall_at5": round(hits_ivfpq / n_truth_c, 4),
-            "scan_frac": round(1 / 16, 4),
-            "compression": "64x (32-bit PQ codes)",
-        }
-        truth_c.unpersist()
-
-        # ---- secondary IVF curve points (budget-gated) ----
-        for tag, cents, npb in [
-            ("ivf16_np4", None, 4), ("ivf16_np8", None, 8),
-            ("ivf64_np16", c64, 16), ("ivf64_np24", c64, 24),
-        ]:
-            if over_budget():
-                curve_truncated = True
-                break
-            cc = cents if cents is not None else reference_ivf_centroids()
-            curve[tag] = {
-                "recall_at5": recall(
-                    ivf_topk(e, probes, "embedding", "vec_id", cc, k=5, nprobe=npb)
-                ),
-                "scan_frac": round(npb / len(cc), 4),
-            }
-
-        # ---- PQ-ADC + exact re-rank: the memory-bounded retrieval stack
-        # (corpus rides as 32-bit codes, 64x compression). The re-rank
-        # shortlist FRACTION is the dial; the primary 10% point always
-        # runs, the 5% point is budget-gated ----
-        n_corpus = e.count()
-        pq_curve = {}
-        fracs = (0.10,) if over_budget() else (0.10, 0.05)
-        for frac in fracs:
-            sl = max(20, int(n_corpus * frac))
-            pq_curve[f"rerank_{int(frac * 100)}pct"] = {
-                "recall_at5": recall(
-                    pq_topk(
-                        e, probes, "embedding", "vec_id",
-                        reference_pq_codebooks(), k=5, shortlist=sl,
-                    )
-                ),
-                "shortlist": sl,
-            }
-    # restore the timing-row partitioning before the scale rows
-    spark.conf.set("spark.sql.shuffle.partitions", str(2 * cpus))
-    _note("ann sections done")
-
     # ---- scale rows: conflate-only at 8x and 32x features, per-run
     # window probes (VERDICT r3 #6: same discipline as the headline;
     # a run bracketed by clean probes ends the repeats early).
     # Deliberately LAST (r5): these are the most budget-hungry rows in
     # a contended window (3 runs hit 33-88 s each once), and they have
-    # a pinned builder-side record — so budget pressure should shed
-    # their repeats, never the ANN receipts that used to sit after
-    # them (the r4 guard dropped the ivfpq receipt that way) ----
+    # a pinned record (scripts/bench_scale32.py) — so budget pressure
+    # sheds their repeats first ----
     def scale_row(mult: int, runs_n: int):
-        li_m = (
-            spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-            .select(
-                (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("k0")
-            )
-            .withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))
-            .select((F.col("k0") * F.lit(mult) + F.col("rep")).alias("k"))
-            .repartition(2 * cpus)
-        )
-        # persist the derived layers — the SAME input-materialization
-        # rationale as the headline (bench_layers): on a real
-        # deployment these are parquet tables and every timed run
-        # scans the same bytes; deriving the ~20-expression synthetic
-        # input inside the timed window would measure the fixture, not
-        # the engine
-        am = demo.spark_layer_a(spark, sf_dir, None, "k", df=li_m).persist()
-        bm = demo.spark_layer_b(spark, sf_dir, None, "k", df=li_m).persist()
+        am, bm = layers(mult)
         am.count(), bm.count()
-        from window_probe import alu_med
-
-        runs = []
-        alus = [round(alu_med(), 2)]
-        for i in range(runs_n):
-            t0 = time.time()
-            run_noop(conflate(am, bm))
-            runs.append(round(time.time() - t0, 3))
-            alus.append(round(alu_med(), 2))
-            _note(f"scale {mult}x run: {runs[-1]}s "
-                  f"(alu {alus[-2]}->{alus[-1]})")
-            # a run bracketed by clean ALU probes IS the clean-window
-            # number — min-of-N exists to ride out contention bursts,
-            # not to re-measure a verified-clean run (r5 measured two
-            # post-clean repeats costing 109 s inside one burst)
-            if alus[-2] > 24 and alus[-1] > 24:
-                break
-            if over_budget():
-                break  # keep what we have; drop marked via runs list
+        runs, brackets, _ = bracketed_runs(
+            lambda: run_noop(conflate(am, bm)), max_runs=runs_n, stop=over_budget,
+        )
+        _note(f"scale {mult}x runs: {runs} (alu brackets {brackets})")
         am.unpersist(), bm.unpersist()
-        return runs, alus
+        return runs, brackets
 
-    probe_scale_before = probe_window()
+    # light host-window probes recorded alongside the scale rows: this
+    # shared box has contended windows (fsync 9->570 MB/s swings, ALU
+    # ~14 contended vs ~28 clean Mops), so the artifact shows the
+    # window quality instead of asking the reader to trust it
+    probe_scale_before = probe(mb=32)
     # 3 attempts: this host's contention bursts swing a single 8x run
     # 6s <-> 130s within a minute (measured); min-of-3 materially
-    # improves the odds one run lands clean, and the over_budget
-    # break keeps bad windows from eating the wall budget.
-    # HEADROOM GUARD (r5): the in-loop budget check can't preempt a
-    # run already in flight — one contended 8x run measured 128.8 s
-    # after starting at elapsed 392 s (just under the soft budget),
-    # landing the suite at 542 s against the driver's ~590 s wall.
-    # Never START the row without the headroom to absorb the bad
-    # case; the pinned builder-side record covers the receipt either
-    # way, and the skip is marked in both artifacts.
+    # improves the odds one run lands clean, and the budget stop keeps
+    # bad windows from eating the wall budget.
+    # HEADROOM GUARD (r5): the budget stop can't preempt a run already
+    # in flight — one contended 8x run measured 128.8 s after starting
+    # at elapsed 392 s (just under the soft budget), landing the suite
+    # at 542 s against a ~590 s wall limit. Never START the row
+    # without the headroom to absorb the bad case; the pinned
+    # record covers the receipt either way, and the skip
+    # is marked in both artifacts.
     headroom = SOFT_BUDGET_S - (time.time() - _T0)
     if headroom > 120 or (
-        probe_scale_before["alu_mops"] > 24 and headroom > 60
+        probe_scale_before["alu_mops"] > CLEAN_MOPS and headroom > 60
     ):
-        runs8, alus8 = scale_row(8, 3)
+        runs8, brackets8 = scale_row(8, 3)
     else:
         _note(f"8x row skipped: headroom {round(headroom, 1)}s, "
               f"alu {probe_scale_before['alu_mops']}")
-        runs8, alus8 = [], [probe_scale_before["alu_mops"]]
+        runs8, brackets8 = [], []
     n8 = n_features * 8
     t8 = min(runs8) if runs8 else None
-    probe_scale_after = probe_window()
+    probe_scale_after = probe(mb=32)
     # optional in-run 32x row (19.2M features): ONLY with ample budget
     # headroom and a probe-verified clean window — a contended window
     # measured 260 s for this row, which would blow the driver's wall
@@ -649,20 +333,17 @@ def main():
     # min-of-3 record (21.3 s = 901k f/s, scripts/bench_scale32.py)
     # lives in BENCH/BASELINE.md either way.
     row32 = None
-    # (threshold raised 180->280 when the scale rows moved behind the
-    # ANN receipts: ~100 s of recall receipts now precede this point)
-    if time.time() - _T0 < 280 and probe_scale_after["alu_mops"] > 24:
+    if time.time() - _T0 < 280 and probe_scale_after["alu_mops"] > CLEAN_MOPS:
         _note("clean window + headroom: attempting in-run 32x row")
-        runs32, alus32 = scale_row(32, 1)
-        if runs32:
-            row32 = {
-                "features": n_features * 32,
-                "sec": min(runs32),
-                "fps": round(n_features * 32 / min(runs32), 1),
-                "runs": runs32,
-                "alu_probes": alus32,
-            }
-            _note(f"32x row: {row32}")
+        runs32, brackets32 = scale_row(32, 1)
+        row32 = {
+            "features": n_features * 32,
+            "sec": min(runs32),
+            "fps": round(n_features * 32 / min(runs32), 1),
+            "runs": runs32,
+            "alu_brackets": brackets32,
+        }
+        _note(f"32x row: {row32}")
 
     elapsed = round(time.time() - _T0, 1)
     # scale_rows: throughput must RISE with input size (no super-linear
@@ -678,8 +359,9 @@ def main():
              "runs": runs8}
             if t8 is not None
             else {"features": n8,
-                  "skipped": "no budget headroom (pinned record: "
-                             "scripts/bench_scale32.py)"}
+                  "skipped": f"no budget headroom ({round(headroom)} s, "
+                             f"alu {probe_scale_before['alu_mops']}; pinned "
+                             "record: scripts/bench_scale32.py)"}
         ),
     ]
     if row32 is not None:
@@ -696,15 +378,17 @@ def main():
         ),
         "conflate_cold_runs": conf_runs,
         "conflate_alu_brackets": conf_brackets,
-        "conflate_wait_s": round(conf_wait_s, 1),
+        "conflate_wait_s": conf_wait_s,
         "knn_cold_runs": knn_cold_runs,
         "knn_alu_brackets": knn_brackets,
-        "knn_wait_s": round(knn_wait_s, 1),
+        "knn_wait_s": knn_wait_s,
         "knn_res0": knn_kwargs["res0"],
         "minhash_cold_runs": mh_runs,
         "conflate_8x_runs": runs8,
-        "conflate_8x_alu_probes": alus8,
-        "conflate_32x": row32 or "skipped (needs headroom + alu>24 window)",
+        "conflate_8x_alu_brackets": brackets8,
+        "conflate_32x": row32 or (
+            f"skipped (needs headroom + alu>{CLEAN_MOPS} window)"
+        ),
         "pinned_scale_record": (
             "19.2M features 21.3s = 901k f/s, min-of-3 probe-gated "
             "(scripts/bench_scale32.py, BENCH/BASELINE.md r4)"
@@ -712,64 +396,19 @@ def main():
         "scale_probe_before": probe_scale_before,
         "scale_probe_after": probe_scale_after,
         "skew_skipped_hard_budget": skew_salted is None,
-        "ann_skipped_hard_budget": not curve,
         "skew_hot_cells": len(hot),
         "skew_detect_sec": skew_detect,
         "skew_unsalted_sec": skew_unsalted,
         "skew_salted_sec": skew_salted,
-        "ann_recall_at5_lsh": recall_lsh,
-        "ann_recall_at5_multiprobe": recall_mp,
-        "ann_recall_at5_ivf_nprobe2": recall_ivf,
-        "ann_recall_curve": curve,
-        "ann_recall_curve_truncated": curve_truncated,
-        "ann_dial_recall80": (
-            "ivf64 nprobe=32 (recall@5 ~0.88, scans 50% of lists)"
-        ),
-        "ann_pq_recall_curve": pq_curve,
-        "ann_pq_note": (
-            "pq_topk: 4-bit/subvector codes (64x compression), ADC "
-            "shortlist + exact cosine re-rank; shortlist fraction is "
-            "the recall dial (isotropic corpus bounds ADC signal like "
-            "every pruning index here); flat PQ scans all codes per "
-            "probe batch — large probe sets belong on ivfpq_topk"
-        ),
-        "ann_clustered_ivf16_np1": clustered_ann,
-        "ann_clustered_ivfpq_np1": ivfpq_clustered,
-        "ann_clustered_note": (
-            "same ivf_topk operator over the deterministic clustered "
-            "view (ann.clustered_view): recall@5 at 6.25% scan — the "
-            "isotropic driver embeddings bound any pruning index to "
-            "recall ~ scan fraction, clustered geometry is where the "
-            "IVF dial pays"
-        ),
         "elapsed_s": elapsed,
         "soft_budget_s": SOFT_BUDGET_S,
     }
     receipts_rel = "BENCH/bench_receipts_latest.json"
-    receipts_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), receipts_rel
-    )
+    receipts_path = os.path.join(_REPO, receipts_rel)
     os.makedirs(os.path.dirname(receipts_path), exist_ok=True)
     with open(receipts_path, "w") as f:
         json.dump(receipts, f, indent=1)
     _note("receipts: " + json.dumps(receipts))
-
-    # compact recall summary (recall@5 values only; scan fractions and
-    # notes are in the receipts file)
-    ann_compact = {
-        "lsh": recall_lsh,
-        "multiprobe": recall_mp,
-        "ivf16_np2": recall_ivf,
-        **{tag: pt["recall_at5"] for tag, pt in curve.items()},
-        **{
-            "pq_" + tag.replace("rerank_", "").replace("pct", ""): pt[
-                "recall_at5"
-            ]
-            for tag, pt in pq_curve.items()
-        },
-        "clustered_ivf16_np1": clustered_ann.get("recall_at5"),
-        "clustered_ivfpq_np1": ivfpq_clustered.get("recall_at5"),
-    }
 
     # ---- compact core: ONE parse-safe stdout line, kept well under
     # any plausible tail buffer (~1 KB) ----
@@ -807,8 +446,6 @@ def main():
                     if skew_salted
                     else {"skipped": "hard budget"}
                 ),
-                "ann_recall_at5": ann_compact,
-                "ann_curve_truncated": curve_truncated,
                 "probe_alu_mops": {
                     "before_8x": probe_scale_before["alu_mops"],
                     "after_8x": probe_scale_after["alu_mops"],

@@ -28,14 +28,17 @@ import os
 import subprocess
 import sys
 
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
+
+from window_probe import CLEAN_MOPS, probe  # noqa: E402
+
 EXPLODE = int(os.environ.get("SCALING_EXPLODE", "8"))  # 8 -> 4.8M features
 
 WORKER = r"""
-import json, os, sys, time, zipfile
+import json, os, sys, zipfile
 sys.path.insert(0, os.environ["REPO"])
 sys.path.insert(0, os.path.join(os.environ["REPO"], "scripts"))
-from window_probe import alu_med
-from pyspark.sql import functions as F
+from window_probe import CLEAN_MOPS, bracketed_runs
 
 from overmatch_spark import demo
 from overmatch_spark.session import get_spark
@@ -70,61 +73,32 @@ if mode == "cluster":
     spark.sparkContext.addPyFile(zpath)
 
 from overmatch_spark.operators.conflate import conflate
-from overmatch_spark.udfs import indel_sim
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 a, b = demo.bench_layers(spark, sf_dir, cpus,
                          mult=int(os.environ["SCALING_EXPLODE"]))
-warm = (spark.range(0, 20000 * cpus, 1, 2 * cpus)
-        .withColumn("s", F.col("id").cast("string"))
-        .withColumn("w", indel_sim(F.col("s"), F.col("s"))))
-warm.write.format("noop").mode("overwrite").save()
+demo.warm_workers(spark, cpus)
 conflate(a, b).write.format("noop").mode("overwrite").save()  # warm run
 n = a.count()
-# per-run ALU brackets (same discipline as bench.py's scale rows): a
-# run counts as CLEAN only when the probes immediately before and
-# after it are both in the clean band — contention bursts on this box
-# are shorter than a 3-run side, so one end-of-side probe misgates
-# runs that individually executed clean.
-# Two window-economy rules (r5, same pattern as bench.py's knn gate):
-#   - bounded wait: before a retry whose pre-run probe is dirty, poll
-#     (3 s interval, capped per side) for recovery instead of burning
-#     a 45-60 s run that can never count; a wait refreshes only the
-#     NEXT run's pre-probe, never an earlier run's bracket
-#   - early exit: the side's number is its best clean-bracketed run
-#     (BENCH/PROTOCOL.md §3), so once one lands the remaining runs
-#     only spend the window the OTHER side still needs
+# per-run ALU brackets (BENCH/PROTOCOL.md §3): a run counts as CLEAN
+# only when the probes immediately before and after it are both clean
+# — contention bursts on this box are shorter than a 3-run side, so
+# one end-of-side probe misgates runs that individually executed
+# clean. A bounded wait (capped per side) replaces a dirty retry, and
+# the side ends after its first clean run: its number is its best
+# clean run, and the runs saved leave window for the other side.
 runs_n = int(os.environ.get("SCALING_RUNS", "3"))
-wait_cap = float(os.environ.get("SCALING_WAIT_CAP_S", "60"))
-runs, brackets = [], []
-wait_s = 0.0
-early_exit = False
-pre = round(alu_med(), 2)
-for i in range(runs_n):
-    if i >= 1 and pre <= 24:
-        w0 = time.time()
-        while time.time() - w0 < wait_cap - wait_s:
-            time.sleep(2)
-            pre = round(alu_med(), 2)
-            if pre > 24:
-                break
-        wait_s += time.time() - w0
-    t0 = time.time()
-    conflate(a, b).write.format("noop").mode("overwrite").save()
-    runs.append(round(time.time() - t0, 2))
-    post = round(alu_med(), 2)
-    brackets.append([pre, post])
-    if pre > 24 and post > 24 and i < runs_n - 1:
-        early_exit = True
-        break
-    pre = post
+runs, brackets, wait_s = bracketed_runs(
+    lambda: conflate(a, b).write.format("noop").mode("overwrite").save(),
+    max_runs=runs_n,
+    wait_cap_s=float(os.environ.get("SCALING_WAIT_CAP_S", "60")),
+)
 best = min(runs)
-clean_runs = [runs[i] for i in range(len(runs))
-              if brackets[i][0] > 24 and brackets[i][1] > 24]
+clean_runs = [r for r, br in zip(runs, brackets) if min(br) > CLEAN_MOPS]
 print("RESULT " + json.dumps({"level": level, "cores": cpus, "features": n,
                               "runs": runs, "alu_brackets": brackets,
-                              "wait_s": round(wait_s, 1),
-                              "early_exit": early_exit,
+                              "wait_s": wait_s,
+                              "early_exit": len(runs) < runs_n,
                               "clean_runs": clean_runs, "sec": best,
                               "clean_sec": min(clean_runs) if clean_runs else None,
                               "throughput": round(n / best, 1)}))
@@ -132,19 +106,10 @@ spark.stop()
 """
 
 
-def _probe() -> dict:
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts")
-    )
-    from window_probe import probe
-
-    return probe(mb=32)
-
-
 def run_level(mode: str, level: int, runs_n: int = 3) -> dict:
     env = dict(os.environ, REPO=os.path.dirname(os.path.abspath(__file__)),
                SCALING_EXPLODE=str(EXPLODE), SCALING_RUNS=str(runs_n))
-    probe_before = _probe()
+    probe_before = probe(mb=32)
     out = subprocess.run(
         [sys.executable, "-c", WORKER, mode, str(level)],
         capture_output=True, text=True, env=env, timeout=1200,
@@ -156,15 +121,14 @@ def run_level(mode: str, level: int, runs_n: int = 3) -> dict:
     # per-level probes: a scaling RATIO is only meaningful when both
     # levels ran in comparable windows — make that visible in the row
     r["probe_before"] = probe_before
-    r["probe_after"] = _probe()
+    r["probe_after"] = probe(mb=32)
     return r
 
 
 def _clean(p: dict) -> bool:
-    """The absolute-time window gate (BENCH/PROTOCOL.md §1): clean
-    single-core ALU on this box is 26-31 Mops, heavy contention
-    13-21; a scaling ratio only counts when BOTH sides ran clean."""
-    return p["alu_mops"] > 24
+    """The absolute-time window gate (BENCH/PROTOCOL.md §1): a scaling
+    ratio only counts when BOTH sides ran clean."""
+    return p["alu_mops"] > CLEAN_MOPS
 
 
 def run_pair(mode: str, levels: tuple[int, int]):
@@ -208,7 +172,7 @@ def run_pair(mode: str, levels: tuple[int, int]):
 
 def retry_loop(mode: str, levels: tuple[int, int], max_minutes: float):
     """VERDICT r4 #4: automate the by-hand discipline — poll the
-    window probe until clean (alu > 24), fire both levels
+    window probe until clean (alu > CLEAN_MOPS), fire both levels
     back-to-back inside that window, abort (keeping probes) when it
     degrades mid-run, and retry until a clean >= 0.8 row lands or the
     time budget runs out. Every attempt (clean or aborted) is
@@ -220,10 +184,11 @@ def retry_loop(mode: str, levels: tuple[int, int], max_minutes: float):
     deadline = _t.time() + 60 * max_minutes
     attempt = 0
     while _t.time() < deadline:
-        p = _probe()
+        p = probe(mb=32)
         if not _clean(p):
             print(
-                f"window contended (alu {p['alu_mops']} Mops, need >24); "
+                f"window contended (alu {p['alu_mops']} Mops, need "
+                f">{CLEAN_MOPS}); "
                 "sleeping 45s", flush=True,
             )
             _t.sleep(45)

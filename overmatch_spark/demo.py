@@ -1,7 +1,7 @@
 """Demo spatial layers derived from the driver's TPC-H-ish tables
 (TESTDATA.md), used by __spark_entry__.py, and the lineitem-keyed
-benchmark layers plus session conf the scale scripts share
-(bench_layers, BENCH_CONF).
+benchmark layers, session conf and worker warm-up the benchmark
+scripts share (bench_layers, BENCH_CONF, warm_workers).
 
 The SAME derivation is written twice — once as Catalyst expressions
 (Spark) and once as SQL text (the DuckDB oracle) — and is designed so
@@ -208,6 +208,18 @@ def bench_layers(
         spark_layer_a(spark, sf_dir, None, "k", df=keys),
         spark_layer_b(spark, sf_dir, None, "k", df=keys),
     )
+
+
+def warm_workers(spark: SparkSession, cpus: int) -> None:
+    """Start the Python worker pool on every core before timing: one
+    indel_sim pass over 20,000 rows a core, through the noop sink.
+    Worker start-up is a one-time cluster cost, not workload."""
+    from overmatch_spark.udfs import indel_sim
+
+    s = F.col("id").cast("string")
+    spark.range(0, 20_000 * cpus, 1, 2 * cpus).select(
+        indel_sim(s, s)
+    ).write.format("noop").mode("overwrite").save()
 
 
 # ---------------------------------------------------------------------------

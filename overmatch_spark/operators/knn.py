@@ -105,15 +105,19 @@ def release_caches(caches: list) -> None:
 
 def _best_per_probe(cand: DataFrame, keys: list) -> DataFrame:
     """Exact min per group of `keys` with the engine's tie-break rule
-    (rint(dist*1000), overture_id)."""
+    (rint(dist*1000), overture_id); a group with only null-dist rows
+    (no candidate) gets a null overture_id and dist."""
     return (
         cand.groupBy(*keys)
         .agg(
             F.min(
-                F.struct(
-                    F.rint(F.col("dist") * F.lit(1000.0)).alias("dk"),
-                    F.col("overture_id").alias("overture_id"),
-                    F.col("dist").alias("dist"),
+                F.when(
+                    F.col("dist").isNotNull(),
+                    F.struct(
+                        F.rint(F.col("dist") * F.lit(1000.0)).alias("dk"),
+                        F.col("overture_id").alias("overture_id"),
+                        F.col("dist").alias("dist"),
+                    ),
                 )
             ).alias("best")
         )
@@ -177,21 +181,19 @@ def knn_fallback(
     session ends."""
     if caches is None:
         caches = []
-    # probes feed phase 1, the straggler anti-join, and phase 2 —
-    # persist (narrow: id + 2 doubles per unmatched row). The matched
-    # -id side is dropDuplicates'd: anti-join results ignore dup keys,
-    # and the dedup's partial (map-side) aggregate means the exchange
-    # the join needs anyway now carries only distinct ids (-35% of
-    # that shuffle on the bench corpus) — no extra exchange, the
-    # dedup's hash(osm_id) partitioning is exactly the join's.
+    # probes (narrow: id + 2 doubles), read by phase 1 only. The
+    # matched-id side is dropDuplicates'd: anti-join results ignore dup
+    # keys, and the dedup's partial (map-side) aggregate means the
+    # exchange the join needs anyway now carries only distinct ids
+    # (-35% of that shuffle on the bench corpus) — no extra exchange,
+    # the dedup's hash(osm_id) partitioning is exactly the join's.
     # Full-row dropDuplicates after the anti-join: duplicate input
     # rows (same id AND coords) contribute nothing — every downstream
     # consumer is a min — so collapsing them here shrinks the phase-1
     # cover explode, the joins, and the distance math by the
     # duplicate fraction (24% on the bench corpus). Exchange-free:
     # the anti-join leaves hash(osm_id) partitioning, which already
-    # clusters the point keys, so the dedup is a local aggregate and
-    # the cache keeps the osm_id partitioning.
+    # clusters the point keys, so the dedup is a local aggregate.
     probes = (
         layer_a.filter(F.col("name").isNotNull() & (F.col("name") != ""))
         .join(matches.select("osm_id").dropDuplicates(), "osm_id", "left_anti")
@@ -201,9 +203,7 @@ def knn_fallback(
             X.merc_y(F.col("lat")).alias("ay"),
         )
         .dropDuplicates(_POINT)
-        .persist()
     )
-    caches.append(probes)
     # ONE cached build table (scanned/derived once, reused by phase 1,
     # the coarse histogram, and the ladder join), hash-partitioned on
     # the res0 `cell` key at cache time: phase 1 AND the phase-2 fine
@@ -228,22 +228,22 @@ def knn_fallback(
     b_cell = b.select("cell", "overture_id", "bx", "by")
 
     # ---- phase 1: dynamic exact cover at radius edge/2 ----
-    # A plain join, not _cell_join's `dist <= radius` filter: the
-    # candidates beyond r1 are the stragglers' hints, so all stay.
+    # A plain left join, not _cell_join's `dist <= radius` filter: the
+    # candidates beyond r1 are the stragglers' hints, so all stay, and
+    # a point with no candidate keeps a null-dist row.
     r1 = X.cell_edge_m(res0) / 2.0
     probe1 = probes.withColumn(
         "cell",
         F.explode(X.cover_cells(F.col("ax"), F.col("ay"), res0, r1)),
     )
-    cand1 = probe1.join(b_cell, "cell").withColumn(
+    cand1 = probe1.join(b_cell, "cell", "left").withColumn(
         "dist",
         X.planar_distance(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")),
     )
-    # best1 feeds BOTH the provable-exit filter and the phase-2 hints;
-    # persist it (tiny: <= one row per probe point) so the phase-1
-    # join is not recomputed lazily for each consumer. Keyed on the
-    # point, it carries (ax, ay) for `hinted` without a join back to
-    # the probes.
+    # best1: ONE row per probe point, its nearest phase-1 candidate or
+    # null. It feeds the provable exit, the hints and `rest`; persist
+    # it (tiny) so the phase-1 join is not recomputed per consumer.
+    # Keyed on the point, it carries (ax, ay) into phase 2.
     best1 = _best_per_probe(cand1, _POINT).persist()
     caches.append(best1)
     exit1 = F.lit(r1 - _TIE_SLACK_M)
@@ -263,7 +263,7 @@ def knn_fallback(
     # aggregate, so the shuffle carries ONE row per probe point —
     # never the probe x cell product.
     # rest = probe points with NO phase-1 candidate at all
-    rest = probes.join(best1.select(*_POINT), _POINT, "left_anti")
+    rest = best1.filter(F.col("dist").isNull()).select(*_POINT)
     # Broadcast-bound guard: keep the _MAX_HIST_CELLS DENSEST occupied
     # cells (deterministic tie-break on the cell id). Correct for ANY
     # non-empty subset: every kept cell is occupied, so for each probe

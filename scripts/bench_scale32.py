@@ -19,16 +19,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F
-
-from window_probe import probe
+from window_probe import CLEAN_MOPS, probe
 
 
 def main():
     from overmatch_spark import demo
     from overmatch_spark.operators.conflate import conflate
     from overmatch_spark.session import get_spark
-    from overmatch_spark.udfs import indel_sim
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -41,12 +38,7 @@ def main():
     # not the synthetic 20-expression derivation
     a, b = demo.bench_layers(spark, sf_dir, cpus, mult=32)
     a, b = a.persist(), b.persist()
-    warm = (
-        spark.range(0, 20_000 * cpus, 1, 2 * cpus)
-        .withColumn("s", F.col("id").cast("string"))
-        .withColumn("w", indel_sim(F.col("s"), F.col("s")))
-    )
-    warm.write.format("noop").mode("overwrite").save()
+    demo.warm_workers(spark, cpus)
     n = a.count()
     b.count()
 
@@ -69,7 +61,7 @@ def main():
         "probe_before": probe_before,
         "probe_after": probe_after,
         "good_cpu_window": bool(
-            probe_before["alu_mops"] > 24 and probe_after["alu_mops"] > 24
+            min(probe_before["alu_mops"], probe_after["alu_mops"]) > CLEAN_MOPS
         ),
     }
     print(json.dumps(result))
@@ -82,7 +74,7 @@ Same conflation (J1-J5), lineitem keys x32 = {n:,} features,
 local[{cpus}]. Runs {runs} -> best {best} s
 ({result["throughput_features_per_sec"]:,} features/s). Probe before
 {probe_before} / after {probe_after}
-(clean window = alu > 24 Mops on both: {result["good_cpu_window"]}).
+(clean window = alu > {CLEAN_MOPS} Mops on both: {result["good_cpu_window"]}).
 
 Raw: `{json.dumps(result)}`
 """

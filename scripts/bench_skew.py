@@ -65,19 +65,13 @@ def main():
     from overmatch_spark import demo
     from overmatch_spark.operators.conflate import detect_hot_cells
     from overmatch_spark.session import get_spark
-    from overmatch_spark.udfs import indel_sim
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("skew-bench", cpus=cpus, extra_conf=demo.BENCH_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     a, b = skewed_layers(spark, sf_dir, cpus)
-    warm = (
-        spark.range(0, 20000 * cpus, 1, 2 * cpus)
-        .withColumn("s", F.col("id").cast("string"))
-        .withColumn("w", indel_sim(F.col("s"), F.col("s")))
-    )
-    warm.write.format("noop").mode("overwrite").save()
+    demo.warm_workers(spark, cpus)
 
     bb = b.withColumn("x", X.merc_x(F.col("lon"))).withColumn(
         "y", X.merc_y(F.col("lat"))

@@ -5,10 +5,11 @@ throughput swings 9 -> 570 MB/s and the memory-stream ceiling moves
 with it (see BENCH/BASELINE.md round-2 controls). Timing runs taken
 in a bad window under-measure scaling through no fault of the engine.
 
-Imported by bench.py, bench_scaling.py, scripts/bench_scale32.py and
-scripts/bench_video.py, which gate or annotate their timed runs with
-`probe()` / `alu_med()`. The repo benchmark (perfbench/) does not use
-it: it subtracts the hypervisor's steal share instead.
+Imported by bench.py, bench_scaling.py and scripts/bench_scale32.py,
+which annotate their rows with `probe()`; bench.py and
+bench_scaling.py time their repeated runs through `bracketed_runs()`.
+The repo benchmark (perfbench/) does not use it: it subtracts the
+hypervisor's steal share instead.
 
 Run directly (`python scripts/window_probe.py`), it prints one JSON
 line: fsync MB/s on /tmp, single-core ALU ops/s, and an 8-process
@@ -24,6 +25,11 @@ import tempfile
 import time
 
 import numpy as np
+
+# A window is clean when the median ALU probe reads above this many
+# Mops (clean on this host: 26-31, contended: 13-21; BENCH/PROTOCOL.md
+# §1).
+CLEAN_MOPS = 24
 
 
 def fsync_mbps(path: str = "/tmp", mb: int = 64) -> float:
@@ -66,6 +72,40 @@ def alu_med(n: int = 3, gap_s: float = 0.7) -> float:
     return vals[len(vals) // 2]
 
 
+def bracketed_runs(run, max_runs, min_runs=1, wait_cap_s=0.0, stop=lambda: False):
+    """Time `run()` up to `max_runs` times, each run bracketed by ALU
+    probes [pre, post]; a run is clean when both read above CLEAN_MOPS
+    (BENCH/PROTOCOL.md §3).
+
+    - Before a run whose pre probe is dirty, poll every 2 s until one
+      is clean. The waits of all runs together stop at `wait_cap_s`,
+      and no wait goes on once `stop()` is true. A wait refreshes only
+      the next run's pre probe.
+    - Once `min_runs` have run, the loop ends after a clean run or as
+      soon as `stop()` (a wall budget) is true.
+
+    Returns (runs, brackets, wait_s): each run's wall seconds, its
+    [pre, post] probes, and the total wait in seconds."""
+    runs, brackets, wait_s = [], [], 0.0
+    pre = round(alu_med(), 2)
+    for _ in range(max_runs):
+        w0 = time.time()
+        while (pre <= CLEAN_MOPS and not stop()
+               and wait_s + time.time() - w0 < wait_cap_s):
+            time.sleep(2)
+            pre = round(alu_med(), 2)
+        wait_s += time.time() - w0
+        t0 = time.time()
+        run()
+        runs.append(round(time.time() - t0, 3))
+        post = round(alu_med(), 2)
+        brackets.append([pre, post])
+        if len(runs) >= min_runs and (min(pre, post) > CLEAN_MOPS or stop()):
+            break
+        pre = post
+    return runs, brackets, round(wait_s, 1)
+
+
 def _stream_worker(q):
     a = np.empty(8 << 20, dtype=np.float64)
     b = np.random.default_rng(0).random(8 << 20)
@@ -96,8 +136,7 @@ def stream_eff(n_lo: int = 2, n_hi: int = 8) -> float:
 def probe(mb: int = 32) -> dict:
     """The light alu+fsync probe every bench artifact embeds — ONE
     definition so probe_before/probe_after fields stay comparable
-    across bench.py, bench_scaling.py, bench_scale32.py and
-    bench_video.py rows.
+    across bench.py, bench_scaling.py and bench_scale32.py rows.
     alu_mops is a median-of-3 as of r5-late (see alu_med): single
     samples are bimodal-flicker-prone on this host."""
     return {"alu_mops": alu_med(), "tmp_fsync_mbps": fsync_mbps(mb=mb)}
@@ -115,5 +154,5 @@ if __name__ == "__main__":
     out["good_window"] = bool(
         out["tmp_fsync_mbps"] > 150 and out["stream_eff_2to8"] > 0.70
     )
-    out["good_cpu_window"] = bool(out["good_window"] and out["alu_mops"] > 24)
+    out["good_cpu_window"] = bool(out["good_window"] and out["alu_mops"] > CLEAN_MOPS)
     print(json.dumps(out))

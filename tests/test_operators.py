@@ -77,14 +77,16 @@ class TestKnn:
             )
 
     def test_r6_cache_internals(self, spark, layers, golden):
-        """r6 optimization invariants on the persisted intermediates:
-        (a) duplicate input rows are collapsed in BOTH caches (full-row
-        dedup rides the existing exchanges — a per-osm_id min can never
-        see them), output unchanged vs the spec; (b) the ubs cache
-        holds ONLY hintless stragglers (hinted ones go straight to the
-        fine path), i.e. every ubs osm_id is absent from best1."""
+        """The three persisted intermediates (b, best1, ubs) over
+        duplicated input rows, output unchanged vs the spec: (a) the
+        build side b holds no duplicate rows; (b) best1 holds ONE row
+        per deduplicated probe point, a null dist where phase 1 found
+        no candidate; (c) ubs holds exactly best1's null-dist points,
+        the hintless stragglers (hinted ones go straight to the fine
+        path)."""
         from pyspark.sql import functions as F
 
+        from overmatch_spark import expressions as X
         from overmatch_spark.operators.conflate import conflate
         from overmatch_spark.operators.knn import knn_fallback, release_caches
 
@@ -95,6 +97,17 @@ class TestKnn:
         sb2 = sb.unionByName(sb)
         m = conflate(sa, sb)
         exp = knn_spec(*layers, golden)
+        point = ["osm_id", "ax", "ay"]
+        probes = (
+            sa2.filter(F.col("name").isNotNull() & (F.col("name") != ""))
+            .join(m.select("osm_id"), "osm_id", "left_anti")
+            .select(
+                "osm_id",
+                X.merc_x(F.col("lon")).alias("ax"),
+                X.merc_y(F.col("lat")).alias("ay"),
+            )
+            .distinct()
+        )
         caches: list = []
         try:
             got = (
@@ -109,17 +122,16 @@ class TestKnn:
                 exp[["osm_id", "overture_id", "distance_m"]],
                 check_exact=True,
             )
-            probes, b0, best1 = caches[0], caches[1], caches[2]
-            assert probes.count() == probes.distinct().count()
+            assert len(caches) == 3
+            b0, best1, ubs = caches
             assert b0.count() == b0.distinct().count()
-            if len(caches) > 3:
-                ubs = caches[3]
-                assert (
-                    ubs.join(
-                        best1.select("osm_id"), "osm_id", "left_semi"
-                    ).count()
-                    == 0
-                )
+            assert sorted(best1.select(*point).collect()) == sorted(
+                probes.collect()
+            )
+            hintless = best1.filter(F.col("dist").isNull()).select(*point)
+            assert sorted(ubs.select(*point).collect()) == sorted(
+                hintless.collect()
+            )
         finally:
             release_caches(caches)
 
@@ -1073,6 +1085,80 @@ class TestIvf:
         assert hit / n_truth >= 0.8, (
             f"IVFPQ clustered recall@5 {hit / n_truth:.3f} < 0.8"
         )
+
+
+# recall@5 of each ANN operator against brute force on the sf0.01
+# embeddings (500 vectors), probes vec_id < 50: the true top-5 pairs it
+# finds, out of 250. Every operator is deterministic, so each point is
+# pinned exactly. The isotropic corpus bounds any list-pruning index to
+# recall ~ scan fraction; the clustered view (ann.clustered_view) is
+# where one list of 16 already holds every neighbour.
+ANN_RECALL_HITS = [
+    ("lsh", False, lambda A, *a: A.lsh_topk(*a, k=5), 9),
+    ("multiprobe_extra2", False,
+     lambda A, *a: A.multiprobe_topk(*a, k=5, extra=2), 23),
+    *[
+        (f"ivf{k}_np{n}", False,
+         lambda A, *a, k=k, n=n: A.ivf_topk(
+             *a, A.reference_ivf_centroids(k), k=5, nprobe=n),
+         hits)
+        for k, n, hits in [(16, 2, 126), (16, 4, 160), (16, 8, 206),
+                           (64, 16, 233), (64, 24, 240), (64, 32, 244)]
+    ],
+    # PQ-ADC shortlist of 10% / 5% of the corpus, exact re-rank
+    ("pq_rerank10", False,
+     lambda A, *a: A.pq_topk(*a, A.reference_pq_codebooks(), k=5,
+                             shortlist=50), 183),
+    ("pq_rerank5", False,
+     lambda A, *a: A.pq_topk(*a, A.reference_pq_codebooks(), k=5,
+                             shortlist=25), 142),
+    ("clustered_ivf16_np1", True,
+     lambda A, *a: A.ivf_topk(*a, A.clustered_centers(), k=5, nprobe=1),
+     250),
+    ("clustered_ivfpq_np1", True,
+     lambda A, *a: A.ivfpq_topk(*a, A.clustered_centers(),
+                                A.reference_pq_codebooks(), k=5, nprobe=1,
+                                shortlist=50), 250),
+]
+
+
+class TestAnnRecall:
+    @pytest.fixture(scope="class")
+    def corpora(self, spark):
+        """{clustered: (corpus, probes, brute-force top-5 pairs)}."""
+        from pyspark.sql import functions as F
+
+        from overmatch_spark.operators.ann import brute_force_topk, clustered_view
+
+        e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+        ec = e.select(
+            "vec_id",
+            clustered_view(
+                F.col("embedding").cast("array<double>"), F.col("vec_id")
+            ).alias("embedding"),
+        )
+        out = {}
+        for clustered, corpus in ((False, e), (True, ec)):
+            probes = corpus.filter(F.col("vec_id") < 50)
+            truth = brute_force_topk(corpus, probes, "embedding", "vec_id", k=5)
+            out[clustered] = (
+                corpus, probes, {(r.probe_id, r.cand_id) for r in truth.collect()}
+            )
+        return out
+
+    @pytest.mark.parametrize(
+        "clustered,topk,hits",
+        [p[1:] for p in ANN_RECALL_HITS],
+        ids=[p[0] for p in ANN_RECALL_HITS],
+    )
+    def test_recall_at5_pinned(self, corpora, clustered, topk, hits):
+        from overmatch_spark.operators import ann
+
+        corpus, probes, truth = corpora[clustered]
+        assert len(truth) == 250
+        got = topk(ann, corpus, probes, "embedding", "vec_id")
+        found = {(r.probe_id, r.cand_id) for r in got.collect()}
+        assert len(found & truth) == hits
 
 
 class TestWinnowing:
