@@ -300,7 +300,7 @@ def attach_payload(matches: DataFrame, payload: DataFrame, key: str,
     read it back with ``io.read_bucketed`` — the join then reads the
     bucketed scan with NO Exchange above it, so only the narrow match
     side shuffles and the payload bytes never cross the network even
-    on the re-attach (plan-checked in scripts/audit_plans.py: one
+    on the re-attach (plan-checked in tests/test_plans.py: one
     exchange total, match side only). A plain (unbucketed) payload
     DataFrame still works; it just pays a payload-side shuffle."""
     return matches.join(

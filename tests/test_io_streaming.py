@@ -627,44 +627,6 @@ class TestStreamingIngest:
         assert got == want
         assert len(got) == 10  # one survivor per distinct text
 
-    def test_bucketed_join_skips_build_side_exchange(self, spark, tmp_path):
-        """A layer persisted bucketed on the cell key must join with
-        NO Exchange above its scan (the at-rest co-location contract
-        write_bucketed advertises), while the probe side still
-        shuffles — and the join result must equal the plain join."""
-        from overmatch_spark.operators.io import read_bucketed, write_bucketed
-
-        b = spark.range(0, 5000).select(
-            F.col("id").alias("bid"), (F.col("id") % 97).alias("cell"),
-            (F.col("id") * 7 % 1000).alias("payload"),
-        )
-        probes = spark.range(0, 800).select(
-            F.col("id").alias("pid"), (F.col("id") % 97).alias("cell")
-        )
-        table = "bucketed_layer_test"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        write_bucketed(
-            b, table, "cell", 8, str(tmp_path / "bucketed"), sort_col="cell"
-        )
-        try:
-            bb = read_bucketed(spark, table)
-            # merge hint: at test scale AQE would broadcast and bypass
-            # the exchange question entirely; at real scale the join
-            # IS a shuffle join and the bucket layout is what matters
-            joined = probes.join(bb.hint("merge"), "cell")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            # exactly one exchange: the probe side; none over the
-            # bucketed scan (count Exchange occurrences)
-            import re
-
-            n_exchange = len(re.findall(r"Exchange hashpartitioning", plan))
-            assert n_exchange == 1, plan
-            got = joined.count()
-            want = probes.join(b, "cell").count()
-            assert got == want > 0
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-
     def test_windowed_event_counts_batch_parity(self, spark):
         from overmatch_spark.streaming.ingest import windowed_event_counts
 

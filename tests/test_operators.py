@@ -11,16 +11,48 @@ from overmatch_spark.spec import conflate_spec, knn_spec
 
 N = 600
 
-# Dedup operators built without any Spark job.
+# Operators built without any Spark job (TestLazyConstruction builds
+# each over poisoned inputs).
+LAZY_SPATIAL = [
+    "conflate", "spatial_join", "nearest_join", "knn_fallback",
+    "attach_payload", "detect_hot_cells_df",
+]
+LAZY_TILES = [
+    "assign_tiles", "density_drop", "tile_table", "mvt_tiles", "raster_tiles",
+]
+LAZY_ANN = [
+    "brute_force_topk", "lsh_topk", "multiprobe_topk", "ivf_topk",
+    "pq_topk", "ivfpq_topk",
+]
 LAZY_DEDUP = [
     "exact_dedup", "minhash_lsh_pairs", "winnow_pairs",
     "simhash_hamming_pairs", "simhash_dedup", "hamming_pairs",
     "phash_near_dups", "embedding_near_dups",
 ]
-# Dedup operators that act on purpose: connected components run one
-# checkpoint action per round (dedup_corpus and
-# multimodal.dedup_images_by_content through dedup_clusters).
-DEDUP_ACTS = ["dedup_clusters", "dedup_corpus", "dedup_images_by_content"]
+LAZY_MULTIMODAL = [
+    "extract_features", "compute_phash", "resize_nearest", "sample_frames",
+    "audio_features",
+]
+# Operators that run Spark jobs on purpose, each with its reason.
+EAGER = {
+    "detect_hot_cells": "returns the hot cells as a driver-side list",
+    "assign_match_ids": "collects per-partition counts for the id "
+    "offsets, then freezes the ids with a localCheckpoint",
+    "auto_max_zoom": "returns a zoom level read from the feature count",
+    "write_pmtiles": "writes the archive from tiles it collects",
+    "matches_to_pmtiles": "writes the archive (write_pmtiles)",
+    "write_raster_pmtiles": "writes the archive (write_pmtiles)",
+    "dedup_clusters": "connected components run one checkpoint action "
+    "per round",
+    "dedup_corpus": "runs dedup_clusters",
+    "dedup_images_by_content": "runs dedup_clusters",
+    "ConflationJob": "the checkpoint: prepare and run write the layers "
+    "and each bucket's matches",
+    "PartitionedSeenStore": "merge_batch and compact rewrite the "
+    "touched buckets",
+    "run_with_error_budget": "materializes the result to count its "
+    "errors against the budget",
+}
 
 
 @pytest.fixture(scope="module")
@@ -593,9 +625,7 @@ class TestKnnHistogramCap:
 
 
 class TestLazyConstruction:
-    @pytest.mark.parametrize(
-        "op", ["conflate", "spatial_join", "nearest_join", "knn_fallback"]
-    )
+    @pytest.mark.parametrize("op", LAZY_SPATIAL)
     def test_construction_launches_no_jobs(self, spark, op):
         """Building a spatial operator must run ZERO driver-side
         actions (e.g. knn's old coarse-res sketch, an
@@ -604,7 +634,8 @@ class TestLazyConstruction:
         poisoned so that evaluating ANY row raises — construction
         succeeding proves no job touched the data."""
         from overmatch_spark.operators.conflate import (
-            conflate, nearest_join, spatial_join,
+            attach_payload, conflate, detect_hot_cells_df, nearest_join,
+            spatial_join,
         )
         from overmatch_spark.operators.knn import knn_fallback, release_caches
         from pyspark.sql import functions as F
@@ -638,6 +669,12 @@ class TestLazyConstruction:
             "spatial_join": lambda: spatial_join(a, b, 100.0),
             "nearest_join": lambda: nearest_join(a, b, caches=caches),
             "knn_fallback": lambda: knn_fallback(a, b, m, caches=caches),
+            "attach_payload": lambda: attach_payload(
+                a, b.select("id", F.col("lat").alias("b_lat")), "osm_id", "id"
+            ),
+            "detect_hot_cells_df": lambda: detect_hot_cells_df(
+                b.select(F.col("lon").alias("x"), F.col("lat").alias("y"))
+            ),
         }[op]
         jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
         try:
@@ -646,15 +683,11 @@ class TestLazyConstruction:
             assert set(jobs()) == before
             # the poison is real: materializing DOES evaluate it
             with pytest.raises(Exception, match="evaluated at construction"):
-                out.count()
+                out.collect()
         finally:
             release_caches(caches)
 
-    @pytest.mark.parametrize(
-        "op",
-        ["assign_tiles", "density_drop", "tile_table", "mvt_tiles",
-         "raster_tiles"],
-    )
+    @pytest.mark.parametrize("op", LAZY_TILES)
     def test_tile_construction_launches_no_jobs(self, spark, op):
         """The tile operators are lazy too: building any stage of the
         vector pyramid (or the raster one) over poisoned lon/lat runs
@@ -697,11 +730,7 @@ class TestLazyConstruction:
         with pytest.raises(Exception, match="evaluated at construction"):
             out.collect()
 
-    @pytest.mark.parametrize(
-        "op",
-        ["brute_force_topk", "lsh_topk", "multiprobe_topk", "ivf_topk",
-         "pq_topk", "ivfpq_topk"],
-    )
+    @pytest.mark.parametrize("op", LAZY_ANN)
     def test_ann_construction_launches_no_jobs(self, spark, op):
         """The six ANN top-k operators are lazy: building one over a
         poisoned embedding column runs no Spark job."""
@@ -772,30 +801,82 @@ class TestLazyConstruction:
         with pytest.raises(Exception, match="evaluated at construction"):
             out.collect()
 
-    def test_dedup_operators_lazy_or_allowlisted(self):
-        """Every public DataFrame operator of dedup.py is either built
-        without a job (test above) or named in DEDUP_ACTS."""
+    @pytest.mark.parametrize("op", LAZY_MULTIMODAL)
+    def test_multimodal_construction_launches_no_jobs(self, spark, op):
+        """The media operators are lazy: building one over a poisoned
+        bytes column runs no Spark job."""
+        from pyspark.sql import functions as F
+
+        from overmatch_spark.operators import multimodal as mm
+
+        poison = F.when(
+            F.col("id") >= 0, F.raise_error("evaluated at construction")
+        ).otherwise(F.lit(None)).cast("binary")
+        media = spark.range(4).select(
+            *[F.col("id").alias(f"{k}_id") for k in ("image", "video", "audio")],
+            poison.alias("bytes"),
+            F.lit(8).alias("w"), F.lit(8).alias("h"), F.lit("raw").alias("fmt"),
+        )
+        build = {
+            "extract_features": lambda: mm.extract_features(media),
+            "compute_phash": lambda: mm.compute_phash(media),
+            "resize_nearest": lambda: mm.resize_nearest(media, 4, 4),
+            "sample_frames": lambda: mm.sample_frames(media),
+            "audio_features": lambda: mm.audio_features(media),
+        }[op]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup
+        before = set(jobs())
+        out = build()  # must not raise
+        assert set(jobs()) == before
+        with pytest.raises(Exception, match="evaluated at construction"):
+            out.collect()
+
+    @pytest.mark.parametrize(
+        "module",
+        ["conflate", "knn", "tiles", "raster", "pmtiles", "ann", "dedup",
+         "multimodal", "checkpoint", "seen_store", "errors"],
+    )
+    def test_operators_lazy_or_allowlisted(self, module):
+        """Every public operator of the module that takes or returns a
+        DataFrame (a class: through a public method) is either built
+        without a job by a test above or named in EAGER with the
+        reason it acts."""
+        import importlib
         import inspect
 
-        from overmatch_spark.operators import dedup
+        mod = importlib.import_module(f"overmatch_spark.operators.{module}")
+
+        def on_frames(fn) -> bool:
+            sig = inspect.signature(fn)
+            return "DataFrame" in [
+                sig.return_annotation,
+                *(p.annotation for p in sig.parameters.values()),
+            ]
+
+        def functions(obj) -> list:  # a class's public methods
+            if inspect.isclass(obj):
+                return [f for n, f in vars(obj).items()
+                        if inspect.isfunction(f) and not n.startswith("_")]
+            return [obj] if inspect.isfunction(obj) else []
 
         ops = {
-            name
-            for name, fn in inspect.getmembers(dedup, inspect.isfunction)
-            if fn.__module__ == dedup.__name__
-            and not name.startswith("_")
-            and inspect.signature(fn).return_annotation == "DataFrame"
+            name for name, obj in vars(mod).items()
+            if not name.startswith("_")
+            and getattr(obj, "__module__", "") == mod.__name__
+            and any(on_frames(f) for f in functions(obj))
         }
-        assert ops <= set(LAZY_DEDUP) | set(DEDUP_ACTS)
-        assert not set(LAZY_DEDUP) & set(DEDUP_ACTS)
+        lazy = {*LAZY_SPATIAL, *LAZY_TILES, *LAZY_ANN, *LAZY_DEDUP,
+                *LAZY_MULTIMODAL}
+        assert ops and ops <= lazy | set(EAGER), ops - lazy - set(EAGER)
+        assert not lazy & set(EAGER)
 
 
 class TestMatchIds:
     def test_ids_equal_global_row_number(self, spark):
         """W7: the width-proportional two-phase plan must emit ids
         IDENTICAL to row_number() over a global (osm_id, overture_id)
-        sort — and its physical plan must contain no single-partition
-        Window (audited in scripts/audit_plans.py)."""
+        sort — and the jobs it runs contain no single-partition Window
+        (tests/test_plans.py)."""
         from pyspark.sql import Window, functions as F
 
         from overmatch_spark.operators.tiles import assign_match_ids
@@ -900,6 +981,8 @@ class TestIvf:
         carries the ivf predicate, so unprobed lists are never read."""
         from pyspark.sql import functions as F
 
+        from test_plans import executed
+
         from overmatch_spark.operators.ann import (
             ivf_assign,
             reference_ivf_centroids,
@@ -915,10 +998,10 @@ class TestIvf:
 
         at_rest = spark.read.parquet(path)
         probed = at_rest.filter(F.col("ivf").isin([1, 5]))
-        plan = probed._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "ivf" in plan.split(
-            "PartitionFilters"
-        )[1][:120]
+        (scan,) = [
+            n for n in executed(probed).walk() if "PartitionFilters" in n.meta
+        ]
+        assert "ivf#" in scan.meta["PartitionFilters"]
         # pruning is semantic, not just cosmetic: the filtered read
         # returns exactly the rows of those lists
         want = corpus.filter(F.col("ivf").isin([1, 5])).count()

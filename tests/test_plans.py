@@ -1,0 +1,448 @@
+"""Physical-plan properties of the engine's operators, checked on the
+plan Spark actually ran.
+
+`executed(df)` collects a frame, then walks its final executed plan:
+adaptive plans are unwrapped to the plan AQE settled on, query stages
+to the plan they ran, and a cached relation's plan is walked once,
+under its first scan (a cache read k times would otherwise count its
+joins k times). Checked here: parquet pushdown and codegen; one Arrow
+UDF node, above the cell join and its distance predicate; shuffles
+that carry keys and ids but no payload (near-dup self-joins, ADC
+codes, bucketed re-attach); bounded knn nested loops and pure-JVM
+spatial joins; one exchange per raster pyramid; one scan per tile
+assignment; and match ids assigned without a Window.
+
+The module runs under demo.BENCH_CONF. It turns size-based broadcasts
+off, so the joins that shuffle at scale shuffle here too (explicit
+broadcast() hints still apply), and the conflate join strategy seen
+here is the one the bench runs.
+"""
+
+from __future__ import annotations
+
+import re
+from collections import Counter
+from dataclasses import dataclass, field
+
+import pytest
+from pyspark.sql import functions as F
+
+from overmatch_spark import demo
+
+SF = "/root/testdata/sf0.01"
+
+
+@dataclass(eq=False)
+class Node:
+    name: str  # nodeName(), e.g. "ShuffledHashJoin"
+    desc: str  # simpleString, e.g. "Exchange hashpartitioning(cell#3L, 8), ..."
+    cols: list[str]  # output column names
+    # a file scan's metadata (PushedFilters, ReadSchema, Bucketed, ...);
+    # an in-memory scan's {"cache": id of the cached relation}
+    meta: dict[str, str]
+    kids: list[Node] = field(default_factory=list)
+
+    def walk(self):
+        yield self
+        for k in self.kids:
+            yield from k.walk()
+
+    def named(self, name: str) -> list[Node]:
+        return [n for n in self.walk() if n.name == name]
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def executed(df) -> Node:
+    """Collect `df` and return its final executed plan as a Node tree."""
+    df.collect()
+    jvm = df.sparkSession.sparkContext._jvm
+    file_scan = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.DataSourceScanExec"
+    )
+    walked = set()
+
+    def node(p) -> Node:
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return node(p.executedPlan())
+        if name.endswith("QueryStage"):
+            return node(p.plan())
+        kids, meta = _seq(p.children()), {}
+        if file_scan.isInstance(p):
+            it = p.metadata().iterator()
+            while it.hasNext():
+                kv = it.next()
+                meta[kv._1()] = kv._2()
+        elif name == "InMemoryTableScan":
+            rel = p.relation()
+            meta["cache"] = jvm.System.identityHashCode(rel.cacheBuilder())
+            if meta["cache"] not in walked:
+                walked.add(meta["cache"])
+                kids.append(rel.cachedPlan())
+        cols = [a.name() for a in _seq(p.output())]
+        return Node(name, p.simpleString(1000), cols, meta, [node(k) for k in kids])
+
+    return node(df._jdf.queryExecution().executedPlan())
+
+
+def _python(n: Node) -> bool:
+    """A node that runs Python: ArrowEvalPython, FlatMapGroupsInPandas, ..."""
+    return any(s in n.name for s in ("Python", "Pandas", "Arrow"))
+
+
+def _hash_keys(n: Node) -> list[str] | None:
+    """The columns an Exchange hash-partitions on, else None."""
+    m = re.match(r"Exchange hashpartitioning\((.*), \d+\)", n.desc)
+    return [c.split("#")[0] for c in m.group(1).split(", ")] if m else None
+
+
+@pytest.fixture(scope="module", autouse=True)
+def bench_conf(spark):
+    old = {k: spark.conf.get(k, None) for k in demo.BENCH_CONF}
+    for k, v in demo.BENCH_CONF.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in old.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.fixture(scope="module")
+def layers(spark):
+    return demo.spark_layer_a(spark, SF), demo.spark_layer_b(spark, SF)
+
+
+# --- parquet scan: pushdown and codegen ---
+
+@pytest.fixture(scope="module")
+def scan(spark):
+    return executed(
+        spark.read.parquet(f"{SF}/customer.parquet")
+        .filter(F.col("c_custkey") < 100)
+        .select("c_custkey", "c_name")
+    )
+
+
+def _file_scan(plan: Node) -> Node:
+    (s,) = [n for n in plan.walk() if "ReadSchema" in n.meta]
+    return s
+
+
+def test_scan_pushes_the_filter_into_parquet(scan):
+    assert "LessThan(c_custkey,100)" in _file_scan(scan).meta["PushedFilters"]
+
+
+def test_scan_reads_only_the_selected_columns(scan):
+    read = _file_scan(scan).meta["ReadSchema"]
+    assert read == "struct<c_custkey:bigint,c_name:string>"
+
+
+def test_scan_filter_runs_in_whole_stage_codegen(scan):
+    stages = [n for n in scan.walk() if n.name.startswith("WholeStageCodegen")]
+    assert any(n.name == "Filter" for w in stages for n in w.walk())
+
+
+# --- conflate: one Arrow UDF, above the cell join ---
+
+@pytest.fixture(scope="module")
+def conflated(layers):
+    from overmatch_spark.operators.conflate import conflate
+
+    return executed(conflate(*layers))
+
+
+def test_conflate_evaluates_one_arrow_udf_node(conflated):
+    assert len(conflated.named("ArrowEvalPython")) == 1
+
+
+def test_conflate_udf_runs_above_the_cell_join(conflated):
+    (udf,) = conflated.named("ArrowEvalPython")
+    assert any(n.name.endswith("Join") for n in udf.walk())
+
+
+def test_conflate_distance_predicate_runs_below_the_udf(conflated):
+    """The `dist <= 100` predicate (a Filter, or the join condition
+    Catalyst folds it into) is applied below the UDF node, so the
+    name kernel only sees pairs within the radius."""
+    (udf,) = conflated.named("ArrowEvalPython")
+    below = list(udf.walk())
+    preds = [n for n in conflated.walk() if "<= 100.0" in n.desc]
+    above = [n.name for n in preds if n not in below]
+    assert preds and not above, above
+
+
+def test_conflate_cell_join_runs_as_shuffled_hash_join(conflated):
+    """Under demo.BENCH_CONF, AQE runs the cell join as a
+    ShuffledHashJoin: no sort on either side."""
+    (join,) = [n for n in conflated.walk() if n.name.endswith("Join")]
+    assert join.name == "ShuffledHashJoin" and "[cell#" in join.desc
+
+
+def test_conflate_honours_the_broadcast_hint(layers):
+    from overmatch_spark.operators.conflate import conflate
+
+    plan = executed(conflate(*layers, broadcast_b=True))
+    assert plan.named("BroadcastHashJoin") and plan.named("BroadcastExchange")
+
+
+# --- near-dup pair operators: the self-join shuffles keys and ids ---
+
+# operator: (its self-join keys, the value column it carries per side)
+PAIRS = {
+    "minhash_lsh_pairs": (["band", "key"], ()),
+    "winnow_pairs": (["fp"], ()),
+    "simhash_hamming_pairs": (["bi", "bv"], ("sig",)),
+    "embedding_near_dups": (["bucket"], ("v",)),
+}
+IDS = {"doc_id", "id_a", "id_b"}
+
+
+@pytest.fixture(scope="module")
+def pair_plan(spark):
+    """Executed plan of a pair operator, run once on first use."""
+    from overmatch_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    plans = {}
+
+    def plan(op: str) -> Node:
+        if op not in plans:
+            if op == "embedding_near_dups":
+                df = dedup.embedding_near_dups(emb, "embedding", "vec_id")
+            else:
+                df = getattr(dedup, op)(docs, "text", "doc_id")
+            plans[op] = executed(df)
+        return plans[op]
+
+    return plan
+
+
+def _band_exchanges(plan: Node) -> list[Node]:
+    return [
+        n for n in plan.walk()
+        if n.name in ("Exchange", "BroadcastExchange")
+        and {"band", "key"} <= set(n.cols)
+    ]
+
+
+def test_minhash_band_join_shuffles_on_the_band(pair_plan):
+    assert _band_exchanges(pair_plan("minhash_lsh_pairs"))
+
+
+def test_minhash_band_exchange_carries_no_shingles(pair_plan):
+    bands = _band_exchanges(pair_plan("minhash_lsh_pairs"))
+    shingles = [c for n in bands for c in n.cols if c.split("_")[0] == "sh"]
+    assert bands and not shingles, shingles
+
+
+@pytest.mark.parametrize("op", PAIRS)
+def test_pair_self_join_shuffles_only_keys_ids_and_carry(pair_plan, op):
+    keys, carry = PAIRS[op]
+    allowed = {*keys, *IDS, *carry, *(f"{c}_{s}" for c in carry for s in "ab")}
+    shuffled = [
+        set(n.cols) for n in pair_plan(op).named("Exchange")
+        if _hash_keys(n) == keys and IDS & set(n.cols)
+    ]
+    assert shuffled and all(cols <= allowed for cols in shuffled), shuffled
+
+
+# --- match ids: a range partition, no Window ---
+
+def test_match_ids_run_without_a_window(spark, layers):
+    """assign_match_ids collects its partition counts and returns a
+    localCheckpoint, so its own plan is a bare RDD scan. The check
+    reads the executions it ran instead: they range-partition on the
+    key, and none has a Window (a global row_number would funnel
+    every row through one task)."""
+    from perfbench.tracing import SparkStatus
+
+    from overmatch_spark.operators.conflate import conflate
+    from overmatch_spark.operators.tiles import assign_match_ids
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    status = SparkStatus(spark)
+    bus.waitUntilEmpty()
+    mark = status.watermark()
+    assign_match_ids(conflate(*layers))
+    bus.waitUntilEmpty()
+    nodes = [n for e in status.since(mark).executions for n in e.nodes]
+    assert not [n.desc for n in nodes if "Window" in n.name]
+    assert [n for n in nodes if "rangepartitioning(osm_id#" in n.desc]
+
+
+# --- knn: cached build table, bounded nested loops, no Python ---
+
+@pytest.fixture(scope="module")
+def knn(layers):
+    from overmatch_spark.operators.knn import knn_fallback, release_caches
+
+    a, b = layers
+    caches: list = []
+    try:
+        return executed(
+            knn_fallback(a, b, a.select("osm_id").limit(100), caches=caches)
+        )
+    finally:
+        release_caches(caches)
+
+
+def test_knn_reuses_one_cached_build_table_across_phases(knn):
+    scans = Counter(n.meta["cache"] for n in knn.named("InMemoryTableScan"))
+    assert scans and scans.most_common(1)[0][1] >= 3, scans
+
+
+def test_knn_nested_loops_are_only_the_bounded_prunes(knn):
+    """Each nested-loop join is one of two bounded shapes, which
+    broadcast the tiny side: the histogram bbox prune (xlo in its
+    output) builds right, the needed-levels ladder prune (lvl and
+    overture_id) builds left. AQE drops the ladder prune when no
+    probe picks a coarse level, so only one shape need be present."""
+    assert not [n.desc for n in knn.named("CartesianProduct")]
+    loops = knn.named("BroadcastNestedLoopJoin")
+    assert loops
+    for n in loops:
+        if "xlo" in n.cols:
+            shape = "BuildRight, Cross"
+        elif {"lvl", "overture_id"} <= set(n.cols):
+            shape = "BuildLeft, Cross"
+        else:
+            shape = "an unbounded shape"
+        assert n.desc.startswith(f"BroadcastNestedLoopJoin {shape}"), n.desc
+
+
+def test_knn_runs_no_python(knn):
+    assert not [n.name for n in knn.walk() if _python(n)]
+
+
+def test_spatial_join_is_a_pure_jvm_hash_equi_join(layers):
+    from overmatch_spark.operators.conflate import spatial_join
+
+    plan = executed(spatial_join(*layers, radius_m=120.0))
+    names = [n.name for n in plan.walk()]
+    assert {"SortMergeJoin", "ShuffledHashJoin"} & set(names)
+    assert not [
+        n for n in names if "NestedLoop" in n or n == "CartesianProduct"
+    ]
+    assert not [n.name for n in plan.walk() if _python(n)]
+
+
+# --- ANN: the ADC join streams codes, never raw vectors ---
+
+# operator: how its ADC join starts (pq broadcasts the probes' LUTs to
+# every code; ivfpq hash-joins them on the inverted-list id)
+ADC = {
+    "pq_topk": "BroadcastNestedLoopJoin ",
+    "ivfpq_topk": "BroadcastHashJoin [ivf#",
+}
+
+
+@pytest.mark.parametrize("op", ADC)
+def test_adc_join_streams_codes_not_vectors(spark, op):
+    """The ADC join is the one whose parent computes `adc`. It carries
+    codes and lookup tables only; raw vectors (cv) belong to the scan
+    that derives the codes and to the id-keyed re-rank join."""
+    from overmatch_spark.operators import ann
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    args = (emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id")
+    books = ann.reference_pq_codebooks()
+    df = {
+        "pq_topk": lambda: ann.pq_topk(*args, books, k=5, shortlist=20),
+        "ivfpq_topk": lambda: ann.ivfpq_topk(
+            *args, ann.reference_ivf_centroids(16), books, k=5, nprobe=2,
+            shortlist=20,
+        ),
+    }[op]()
+    plan = executed(df)
+    adc = [
+        k for n in plan.walk() if " AS adc#" in n.desc
+        for k in n.kids if k.name.endswith("Join")
+    ]
+    assert adc
+    for j in adc:
+        assert j.desc.startswith(ADC[op]), j.desc
+        assert {"codes", "lut"} <= set(j.cols) and "cv" not in j.cols, j.cols
+
+
+# --- tiles ---
+
+def test_raster_pyramid_is_one_exchange_and_one_python_node(layers):
+    from overmatch_spark.operators.raster import raster_tiles
+
+    plan = executed(raster_tiles(layers[1].select("lon", "lat"), zooms=(10, 12)))
+    exchanges = [_hash_keys(n) for n in plan.named("Exchange")]
+    assert exchanges == [["z", "x", "y"]]
+    assert len(plan.named("FlatMapGroupsInPandas")) == 1
+    assert not plan.named("CartesianProduct")
+
+
+def test_tile_assignment_over_two_zooms_scans_once(layers):
+    from overmatch_spark.operators.tiles import assign_tiles
+
+    b = layers[1]
+    plan = executed(
+        assign_tiles(
+            b.select(F.col("id").alias("match_id"), "lon", "lat"), zooms=(10, 12)
+        )
+    )
+    assert len([n for n in plan.walk() if n.name.startswith("Scan")]) == 1
+    assert len(plan.named("Generate")) == 1
+    assert not plan.named("Union")
+
+
+# --- bucketed tables: the bucketed side never shuffles ---
+
+@pytest.mark.parametrize("case", ["attach_payload", "cell_join"])
+def test_bucketed_side_joins_without_an_exchange(spark, layers, tmp_path, case):
+    """A table written with io.write_bucketed joins on its bucket key
+    with NO Exchange above its scan: only the other side shuffles, so
+    the bucketed side's payload never crosses the network, and the
+    rows equal the unbucketed join's. attach_payload re-attaches a
+    payload by id; cell_join joins probes to a layer bucketed on the
+    cell key."""
+    from overmatch_spark.operators import io
+    from overmatch_spark.operators.conflate import attach_payload
+
+    if case == "attach_payload":
+        b = layers[1]
+        table = b.select("id", F.sha2(F.col("name"), 256).alias("payload"))
+        key, sort_col = "id", None
+        side = b.select(F.col("id").alias("overture_id"))
+
+        def join(t):
+            return attach_payload(side, t, "overture_id", "id")
+    else:
+        table = spark.range(0, 5000).select(
+            F.col("id").alias("bid"), (F.col("id") % 97).alias("cell"),
+            (F.col("id") * 7 % 1000).alias("payload"),
+        )
+        key, sort_col = "cell", "cell"
+        side = spark.range(0, 800).select(
+            F.col("id").alias("pid"), (F.col("id") % 97).alias("cell")
+        )
+
+        def join(t):
+            return side.join(t, "cell")
+
+    name = f"bucketed_{case}"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    io.write_bucketed(table, name, key, 8, str(tmp_path / name), sort_col)
+    try:
+        joined = join(io.read_bucketed(spark, name))
+        plan = executed(joined)
+        exchanges = plan.named("Exchange")
+        assert len(exchanges) == 1, [n.desc for n in exchanges]
+        ex = exchanges[0]
+        assert "payload" not in ex.cols
+        assert not [n for n in ex.walk() if n.meta.get("Bucketed") == "true"]
+        assert [n for n in plan.walk() if n.meta.get("Bucketed") == "true"]
+        rows = Counter(joined.collect())
+        assert rows == Counter(join(table).collect()) and rows
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
