@@ -18,7 +18,9 @@ back by id. The operators differ only in key and verify:
   ivfpq_topk        `ivf`                                         ADC
 
 At scale the key is the corpus table's partition column, so probes
-prune partitions; only the probe side is ever broadcast.
+prune partitions; only the probe side is ever broadcast. Each constant
+table (hyperplanes, centroids, a PQ codebook) is one literal array in
+the plan, read by one higher-order expression.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from pyspark.sql import functions as F
 from overmatch_spark.operators.dedup import (
     cosine,
     embedding_bucket,
+    fold_sum,
     hyperplanes,
     plane_dots,
 )
@@ -131,8 +134,9 @@ def train_ivf_centroids(
     vectors: list[list[float]], k: int = 16, iters: int = 5
 ) -> list[list[float]]:
     """Deterministic Lloyd's k-means over a fixed training sample —
-    driver-side numpy, so the centroids become plan LITERALS on any
-    engine (the same discipline as dedup.hyperplanes). An IVF coarse
+    driver-side numpy, so the centroids are plan constants on any
+    engine: in Spark one literal array, read by one transform
+    (`_sqdists`, the same discipline as dedup.hyperplanes). An IVF coarse
     quantizer is a trained artifact reused across queries/partitions;
     sample-based training is the standard practice at corpus scale.
     Init = first k sample vectors (id order), fixed iteration count —
@@ -151,22 +155,19 @@ def train_ivf_centroids(
     return [[float(v) for v in row] for row in C]
 
 
-def _sqdist(vec: Column, centroid: list[float]) -> Column:
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            F.array(*[F.lit(float(c)) for c in centroid]),
-            lambda x, c: (x - c) * (x - c),
-        ),
-        F.lit(0.0),
-        lambda s, v: s + v,
+def _sqdists(vec: Column, table: list[list[float]]) -> Column:
+    """Squared distances from `vec` to each row of `table`: the table
+    is one literal array read by one transform."""
+    rows = F.lit([[float(x) for x in row] for row in table])
+    return F.transform(
+        rows, lambda c: fold_sum(F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)))
     )
 
 
 def ivf_assign(vec: Column, centroids: list[list[float]]) -> Column:
     """1-based id of the nearest centroid (ties -> lowest index, the
     same first-occurrence rule as DuckDB list_position)."""
-    dists = F.array(*[_sqdist(vec, c) for c in centroids])
+    dists = _sqdists(vec, centroids)
     return F.array_position(dists, F.array_min(dists)).cast("int")
 
 
@@ -175,13 +176,9 @@ def ivf_probe_lists(vec: Column, centroids: list[list[float]],
     """The nprobe nearest centroid ids for a probe vector (sorted by
     (distance, id) — engine-portable determinism)."""
     pairs = F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    _sqdist(vec, c).alias("d"), F.lit(j + 1).alias("j")
-                )
-                for j, c in enumerate(centroids)
-            ]
+        F.transform(
+            _sqdists(vec, centroids),
+            lambda d, i: F.struct(d.alias("d"), (i + 1).alias("j")),
         )
     )
     return F.transform(F.slice(pairs, 1, nprobe), lambda s: s["j"])
@@ -288,11 +285,9 @@ def multiprobe_buckets(vec: Column, planes: list[list[int]],
     extra=0 gives the base bucket alone."""
     base = embedding_bucket(vec, planes)
     margins = F.array_sort(
-        F.array(
-            *[
-                F.struct(F.abs(d).alias("m"), F.lit(j).alias("j"))
-                for j, d in enumerate(plane_dots(vec, planes))
-            ]
+        F.transform(
+            plane_dots(vec, planes),
+            lambda d, j: F.struct(F.abs(d).alias("m"), j.alias("j")),
         )
     )
     powers = F.array(*[F.lit(1 << kk).cast("long") for kk in range(len(planes))])
@@ -346,45 +341,35 @@ def reference_pq_codebooks():
     return PQ_CODEBOOKS
 
 
-def pq_encode(vec: Column, codebooks: list[list[list[float]]]) -> Column:
-    """Per-subvector nearest-codeword ids (1-based, ties -> lowest,
-    the same first-occurrence rule as ivf_assign / DuckDB
-    list_position). The stored representation of a corpus vector."""
-    dsub = len(codebooks[0][0])
-    codes = []
-    for j, cb in enumerate(codebooks):
-        sub = F.slice(vec, j * dsub + 1, dsub)
-        dists = F.array(*[_sqdist(sub, c) for c in cb])
-        codes.append(F.array_position(dists, F.array_min(dists)).cast("int"))
-    return F.array(*codes)
-
-
 def pq_lut(vec: Column, codebooks: list[list[list[float]]]) -> Column:
-    """Per-probe ADC lookup table: lut[j][c] = ||q_j - C_j[c]||^2.
-    Computed ONCE per probe (m x k* doubles), so the candidate join
-    only does m array lookups + a fixed-order sum per pair."""
+    """Per-probe ADC lookup table: lut[j][c] = ||q_j - C_j[c]||^2,
+    one `_sqdists` per subvector. Computed ONCE per probe (m x k*
+    doubles), so the candidate join only does m array lookups + a
+    fixed-order sum per pair."""
     dsub = len(codebooks[0][0])
     return F.array(
         *[
-            F.array(
-                *[_sqdist(F.slice(vec, j * dsub + 1, dsub), c) for c in cb]
-            )
+            _sqdists(F.slice(vec, j * dsub + 1, dsub), cb)
             for j, cb in enumerate(codebooks)
         ]
     )
 
 
-def pq_adc(codes: Column, lut: Column, m: int) -> Column:
+def pq_encode(vec: Column, codebooks: list[list[list[float]]]) -> Column:
+    """Per-subvector nearest-codeword ids: the argmin of each pq_lut
+    row (1-based, ties -> lowest, the same first-occurrence rule as
+    ivf_assign / DuckDB list_position). The stored representation of
+    a corpus vector."""
+    return F.transform(
+        pq_lut(vec, codebooks),
+        lambda d: F.array_position(d, F.array_min(d)).cast("int"),
+    )
+
+
+def pq_adc(codes: Column, lut: Column) -> Column:
     """Asymmetric PQ distance: sum_j lut[j][codes[j]] — a fixed-order
-    explicit sum so any engine reproduces the exact double."""
-    terms = [
-        F.element_at(F.element_at(lut, j + 1), F.element_at(codes, j + 1))
-        for j in range(m)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+    fold, so any engine reproduces the exact double."""
+    return fold_sum(F.zip_with(lut, codes, lambda row, c: F.element_at(row, c)))
 
 
 def _adc_topk(
@@ -412,7 +397,7 @@ def _adc_topk(
     if key is not None:
         luts = luts.withColumn(key, probe_key)
     scored = _candidates(coded, luts.drop("pv"), key).withColumn(
-        "adc", pq_adc(F.col("codes"), F.col("lut"), len(codebooks))
+        "adc", pq_adc(F.col("codes"), F.col("lut"))
     )
     short = _rank(scored, F.col("adc").asc(), shortlist).select(
         "probe_id", "cand_id"

@@ -4,7 +4,10 @@ Beyond the reference's own operator set (its dedup surface is only
 the anti-join resume, D1/J9), a 10^12-row corpus engine needs
 content dedup. All variants below are DataFrame combinators whose
 hashes are engine-portable (md5-derived 60-bit ints), so every one of
-them has an exact DuckDB oracle.
+them has an exact DuckDB oracle. Each constant table (minhash
+permutations, simhash bit masks, hyperplanes) is one literal array in
+the plan, read by one higher-order expression per signature, so plans
+do not grow with the number of constants.
 
 One pair core: each near-dup operator is per-doc signature keys ->
 `_self_pairs` (key self-join, id_a < id_b, one row per pair) -> its
@@ -130,8 +133,9 @@ P_MINHASH = 1_073_741_789
 
 
 def _minhash_perm_consts(num_hashes: int) -> list[tuple[int, int]]:
-    """Deterministic (a_j, b_j) permutation constants — md5-derived
-    plan literals, identical on any engine/host (a_j != 0)."""
+    """Deterministic (a_j, b_j) permutation constants, md5-derived and
+    identical on any engine/host (a_j != 0). Spark holds them as one
+    literal array of (a, b) structs, read by the one signature fold."""
     out = []
     for j in range(num_hashes):
         a = (
@@ -157,20 +161,35 @@ def minhash_token_hashes(sh: Column) -> Column:
 
 def minhash_signature_from_hashes(th: Column, num_hashes: int) -> Column:
     """Array of num_hashes minhash values from a token-hash array:
-    min over tokens of (a_j * h + b_j) mod P."""
+    min over tokens of (a_j * h + b_j) mod P, kept by one fold over the
+    tokens against the literal (a, b) array. The minima start null and
+    `least` skips nulls, as array_min does: no tokens -> all null."""
+    consts = F.array(
+        *[
+            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+            for a, b in _minhash_perm_consts(num_hashes)
+        ]
+    )
+    return F.aggregate(
+        F.coalesce(th, F.array().cast("array<bigint>")),
+        F.array_repeat(F.lit(None).cast("long"), num_hashes),
+        lambda acc, h: F.zip_with(
+            acc,
+            consts,
+            lambda m, c: F.least(m, (c["a"] * h + c["b"]) % F.lit(P_MINHASH)),
+        ),
+    )
 
-    def perm_min(a: int, b: int) -> Column:
-        # single-arg lambda: pyspark dispatches higher-order-function
-        # lambdas by parameter count, so constants must be closed
-        # over, not passed as defaulted parameters
-        return F.array_min(
-            F.transform(
-                th, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(P_MINHASH)
-            )
-        )
 
-    return F.array(
-        *[perm_min(a, b) for a, b in _minhash_perm_consts(num_hashes)]
+def band_keys(sig: Column, bands: int, rows_per_band: int) -> Column:
+    """The LSH band keys of a minhash signature: band b's key is its
+    rows_per_band values joined by "," (null values skipped)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.array_join(
+            F.slice(sig, b * rows_per_band + 1, rows_per_band).cast("array<string>"),
+            ",",
+        ),
     )
 
 
@@ -241,20 +260,9 @@ def minhash_lsh_pairs(
     # attach_payload discipline as conflate.py).
     banded = sig.select(
         "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col("sig")[b * rows_per_band + r].cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "key"),
+        F.posexplode(band_keys(F.col("sig"), bands, rows_per_band)).alias(
+            "band", "key"
+        ),
     )
     cand_ids = _self_pairs(banded, ["band", "key"])
 
@@ -419,24 +427,30 @@ SIMHASH_BITS = 60
 
 def simhash(sh: Column) -> Column:
     """60-bit simhash over a token array: bit k = sign of the sum of
-    (+1/-1) votes from each token's hash bit k."""
-    tok_h = F.transform(sh, lambda t: h60(t))
+    (+1/-1) votes from each token's hash bit k, all kept by one fold
+    over the token hashes against the literal mask array."""
+    masks = F.lit([1 << k for k in range(SIMHASH_BITS)]).cast("array<bigint>")
+    votes = F.aggregate(
+        F.transform(sh, lambda t: h60(t)),
+        F.array_repeat(F.lit(0).cast("long"), SIMHASH_BITS),
+        lambda acc, h: F.zip_with(
+            acc,
+            masks,
+            lambda v, m: v
+            + F.when(h.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1)),
+        ),
+    )
+    return _sign_bits(votes)
 
-    def bit_term(k: int) -> Column:
-        mask = F.lit(1 << k).cast("long")
-        vote = F.aggregate(
-            tok_h,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(h.bitwiseAND(mask) != 0, F.lit(1)).otherwise(F.lit(-1)),
-        )
-        return (vote > 0).cast("long") * mask
 
-    bits = [bit_term(k) for k in range(SIMHASH_BITS)]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+def _sign_bits(xs: Column) -> Column:
+    """The long whose bit j is xs[j] > 0, packed by one fold from the
+    high bit down; null if any xs[j] is null."""
+    return F.aggregate(
+        F.reverse(xs),
+        F.lit(0).cast("long"),
+        lambda s, x: s * 2 + (x > 0).cast("long"),
+    )
 
 
 def sql_token_hashes(sh: str) -> str:
@@ -694,9 +708,10 @@ def dedup_clusters(
 # ---------------------------------------------------------------------------
 
 def hyperplanes(num_planes: int, dim: int) -> list[list[int]]:
-    """Deterministic ±1 hyperplane components from md5 — computed
-    driver-side in plain Python, so they are literal plan constants on
-    ANY engine."""
+    """Deterministic ±1 hyperplane components from md5, computed
+    driver-side in plain Python, so they are plan constants on ANY
+    engine: in Spark one literal array, read by one transform
+    (plane_dots)."""
     out = []
     for j in range(num_planes):
         row = []
@@ -707,13 +722,14 @@ def hyperplanes(num_planes: int, dim: int) -> list[list[int]]:
     return out
 
 
+def fold_sum(xs: Column) -> Column:
+    """Left-fold sum of an array<double> from 0.0 (the fold order of
+    DuckDB's list_reduce, so oracles agree to the last ulp)."""
+    return F.aggregate(xs, F.lit(0.0), lambda s, v: s + v)
+
+
 def _dot(a: Column, b: Column) -> Column:
-    """Left-fold dot product of two array<double> columns (the fold
-    order matches DuckDB's list_reduce, so oracles agree to the last
-    ulp)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
-    )
+    return fold_sum(F.zip_with(a, b, lambda x, y: x * y))
 
 
 def _sql_dot(u: str, v: str) -> str:
@@ -732,9 +748,10 @@ def sql_cosine(a: str, b: str) -> str:
     return f"({_sql_dot(a, b)} / (sqrt({_sql_dot(a, a)}) * sqrt({_sql_dot(b, b)})))"
 
 
-def plane_dots(vec: Column, planes: list[list[int]]) -> list[Column]:
-    """Dot product of `vec` with each hyperplane."""
-    return [_dot(vec, F.array(*[F.lit(float(c)) for c in hp])) for hp in planes]
+def plane_dots(vec: Column, planes: list[list[int]]) -> Column:
+    """Array of the dot products of `vec` with each hyperplane."""
+    table = F.lit([[float(c) for c in hp] for hp in planes])
+    return F.transform(table, lambda hp: _dot(vec, hp))
 
 
 def sql_plane_dots(vec: str, planes: list[list[int]]) -> list[str]:
@@ -746,11 +763,7 @@ def sql_plane_dots(vec: str, planes: list[list[int]]) -> list[str]:
 
 def embedding_bucket(vec: Column, planes: list[list[int]]) -> Column:
     """LSH bucket id = sign bits of the hyperplane dot products."""
-    out = None
-    for j, dot in enumerate(plane_dots(vec, planes)):
-        term = (dot > 0).cast("long") * F.lit(1 << j).cast("long")
-        out = term if out is None else out + term
-    return out
+    return _sign_bits(plane_dots(vec, planes))
 
 
 def sql_embedding_bucket(vec: str, planes: list[list[int]]) -> str:

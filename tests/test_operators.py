@@ -464,6 +464,116 @@ class TestDedupKernels:
         assert got == pytest.approx(1 / np.sqrt(2), rel=1e-12)
 
 
+# Edge inputs of the signature expressions, with the values the
+# per-constant forms (one Column per bit, permutation, plane, centroid
+# or codeword) gave on them, pinned exactly.
+EDGE_TEXTS = [None, "", "  ", "word", "the quick brown fox jumps over the lazy dog"]
+EDGE_VECS = [
+    None,
+    [0.0] * 64,
+    [0.5] * 31 + [None] + [0.25] * 32,
+    [((i * 37) % 11 - 5) / 7.0 for i in range(64)],
+]
+_NONE16 = [None] * 16
+_SIGS = [
+    [161824339, 290372, 258428824, 53100047, 1048003973, 282541224,
+     515966918, 637636702, 26745616, 37779447, 717187712, 973108611,
+     110709014, 997149912, 692024681, 756699108],
+    [381588161, 859529998, 370470899, 947778105, 22617055, 695725657,
+     1022554232, 287090998, 61298556, 1041528280, 409888239, 295594973,
+     664849712, 316596455, 255138976, 63885067],
+    [136660241, 848846039, 15335477, 221513735, 966387797, 201562321,
+     1031837637, 662805003, 774564719, 867332402, 1020018768, 883926698,
+     1042570067, 962294963, 233019144, 1000190019],
+    [175044657, 35755205, 40255899, 174632112, 122721404, 56484342,
+     47700105, 303557279, 123426818, 16747811, 98194943, 444190655,
+     28125508, 92365259, 122225532, 77554402],
+]
+SIGNATURE_EDGES = {
+    "simhash": [
+        0, 955282973525019424, 160819926252864882, 884906229661199609,
+        629028886362963404,
+    ],
+    # null text: shingles [null] -> 16 nulls, not 16 starting values
+    "minhash_signature": [_NONE16, *_SIGS],
+    "band_keys": [
+        [""] * 8,
+        *[[f"{s[2 * b]},{s[2 * b + 1]}" for b in range(8)] for s in _SIGS],
+    ],
+    "plane_dots": [
+        [None] * 8,
+        [0.0] * 8,
+        [None] * 8,
+        [2.8571428571428577, -3.9999999999999982, -4.000000000000001,
+         1.7142857142857153, -0.28571428571428525, -4.0,
+         -5.428571428571428, -5.714285714285712],
+    ],
+    # null vector -> null bucket, not bucket 0
+    "embedding_bucket": [None, 0, None, 9],
+    "multiprobe_buckets": [[None] * 3, [0, 1, 2], [None] * 3, [9, 25, 1]],
+    "ivf_assign": [None, 9, None, 7],
+    "ivf_probe_lists": [[1, 2, 3, 4], [9, 4, 15, 7], [1, 2, 3, 4], [7, 12, 6, 13]],
+    "pq_encode": [
+        [None] * 8,
+        [2, 11, 16, 14, 13, 13, 7, 10],
+        [14, 15, 10, None, 14, 16, 11, 3],
+        [9, 12, 6, 10, 10, 10, 11, 12],
+    ],
+    # 8 x 16 doubles per row: the md5 of each row's repr
+    "pq_lut": [
+        "04f0bbdee6c2d794", "f8cf8f9fadfad8a2", "a5dd5b630c278bdc",
+        "f493db125e4044d3",
+    ],
+    "pq_adc": [None, 0.31340284901232135, None, 10.500525911818587],
+}
+
+
+class TestSignatureEdges:
+    @pytest.mark.parametrize("name", SIGNATURE_EDGES)
+    def test_signature_on_edge_inputs_is_pinned(self, spark, name):
+        """Nulls stay null: a minhash accumulator started at P, or sign
+        bits packed through when/otherwise, turns them into values."""
+        import hashlib
+
+        from pyspark.sql import functions as F
+
+        from overmatch_spark.operators import ann, dedup
+
+        books = ann.reference_pq_codebooks()
+        cents = ann.reference_ivf_centroids(16)
+        sh = dedup.shingles(F.col("text"))
+        sig = dedup.minhash_signature_from_hashes(dedup.minhash_token_hashes(sh), 16)
+        v = F.col("v")
+        expr = {
+            "simhash": lambda: dedup.simhash(sh),
+            "minhash_signature": lambda: sig,
+            "band_keys": lambda: dedup.band_keys(sig, 8, 2),
+            "plane_dots": lambda: dedup.plane_dots(v, dedup.hyperplanes(8, 64)),
+            "embedding_bucket": lambda: dedup.embedding_bucket(
+                v, dedup.hyperplanes(8, 64)
+            ),
+            "multiprobe_buckets": lambda: ann.multiprobe_buckets(
+                v, dedup.hyperplanes(6, 64), 2
+            ),
+            "ivf_assign": lambda: ann.ivf_assign(v, cents),
+            "ivf_probe_lists": lambda: ann.ivf_probe_lists(v, cents, 4),
+            "pq_encode": lambda: ann.pq_encode(v, books),
+            "pq_lut": lambda: ann.pq_lut(v, books),
+            "pq_adc": lambda: ann.pq_adc(
+                ann.pq_encode(v, books), ann.pq_lut(v, books)
+            ),
+        }[name]()
+        if name in ("simhash", "minhash_signature", "band_keys"):
+            rows, schema = EDGE_TEXTS, "i int, text string"
+        else:
+            rows, schema = EDGE_VECS, "i int, v array<double>"
+        df = spark.createDataFrame(list(enumerate(rows)), schema)
+        got = [r.s for r in df.select("i", expr.alias("s")).orderBy("i").collect()]
+        if name == "pq_lut":
+            got = [hashlib.md5(repr(g).encode()).hexdigest()[:16] for g in got]
+        assert got == SIGNATURE_EDGES[name]
+
+
 class TestKnnDuplicateIds:
     """One osm_id at two points: the answer is the nearest over BOTH
     points (the oracle's `PARTITION BY osm_id`), whichever phase each

@@ -10,7 +10,9 @@ UDF node, above the cell join and its distance predicate; shuffles
 that carry keys and ids but no payload (near-dup self-joins, ADC
 codes, bucketed re-attach); bounded knn nested loops and pure-JVM
 spatial joins; one exchange per raster pyramid; one scan per tile
-assignment; and match ids assigned without a Window.
+assignment; match ids assigned without a Window; and signature
+projections (simhash, minhash, PQ lookup table) whose size does not
+grow with their constant tables.
 
 The module runs under demo.BENCH_CONF. It turns size-based broadcasts
 off, so the joins that shuffle at scale shuffle here too (explicit
@@ -342,6 +344,15 @@ ADC = {
 }
 
 
+def _below_codegen(n: Node) -> Node:
+    """`n` with its codegen-stage wrappers skipped: a projection of
+    higher-order functions runs outside whole-stage codegen, so the
+    join it reads sits under a WholeStageCodegen and an InputAdapter."""
+    while n.name.startswith("WholeStageCodegen") or n.name == "InputAdapter":
+        (n,) = n.kids
+    return n
+
+
 @pytest.mark.parametrize("op", ADC)
 def test_adc_join_streams_codes_not_vectors(spark, op):
     """The ADC join is the one whose parent computes `adc`. It carries
@@ -362,12 +373,64 @@ def test_adc_join_streams_codes_not_vectors(spark, op):
     plan = executed(df)
     adc = [
         k for n in plan.walk() if " AS adc#" in n.desc
-        for k in n.kids if k.name.endswith("Join")
+        for k in map(_below_codegen, n.kids) if k.name.endswith("Join")
     ]
     assert adc
     for j in adc:
         assert j.desc.startswith(ADC[op]), j.desc
         assert {"codes", "lut"} <= set(j.cols) and "cv" not in j.cols, j.cols
+
+
+# --- signatures: one expression per constant table ---
+
+def _higher_order_nodes(df) -> int:
+    """Higher-order-function nodes (transform, aggregate, zip_with, ...)
+    in the expressions of `df`'s optimized plan; no job runs."""
+    jvm = df.sparkSession.sparkContext._jvm
+    hof = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.HigherOrderFunction"
+    )
+
+    def count(e) -> int:
+        return hof.isInstance(e) + sum(count(k) for k in _seq(e.children()))
+
+    def plan(p) -> int:
+        own = sum(count(e) for e in _seq(p.expressions()))
+        return own + sum(plan(k) for k in _seq(p.children()))
+
+    return plan(df._jdf.queryExecution().optimizedPlan())
+
+
+# signature: its expression over (text, v) with n constants, and two n
+SIGNATURES = {
+    "simhash": ((30, 60), lambda dedup, ann, n: dedup.simhash(
+        dedup.shingles(F.col("text")))),
+    "minhash": ((8, 16), lambda dedup, ann, n: dedup.minhash_signature_from_hashes(
+        dedup.minhash_token_hashes(dedup.shingles(F.col("text"))), n)),
+    "pq_lut": ((8, 16), lambda dedup, ann, n: ann.pq_lut(
+        F.col("v"), [cb[:n] for cb in ann.reference_pq_codebooks()])),
+}
+
+
+@pytest.mark.parametrize("sig", SIGNATURES)
+def test_signature_plan_does_not_grow_with_its_constants(spark, monkeypatch, sig):
+    """Each constant table (simhash bit masks, minhash permutations, PQ
+    codewords) is one literal array read by one expression, so the
+    projection holds as many higher-order functions for n constants as
+    for 2n. simhash reads its width from dedup.SIMHASH_BITS."""
+    from overmatch_spark.operators import ann, dedup
+
+    row = spark.range(1).select(
+        F.col("id").cast("string").alias("text"),
+        F.array_repeat(F.col("id").cast("double"), 64).alias("v"),
+    )
+    sizes, build = SIGNATURES[sig]
+    counts = []
+    for n in sizes:
+        if sig == "simhash":
+            monkeypatch.setattr(dedup, "SIMHASH_BITS", n)
+        counts.append(_higher_order_nodes(row.select(build(dedup, ann, n))))
+    assert counts[0] == counts[1] > 0, counts
 
 
 # --- tiles ---
