@@ -166,9 +166,14 @@ def _sqdists(vec: Column, table: list[list[float]]) -> Column:
 
 def ivf_assign(vec: Column, centroids: list[list[float]]) -> Column:
     """1-based id of the nearest centroid (ties -> lowest index, the
-    same first-occurrence rule as DuckDB list_position)."""
-    dists = _sqdists(vec, centroids)
-    return F.array_position(dists, F.array_min(dists)).cast("int")
+    same first-occurrence rule as DuckDB list_position). The
+    distances are bound once, as a lambda argument (as in pq_encode):
+    Spark does not share subexpressions that hold lambdas, so naming
+    them twice would compute them twice."""
+    return F.transform(
+        F.array(_sqdists(vec, centroids)),
+        lambda d: F.array_position(d, F.array_min(d)),
+    )[0].cast("int")
 
 
 def ivf_probe_lists(vec: Column, centroids: list[list[float]],

@@ -11,10 +11,13 @@ encoding runs DISTRIBUTED over the existing tile pyramid
 (`tiles.tile_table` output) via one `mapInPandas` pass — each
 feature's pixel in its tile comes from the tile assignment
 (`tiles.assign_tiles`, Catalyst), so the encoder does no tile math —
-and the single-file PMTiles v3 assembly streams tiles in tile-id order
-through the driver with `toLocalIterator` — the driver holds one
-tile blob plus the (16 B/tile) directory at a time, never the whole
-pyramid.  Only the S3 upload itself remains out of scope (network).
+and the single-file PMTiles v3 assembly streams tiles through the
+driver with `toLocalIterator` in whatever order they arrive: blobs go
+to a spool file, and the driver sorts its per-tile index by tile id
+before writing the archive in that order, so no Spark sort runs.  The
+driver holds one index tuple per tile plus one tile blob at a time,
+never the whole pyramid.  Only the S3 upload itself remains out of
+scope (network).
 
 Both formats are implemented from their public specifications:
 
@@ -496,50 +499,50 @@ def _assemble_archive(
     (tileid, z, x, y, data) — data bytes already tile-compressed (or
     self-compressed, e.g. PNG, with tile_compression=1/none).
 
-    Streams (tileid, blob) rows in tile-id order via
-    ``toLocalIterator`` — driver memory is one blob + the directory
-    (16 B/tile), not the pyramid.  Identical blobs are stored once
-    (spec content dedup; addressed tiles > tile contents).  Returns
-    the header summary for receipts/tests."""
-    enc = enc.orderBy("tileid")
-
-    entries: list[tuple[int, int, int, int]] = []  # id, off, len, runlen
-    seen: dict[bytes, tuple[int, int]] = {}
-    min_z, max_z = 99, -1
-    minx: dict[int, int] = {}
-    maxx: dict[int, int] = {}
-    miny: dict[int, int] = {}
-    maxy: dict[int, int] = {}
+    The driver orders the archive; Spark does not sort. Rows stream
+    in via ``toLocalIterator`` in any order: each distinct blob is
+    spooled once, each tile leaves one index tuple (tileid, spool
+    offset, length, z, x, y). The sorted index assigns data offsets
+    in tile-id order (a repeated blob points at its first copy: spec
+    content dedup, addressed tiles > tile contents), and the data
+    section copies the stored blobs from the spool in that order.
+    Driver memory: one index tuple per tile, one digest per distinct
+    blob and one blob at a time, never the pyramid. Returns the
+    header summary for receipts/tests."""
+    index: list[tuple[int, int, int, int, int, int]] = []
+    spooled: dict[bytes, int] = {}  # sha256 -> spool offset
     tmp = path + ".tiledata.tmp"
     # the spool must not survive ANY failure (task loss inside
     # toLocalIterator, directory-build errors) — multi-GB orphan
     # spools would otherwise accumulate on the driver disk
     try:
-        off = 0
-        with open(tmp, "wb") as td:
+        with open(tmp, "wb") as spool:
             for row in enc.toLocalIterator():
                 blob = bytes(row.data)
                 h = hashlib.sha256(blob).digest()
-                if h in seen:
-                    o, ln = seen[h]
-                else:
-                    o, ln = off, len(blob)
-                    td.write(blob)
-                    off += ln
-                    seen[h] = (o, ln)
-                entries.append((int(row.tileid), o, ln, 1))
-                z, x, y = int(row.z), int(row.x), int(row.y)
-                min_z, max_z = min(min_z, z), max(max_z, z)
-                minx[z] = min(minx.get(z, x), x)
-                maxx[z] = max(maxx.get(z, x), x)
-                miny[z] = min(miny.get(z, y), y)
-                maxy[z] = max(maxy.get(z, y), y)
-        if not entries:
+                if h not in spooled:
+                    spooled[h] = spool.tell()
+                    spool.write(blob)
+                index.append((int(row.tileid), spooled[h], len(blob),
+                              int(row.z), int(row.x), int(row.y)))
+        if not index:
             raise ValueError("empty tile pyramid — nothing to archive")
+        index.sort()
+        entries: list[tuple[int, int, int, int]] = []  # id, off, len, runlen
+        # spool offset -> (data offset, length), in tile-id order
+        placed: dict[int, tuple[int, int]] = {}
+        off = 0
+        for tid, so, ln, *_ in index:
+            if so not in placed:
+                placed[so] = (off, ln)
+                off += ln
+            entries.append((tid, placed[so][0], ln, 1))
 
         # geographic bounds from the max-zoom tile envelope
-        z = max_z
-        n = 1 << z
+        zs = [t[3] for t in index]
+        min_z, max_z = min(zs), max(zs)
+        xs, ys = zip(*(t[4:] for t in index if t[3] == max_z))
+        n = 1 << max_z
 
         def lon_of(tx: float) -> float:
             return tx / n * 360.0 - 180.0
@@ -547,8 +550,8 @@ def _assemble_archive(
         def lat_of(ty: float) -> float:
             return math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * ty / n))))
 
-        b_minlon, b_maxlon = lon_of(minx[z]), lon_of(maxx[z] + 1)
-        b_minlat, b_maxlat = lat_of(maxy[z] + 1), lat_of(miny[z])
+        b_minlon, b_maxlon = lon_of(min(xs)), lon_of(max(xs) + 1)
+        b_minlat, b_maxlat = lat_of(max(ys) + 1), lat_of(min(ys))
 
         root, leaves, n_leaves = _build_directories(entries)
         metadata = dict(metadata)
@@ -574,7 +577,7 @@ def _assemble_archive(
             off,
             len(entries),  # addressed tiles (run lengths are all 1)
             len(entries),  # tile entries
-            len(seen),  # tile contents (deduped blobs)
+            len(placed),  # tile contents (deduped blobs)
             1,  # clustered: written in ascending tileid order
             _GZIP,
             tile_compression,
@@ -594,16 +597,14 @@ def _assemble_archive(
             f.write(root)
             f.write(meta)
             f.write(leaves)
-            with open(tmp, "rb") as td:
-                while True:
-                    chunk = td.read(1 << 20)
-                    if not chunk:
-                        break
-                    f.write(chunk)
+            with open(tmp, "rb") as spool:
+                for so, (_, ln) in placed.items():
+                    spool.seek(so)
+                    f.write(spool.read(ln))
         return {
             "path": path,
             "tiles": len(entries),
-            "contents": len(seen),
+            "contents": len(placed),
             "leaf_dirs": n_leaves,
             "bytes": 127 + len(root) + len(meta) + len(leaves) + off,
             "min_zoom": min_z,
@@ -639,12 +640,8 @@ def matches_to_pmtiles(
     if zooms is None:
         zooms = tuple(range(10, auto_max_zoom(m) + 1, 2))
     ids = assign_match_ids(m, num_partitions=num_partitions)
-    t = assign_tiles(ids, zooms=zooms)
-    kept = density_drop(t, max_per_tile=max_per_tile)
-    pyr = tile_table(
-        kept, ids.select("match_id", "osm_id", "overture_id", "lon", "lat")
-    )
-    return write_pmtiles(pyr, path)
+    kept = density_drop(assign_tiles(ids, zooms=zooms), max_per_tile)
+    return write_pmtiles(tile_table(kept), path)
 
 
 class PMTilesReader:

@@ -7,7 +7,9 @@ gives each point its zoom, slippy tile and in-tile pixel in a single
 scan, for vector tiles (MVT extent 4096, `assign_tiles`) and raster
 tiles (256 px, operators/raster.py) alike. The density drop is a
 deterministic per-tile top-k, and the tile table is an ordinary
-DataFrame ready for any sink. Distribution: one shuffle on (z, x, y)
+DataFrame ready for any sink. Tile rows carry every column of their
+feature, so the table is built without a join. Distribution: one
+shuffle on (z, x, y), shared by the density drop and the tile table
 — exactly the partitioning a tile server wants.
 """
 
@@ -28,63 +30,36 @@ def assign_match_ids(matches: DataFrame,
 
     Width-proportional two-phase plan (NOT a global-sort Window, which
     funnels every row through ONE task): range-partition on the key,
-    sort within partitions, then add per-partition offsets computed
-    from a tiny per-partition count pass (the zipWithIndex pattern).
-    The local index comes from monotonically_increasing_id's low 33
-    bits — safe HERE because the layout is pinned: the partitioning is
-    range-based on the (unique) key, rows are sorted within each
-    partition, and the DataFrame is persisted (MEMORY_AND_DISK — an
-    evicted block spills, it is not recomputed) so the offset pass and
-    the id pass read the same physical partitions. On EXECUTOR LOSS a
-    lost block does recompute; a production job that must survive that
-    mid-flight replaces the persist with a reliable checkpoint of the
-    range-partitioned table. Output ids are identical to row_number()
-    over a global (osm_id, overture_id) sort (property-tested)."""
+    sort within partitions and pin that layout with ONE
+    localCheckpoint; a tiny per-partition count pass over the
+    checkpoint gives each partition its offset (the zipWithIndex
+    pattern), and the id is a narrow projection over the same
+    checkpoint: offset + the row's index in its partition
+    (monotonically_increasing_id's low 33 bits). The checkpoint's
+    blocks are the only copy of the layout, so a lost executor fails
+    the job rather than recomputing other ids; a production job that
+    must survive that swaps in a reliable checkpoint. Output ids are
+    identical to row_number() over a global (osm_id, overture_id)
+    sort (property-tested)."""
     keys = ["osm_id", "overture_id"]
     n = num_partitions or matches.sparkSession.sparkContext.defaultParallelism
     part = (
         matches.repartitionByRange(n, *keys)
         .sortWithinPartitions(*keys)
-        .persist()
-    )
-    with_mid = (
-        part.withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_pid", F.shiftrightunsigned(F.col("_mid"), 33))
-        .withColumn("_local", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
-        .drop("_mid")
-    )
-    counts = sorted(
-        (r["_pid"], r["n"])
-        for r in with_mid.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    )
-    if not counts:  # empty input: no rows to id
-        out = with_mid.withColumn(
-            "match_id", F.lit(None).cast("long")
-        ).drop("_pid", "_local").localCheckpoint()
-        part.unpersist()
-        return out
-    offsets, acc = {}, 0
-    for pid, c in counts:
-        offsets[pid] = acc
-        acc += c
-    off = F.element_at(
-        F.map_from_arrays(
-            F.array(*[F.lit(int(p)).cast("long") for p, _ in counts]),
-            F.array(*[F.lit(int(offsets[p])).cast("long") for p, _ in counts]),
-        ),
-        F.col("_pid"),
-    )
-    out = (
-        with_mid.withColumn(
-            "match_id", (off + F.col("_local") + F.lit(1)).cast("long")
-        )
-        .drop("_pid", "_local")
-        # freeze the ids NOW (truncated lineage) so the pinned layout
-        # cache can be released instead of leaking for the session
         .localCheckpoint()
     )
-    part.unpersist()
-    return out
+    counts = dict(part.groupBy(F.spark_partition_id()).count().collect())
+    if not counts:  # empty input: no rows to id, and no offsets to type
+        return part.withColumn("match_id", F.lit(None).cast("long"))
+    starts, acc = [], 0
+    for pid in range(max(counts) + 1):
+        starts.append(acc)
+        acc += counts.get(pid, 0)
+    local = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+    off = F.element_at(
+        F.lit(starts).cast("array<bigint>"), F.spark_partition_id() + 1
+    )
+    return part.withColumn("match_id", off + local + 1)
 
 
 def _tile_pixels(points: DataFrame, zooms, size: int, *keep) -> DataFrame:
@@ -120,8 +95,9 @@ def _tile_pixels(points: DataFrame, zooms, size: int, *keep) -> DataFrame:
 
 def assign_tiles(matches: DataFrame, zooms=(10, 12, 14)) -> DataFrame:
     """F24: one row per (feature, zoom) with slippy z/x/y and the
-    feature's MVT pixel px/py inside that tile."""
-    return _tile_pixels(matches, zooms, MVT_EXTENT, "match_id")
+    feature's MVT pixel px/py inside that tile. Every input column
+    rides along, so the tile rows carry their features."""
+    return _tile_pixels(matches, zooms, MVT_EXTENT, *matches.columns)
 
 
 def density_drop(tiles: DataFrame, max_per_tile: int) -> DataFrame:
@@ -150,12 +126,13 @@ def auto_max_zoom(matches: DataFrame, counts=(1000, 100_000, 10_000_000)) -> int
     return z
 
 
-def tile_table(tiles_kept: DataFrame, features: DataFrame) -> DataFrame:
+def tile_table(tiles_kept: DataFrame) -> DataFrame:
     """K3: the tile pyramid as a table — groupBy (z,x,y) collecting
-    feature structs (with their in-tile px/py), ordered by match_id
-    within each tile."""
-    joined = tiles_kept.filter(F.col("kept")).join(features, "match_id")
-    return joined.groupBy("z", "x", "y").agg(
+    the kept rows' feature structs (with their in-tile px/py),
+    ordered by match_id within each tile. The tile rows carry their
+    features (`assign_tiles` keeps every column), so no join runs and
+    the aggregate reuses `density_drop`'s (z, x, y) shuffle."""
+    return tiles_kept.filter(F.col("kept")).groupBy("z", "x", "y").agg(
         F.sort_array(
             F.collect_list(
                 F.struct(

@@ -36,8 +36,8 @@ LAZY_MULTIMODAL = [
 # Operators that run Spark jobs on purpose, each with its reason.
 EAGER = {
     "detect_hot_cells": "returns the hot cells as a driver-side list",
-    "assign_match_ids": "collects per-partition counts for the id "
-    "offsets, then freezes the ids with a localCheckpoint",
+    "assign_match_ids": "pins the range-partitioned table with a "
+    "localCheckpoint and collects its per-partition counts",
     "auto_max_zoom": "returns a zoom level read from the feature count",
     "write_pmtiles": "writes the archive from tiles it collects",
     "matches_to_pmtiles": "writes the archive (write_pmtiles)",
@@ -827,8 +827,8 @@ class TestLazyConstruction:
         build = {
             "assign_tiles": lambda: assign_tiles(m, zooms=(10, 12)),
             "density_drop": kept,
-            "tile_table": lambda: tile_table(kept(), m),
-            "mvt_tiles": lambda: mvt_tiles(tile_table(kept(), m)),
+            "tile_table": lambda: tile_table(kept()),
+            "mvt_tiles": lambda: mvt_tiles(tile_table(kept())),
             "raster_tiles": lambda: raster_tiles(
                 m.select("lon", "lat"), zooms=(10, 12)
             ),
@@ -985,8 +985,9 @@ class TestMatchIds:
     def test_ids_equal_global_row_number(self, spark):
         """W7: the width-proportional two-phase plan must emit ids
         IDENTICAL to row_number() over a global (osm_id, overture_id)
-        sort — and the jobs it runs contain no single-partition Window
-        (tests/test_plans.py)."""
+        sort, also with fewer rows than partitions and on empty input
+        (zero rows, a bigint match_id) — and the jobs it runs contain
+        no single-partition Window (tests/test_plans.py)."""
         from pyspark.sql import Window, functions as F
 
         from overmatch_spark.operators.tiles import assign_match_ids
@@ -1000,16 +1001,22 @@ class TestMatchIds:
             (F.col("id") % 170 - 85).cast("double").alias("lat"),
         ).repartition(16)
 
-        got = assign_match_ids(df, num_partitions=8).toPandas()
-        w = Window.orderBy("osm_id", "overture_id")
-        want = df.withColumn(
-            "match_id", F.row_number().over(w).cast("long")
-        ).toPandas()
-        key = ["osm_id", "overture_id"]
-        g = got.sort_values(key).reset_index(drop=True)
-        e = want.sort_values(key).reset_index(drop=True)
-        assert (g["match_id"] == e["match_id"]).all()
-        assert g["match_id"].min() == 1 and g["match_id"].max() == n
+        def check(df, rows):
+            got = assign_match_ids(df, num_partitions=8)
+            assert dict(got.dtypes)["match_id"] == "bigint"
+            w = Window.orderBy("osm_id", "overture_id")
+            want = df.withColumn("match_id", F.row_number().over(w).cast("long"))
+            key = ["osm_id", "overture_id"]
+            g = got.toPandas().sort_values(key).reset_index(drop=True)
+            e = want.toPandas().sort_values(key).reset_index(drop=True)
+            assert len(g) == len(e) == rows
+            assert (g["match_id"] == e["match_id"]).all()
+            assert rows == 0 or (g["match_id"].min(), g["match_id"].max()) == (1, rows)
+
+        check(df, n)
+        # fewer rows than the 8 range partitions asked for
+        check(df.filter(F.col("overture_id").isin("ov/1", "ov/2", "ov/3")), 3)
+        check(df.limit(0), 0)  # empty input: no offsets, a typed null id
 
 
 class TestLsh:

@@ -10,9 +10,12 @@ UDF node, above the cell join and its distance predicate; shuffles
 that carry keys and ids but no payload (near-dup self-joins, ADC
 codes, bucketed re-attach); bounded knn nested loops and pure-JVM
 spatial joins; one exchange per raster pyramid; one scan per tile
-assignment; match ids assigned without a Window; and signature
-projections (simhash, minhash, PQ lookup table) whose size does not
-grow with their constant tables.
+assignment; a tile table with no join and no shuffle but (z, x, y);
+archives that Spark does not sort and a bounded job count per
+matches_to_pmtiles call; match ids assigned without a Window;
+signature projections (simhash, minhash, PQ lookup table) whose size
+does not grow with their constant tables; and IVF distances computed
+once per row.
 
 The module runs under demo.BENCH_CONF. It turns size-based broadcasts
 off, so the joins that shuffle at scale shuffle here too (explicit
@@ -257,11 +260,11 @@ def test_pair_self_join_shuffles_only_keys_ids_and_carry(pair_plan, op):
 # --- match ids: a range partition, no Window ---
 
 def test_match_ids_run_without_a_window(spark, layers):
-    """assign_match_ids collects its partition counts and returns a
-    localCheckpoint, so its own plan is a bare RDD scan. The check
-    reads the executions it ran instead: they range-partition on the
-    key, and none has a Window (a global row_number would funnel
-    every row through one task)."""
+    """assign_match_ids checkpoints the range-partitioned table and
+    returns a projection over that checkpoint, so its own plan is an
+    RDD scan. The check reads the executions it ran instead: they
+    range-partition on the key, and none has a Window (a global
+    row_number would funnel every row through one task)."""
     from perfbench.tracing import SparkStatus
 
     from overmatch_spark.operators.conflate import conflate
@@ -433,6 +436,44 @@ def test_signature_plan_does_not_grow_with_its_constants(spark, monkeypatch, sig
     assert counts[0] == counts[1] > 0, counts
 
 
+def test_ivf_assign_computes_its_distances_once(spark):
+    """ivf_topk's `ivf` projection holds ONE transform over the
+    centroid literal: Spark does not share subexpressions that hold
+    lambdas, so ivf_assign binds the distances once."""
+    from overmatch_spark.operators import ann
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = ann.ivf_topk(
+        emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
+        ann.reference_ivf_centroids(16), k=5, nprobe=2,
+    )
+    jvm = spark.sparkContext._jvm
+
+    def cls(name):
+        return jvm.java.lang.Class.forName(
+            f"org.apache.spark.sql.catalyst.expressions.{name}"
+        )
+
+    alias, transform, literal = cls("Alias"), cls("ArrayTransform"), cls("Literal")
+
+    def over_literal(e) -> int:
+        own = transform.isInstance(e) and literal.isInstance(e.argument())
+        return own + sum(over_literal(k) for k in _seq(e.children()))
+
+    counts = []
+
+    def walk(p):
+        counts.extend(
+            over_literal(e) for e in _seq(p.expressions())
+            if alias.isInstance(e) and e.name() == "ivf"
+        )
+        for k in _seq(p.children()):
+            walk(k)
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    assert counts == [1], counts
+
+
 # --- tiles ---
 
 def test_raster_pyramid_is_one_exchange_and_one_python_node(layers):
@@ -457,6 +498,77 @@ def test_tile_assignment_over_two_zooms_scans_once(layers):
     assert len([n for n in plan.walk() if n.name.startswith("Scan")]) == 1
     assert len(plan.named("Generate")) == 1
     assert not plan.named("Union")
+
+
+@pytest.fixture(scope="module")
+def matches(layers):
+    """The sf0.01 conflation matches, checkpointed: the tiling checks
+    below see the tiling layer's plans and jobs only."""
+    from overmatch_spark.operators.conflate import conflate
+
+    return conflate(*layers).select("osm_id", "overture_id", "lon", "lat") \
+        .localCheckpoint()
+
+
+@pytest.fixture(scope="module")
+def pyramid(matches):
+    from overmatch_spark.operators.tiles import (
+        assign_match_ids, assign_tiles, density_drop, tile_table,
+    )
+
+    return tile_table(density_drop(assign_tiles(assign_match_ids(matches)), 3))
+
+
+def test_tile_table_joins_nothing_back(pyramid):
+    """Tile rows carry their features, so the pyramid has no join and
+    one kind of shuffle: the (z, x, y) exchange the density drop and
+    the tile table share."""
+    plan = executed(pyramid)
+    assert not [
+        n.desc for n in plan.walk()
+        if "Join" in n.name or n.name == "BroadcastExchange"
+    ]
+    keys = [_hash_keys(n) for n in plan.named("Exchange")]
+    assert keys and all(k == ["z", "x", "y"] for k in keys), keys
+
+
+def test_write_pmtiles_runs_no_spark_sort(spark, pyramid, tmp_path):
+    """The driver orders the archive by tile id, so no execution of
+    write_pmtiles range-partitions on tileid (a Spark global sort)."""
+    from perfbench.tracing import SparkStatus
+
+    from overmatch_spark.operators.pmtiles import write_pmtiles
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    status = SparkStatus(spark)
+    bus.waitUntilEmpty()
+    mark = status.watermark()
+    write_pmtiles(pyramid, str(tmp_path / "t.pmtiles"))
+    bus.waitUntilEmpty()
+    nodes = [n for e in status.since(mark).executions for n in e.nodes]
+    assert nodes
+    assert not [n.desc for n in nodes if "rangepartitioning(tileid" in n.desc]
+
+
+# Spark jobs one matches_to_pmtiles call runs on the sf0.01 matches:
+# the feature count for the zoom rule, the match ids' range sample,
+# checkpoint and count pass, and the archive's encode and stream.
+PMTILES_JOBS = 9
+
+
+def test_matches_to_pmtiles_job_count(spark, matches, tmp_path):
+    """Orchestration, not rows, is the tiling layer's cost at this
+    size, so the number of jobs one call runs is bounded."""
+    from overmatch_spark.operators.pmtiles import matches_to_pmtiles
+
+    sc = spark.sparkContext
+    sc.setJobGroup("matches_to_pmtiles", "job-count check")
+    try:
+        matches_to_pmtiles(matches, str(tmp_path / "m.pmtiles"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("matches_to_pmtiles")
+    assert 0 < len(jobs) <= PMTILES_JOBS, len(jobs)
 
 
 # --- bucketed tables: the bucketed side never shuffles ---

@@ -130,9 +130,7 @@ def pyramid(spark):
     )
     t = assign_tiles(m, zooms=(10, 12))
     kept = density_drop(t, max_per_tile=50)
-    return tile_table(kept, m.select(
-        "match_id", "osm_id", "overture_id", "lon", "lat"
-    ))
+    return tile_table(kept)
 
 
 class TestArchive:
@@ -359,3 +357,63 @@ class TestArchive:
                 seen.add(o)
                 firsts.append(o)
         assert firsts == sorted(firsts)
+
+
+class TestArchiveOrder:
+    """The driver orders the archive: `_assemble_archive` must write
+    the same bytes whatever order the encoded tiles arrive in."""
+
+    @staticmethod
+    def _enc(spark, rows, slices):
+        from overmatch_spark.operators.pmtiles import _ENC_SCHEMA
+
+        rdd = spark.sparkContext.parallelize(rows, slices)
+        return spark.createDataFrame(rdd, _ENC_SCHEMA)
+
+    @staticmethod
+    def _write(enc, path):
+        from overmatch_spark.operators.pmtiles import _assemble_archive
+        from overmatch_spark.operators.raster import _NONE, _PNG
+
+        meta = {"name": "t", "format": "png"}
+        return _assemble_archive(enc, path, _PNG, _NONE, meta)
+
+    def test_descending_arrival_writes_the_ascending_archive(
+        self, spark, tmp_path
+    ):
+        # every z2 and z3 tile; the 13 with (x + y) % 7 == 3 share one
+        # blob, so in descending arrival the first copy to arrive is
+        # not the first in tile-id order
+        dup = b"same blob"
+        rows = []
+        for z in (2, 3):
+            for x in range(1 << z):
+                for y in range(1 << z):
+                    data = f"{z}/{x}/{y}".encode() * (1 + x)
+                    if (x + y) % 7 == 3:
+                        data = dup
+                    rows.append((hilbert_tid(z, x, y), z, x, y, data))
+        rows.sort()
+        assert sum(r[4] == dup for r in rows) >= 2
+        up_p, down_p = str(tmp_path / "up.pmtiles"), str(tmp_path / "down.pmtiles")
+        self._write(self._enc(spark, rows, 1), up_p)
+        summary = self._write(self._enc(spark, rows[::-1], 5), down_p)
+        assert open(down_p, "rb").read() == open(up_p, "rb").read()
+        assert summary["tiles"] == len(rows)
+        assert summary["contents"] == len({r[4] for r in rows})
+
+        rd = PMTilesReader(down_p)
+        assert rd.clustered == 1
+        assert [e[0] for e in rd.entries] == [r[0] for r in rows]
+        first: dict[bytes, int] = {}  # blob -> offset of its first copy
+        for (tid, z, x, y, data), (_, off, ln, _) in zip(rows, rd.entries):
+            assert rd.get_tile(z, x, y) == data and ln == len(data)
+            assert first.setdefault(data, off) == off
+        stored = list(first.values())
+        assert stored == sorted(stored) and stored[0] == 0
+
+    def test_empty_input_raises_and_leaves_no_spool(self, spark, tmp_path):
+        path = str(tmp_path / "empty.pmtiles")
+        with pytest.raises(ValueError, match="empty tile pyramid"):
+            self._write(self._enc(spark, [], 3), path)
+        assert not list(tmp_path.iterdir())
