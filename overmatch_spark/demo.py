@@ -36,15 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from overmatch_spark import expressions as X
-
-ADJ = ["Golden", "Silver", "Rustic", "Urban", "Happy", "Blue", "Crimson",
-       "Emerald", "Sunny", "Misty", "Grand", "Little", "Royal", "Cosy",
-       "Velvet", "Iron", "Copper", "Marble", "Cedar", "Willow"]
-NOUN = ["Fork", "Spoon", "Kettle", "Garden", "Harbor", "Lantern", "Anchor",
-        "Meadow", "Falcon", "Otter", "Bridge", "Mill", "Orchard", "Summit",
-        "Canyon", "Harvest", "Compass", "Beacon", "Prairie", "Grove"]
-TYP = ["Cafe", "Bistro", "Tavern", "Diner", "Bakery", "Grill", "Kitchen",
-       "Pub", "Eatery", "Cantina"]
+from overmatch_spark.fixtures import ADJECTIVES, NOUNS, TYPES
 
 # Grid anchor in Mercator meters (~DC area), integer-valued.
 X0 = -8_575_000
@@ -78,14 +70,16 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _vocab_name(key):
-    """ADJ[key%20] ' ' NOUN[(key//20)%20] ' ' TYP[(key//400)%10]."""
-    a = F.element_at(F.array(*[F.lit(s) for s in ADJ]), (key % 20 + 1).cast("int"))
+    """ADJECTIVES[key%20] ' ' NOUNS[(key//20)%20] ' ' TYPES[(key//400)%10]."""
+    a = F.element_at(
+        F.array(*[F.lit(s) for s in ADJECTIVES]), (key % 20 + 1).cast("int")
+    )
     nn = F.element_at(
-        F.array(*[F.lit(s) for s in NOUN]),
+        F.array(*[F.lit(s) for s in NOUNS]),
         (((key - key % 20) / 20).cast("long") % 20 + 1).cast("int"),
     )
     t = F.element_at(
-        F.array(*[F.lit(s) for s in TYP]),
+        F.array(*[F.lit(s) for s in TYPES]),
         (((key - key % 400) / 400).cast("long") % 10 + 1).cast("int"),
     )
     return F.concat_ws(" ", a, nn, t)
@@ -231,9 +225,9 @@ def _sql_list(words):
 
 
 SQL_VOCAB_NAME = (
-    f"concat({_sql_list(ADJ)}[CAST(key % 20 AS INTEGER) + 1], ' ', "
-    f"{_sql_list(NOUN)}[CAST(CAST((key - key % 20) / 20 AS BIGINT) % 20 AS INTEGER) + 1], ' ', "
-    f"{_sql_list(TYP)}[CAST(CAST((key - key % 400) / 400 AS BIGINT) % 10 AS INTEGER) + 1])"
+    f"concat({_sql_list(ADJECTIVES)}[CAST(key % 20 AS INTEGER) + 1], ' ', "
+    f"{_sql_list(NOUNS)}[CAST(CAST((key - key % 20) / 20 AS BIGINT) % 20 AS INTEGER) + 1], ' ', "
+    f"{_sql_list(TYPES)}[CAST(CAST((key - key % 400) / 400 AS BIGINT) % 10 AS INTEGER) + 1])"
 )
 
 _SQL_GRID = f"""

@@ -23,9 +23,7 @@ from functools import reduce
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-R_MERC = 6378137.0
-WORLD_M = 2.0 * math.pi * R_MERC
-ORIGIN_M = math.pi * R_MERC
+from overmatch_spark.kernels.geo import ORIGIN_M, R_MERC, WORLD_M
 
 # SQL text twins (for DuckDB oracles) — kept adjacent to the Column
 # builders so the two can never drift apart silently.

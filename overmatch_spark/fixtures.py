@@ -27,6 +27,7 @@ from overmatch_spark.kernels import geo
 # DC-extract envelope of the reference's golden data (FIXTURES.md §2a).
 BBOX = (-77.12, 38.80, -76.90, 39.00)  # lon_min, lat_min, lon_max, lat_max
 
+# The name vocabulary of the fixture POIs and of the demo layers (demo.py).
 ADJECTIVES = [
     "Golden", "Silver", "Rustic", "Urban", "Happy", "Blue", "Crimson",
     "Emerald", "Sunny", "Misty", "Grand", "Little", "Royal", "Cosy",

@@ -24,7 +24,8 @@ from __future__ import annotations
 
 import numpy as np
 
-# WGS84 / Web-Mercator constants (public: EPSG:3857 definition).
+# WGS84 / Web-Mercator constants (public: EPSG:3857 definition); the
+# Catalyst twins (overmatch_spark.expressions) import these.
 R_MERC = 6378137.0
 WORLD_M = 2.0 * np.pi * R_MERC  # ~40075016.6856 m
 ORIGIN_M = np.pi * R_MERC  # half-world

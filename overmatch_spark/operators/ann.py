@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from overmatch_spark.operators.dedup import (
+    _sign_bits,
     cosine,
     embedding_bucket,
     fold_sum,
@@ -287,20 +288,23 @@ def multiprobe_buckets(vec: Column, planes: list[list[int]],
     fell into (standard multi-probe LSH). All buckets are distinct
     (distinct single-bit flips), so no candidate is scored twice.
     Margin ties break on plane index for engine-portable determinism.
-    extra=0 gives the base bucket alone."""
-    base = embedding_bucket(vec, planes)
-    margins = F.array_sort(
-        F.transform(
-            plane_dots(vec, planes),
-            lambda d, j: F.struct(F.abs(d).alias("m"), j.alias("j")),
-        )
-    )
+    extra=0 gives the base bucket alone. The plane dot products are
+    bound once, as a lambda argument (as in ivf_assign): Spark does not
+    share subexpressions that hold lambdas."""
     powers = F.array(*[F.lit(1 << kk).cast("long") for kk in range(len(planes))])
-    flips = F.transform(
-        F.slice(margins, 1, extra),
-        lambda s: base.bitwiseXOR(F.element_at(powers, s["j"] + 1)),
-    )
-    return F.concat(F.array(base), flips)
+
+    def probes(dots: Column) -> Column:
+        base = _sign_bits(dots)
+        margins = F.array_sort(
+            F.transform(dots, lambda d, j: F.struct(F.abs(d).alias("m"), j.alias("j")))
+        )
+        flips = F.transform(
+            F.slice(margins, 1, extra),
+            lambda s: base.bitwiseXOR(F.element_at(powers, s["j"] + 1)),
+        )
+        return F.concat(F.array(base), flips)
+
+    return F.transform(F.array(plane_dots(vec, planes)), probes)[0]
 
 
 def multiprobe_topk(

@@ -103,7 +103,13 @@ def _self_pairs(
 
     `one_key`: each doc has one key row, so no pair repeats; the
     per-pair aggregate (an exchange on the ids) and `shared` are
-    skipped."""
+    skipped.
+
+    `keyed` is exchanged once on the keys before the two aliases, so
+    the second side reuses that exchange and each doc's keys are
+    computed once."""
+    keyed = keyed.repartition(*keys)
+
     def side(s: str) -> DataFrame:
         return keyed.select(
             *keys,
@@ -306,15 +312,11 @@ def _survivors(
     df: DataFrame, pairs: DataFrame, id_col: str, score_col: str | None
 ) -> DataFrame:
     """The survivor step of every one-call dedup: `df`'s ids (plus the
-    optional score) as nodes -> dedup_clusters over `pairs` -> the
-    rows of `df` that survive, by a left-semi join on ids only."""
-    score = [] if score_col is None else [F.col(score_col)]
-    nodes = df.select(F.col(id_col).alias("doc_id"), *score)
-    clusters = dedup_clusters(pairs, nodes=nodes, score_col=score_col)
-    survivors = clusters.filter(F.col("survivor")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return df.join(survivors, id_col, "left_semi")
+    optional score) left-joined to the labels of `pairs` -> each
+    cluster's winner -> the rows of `df` that win, by a left-semi join
+    on ids only."""
+    winners = _winners(_clustered(df, id_col, score_col, _labels(pairs, _MAX_ITERS)))
+    return df.join(winners.select(F.col("doc_id").alias(id_col)), id_col, "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -565,43 +567,24 @@ def _checkpoint(df: DataFrame) -> tuple[DataFrame, JavaObject]:
     return DataFrame(jdf, df.sparkSession), blocks
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    nodes: DataFrame | None = None,
-    max_iters: int = 50,
-    score_col: str | None = None,
-) -> DataFrame:
-    """Connected components over near-dup pairs (id_a, id_b) by
-    iterative min-label propagation; the canonical survivor per
-    component is its smallest id (deterministic, so a DuckDB recursive
-    CTE replays it exactly).
+_MAX_ITERS = 50  # label rounds before dedup_clusters raises
 
-    Returns (doc_id, cluster_id, survivor). If `nodes` (first column =
-    doc id) is given, isolated docs appear as their own singletons —
-    the full survivor table a dedup pipeline feeds downstream
-    (reference precedent for pair->group formation:
-    /root/reference/api/load_matches.py:204-212).
 
-    `score_col` (requires `nodes` carrying that column) switches the
-    survivor policy from min-id to KEEP-BEST: the cluster's survivor
-    is its highest-scoring doc (ties -> smallest doc_id), the
-    standard corpus-dedup knob (e.g. keep the longest document).
-    Cluster ids stay min-id labels either way; the score is
-    deterministic data, so single-node oracles replay the choice
-    exactly. A map-side struct-max per cluster — no window, no skew
-    sensitivity.
+def _labels(pairs: DataFrame, max_iters: int) -> DataFrame:
+    """(doc_id, cluster_id) for every id of `pairs` (id_a, id_b): the
+    smallest id of its connected component, by min-label propagation
+    with pointer jumping (deterministic, so a DuckDB recursive CTE
+    replays it exactly).
 
-    Scale: each round is one checkpoint action over two (node)-keyed
-    shuffles — a neighbor-min pass plus a POINTER-JUMPING pass (my
-    label's label). The loop exits as soon as a round changes
-    nothing. Near-dup components are shallow (stars/cliques around a
-    template), so 2-3 rounds in practice. Deep components need many
-    more: a chain with seeded permuted ids needs 16 rounds at 23
-    nodes, 46 at 64 (22 s on 4 cores) and 119 at 256 (70 s); a
-    Python replay of the rounds gives 353 at 1,024. Raises
-    RuntimeError when `max_iters` rounds pass and labels still move,
-    instead of returning unconverged clusters.
-    """
+    Scale: each round is one checkpoint action over one (node)-keyed
+    min of each node's offers: its own label, its neighbours' labels
+    (sym ⋈ lab) and its label's label (lab ⋈ lab, the pointer jump).
+    The loop exits as soon as a round changes nothing. Near-dup
+    components are shallow (stars/cliques around a template), so 2-3
+    rounds in practice. A chain with seeded permuted ids needs 16
+    rounds at 23 nodes, 46 at 64 (22 s on 4 cores), 119 at 256 (70 s)
+    and, by a Python replay, 353 at 1,024. Raises RuntimeError when
+    `max_iters` rounds pass and labels still move."""
     e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # A checkpoint on every iteration state: the loop would otherwise
     # grow the LOGICAL plan each round and Catalyst re-analysis cost
@@ -615,37 +598,24 @@ def dedup_clusters(
         .withColumn("label", F.col("node"))
     )
     for _ in range(max_iters):
-        nb = (
-            sym.join(
-                lab.select(F.col("node").alias("dst"), F.col("label")), "dst"
-            )
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
+        # the own offer also carries the old label, for the moved count
+        own = lab.select("node", "label", F.col("label").alias("old"))
+        nbr = sym.join(lab.select(F.col("node").alias("dst"), "label"), "dst").select(
+            F.col("src").alias("node"), "label"
         )
-        # pointer jumping: resolve my label's own label in the same round
-        jump = lab.select(
-            F.col("node").alias("label"), F.col("label").alias("jlabel")
-        )
+        # every label is a node, so the pointer jump is an inner join
+        jump = lab.select("node", F.col("label").alias("via")).join(
+            lab.select(F.col("node").alias("via"), "label"), "via"
+        ).select("node", "label")
         # convergence is observed on the round's own checkpoint action
         # (rows whose label moved), not counted by a second job
         moved = Observation()
         lab, blocks = _checkpoint(
-            lab.join(nb.select(F.col("src").alias("node"), "nmin"), "node", "left")
-            .join(jump, "label", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nmin"), F.col("label")),
-                    F.coalesce(F.col("jlabel"), F.col("label")),
-                ).alias("new_label"),
-                F.col("label").alias("old_label"),
-            )
-            .observe(
-                moved,
-                F.count_if(F.col("new_label") != F.col("old_label")).alias("n"),
-            )
-            .select("node", F.col("new_label").alias("label"))
+            own.unionByName(nbr.unionByName(jump), allowMissingColumns=True)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
+            .observe(moved, F.count_if(F.col("label") != F.col("old")).alias("n"))
+            .select("node", "label")
         )
         # round r is materialized and reads nothing of round r-1's
         # blocks (a checkpoint cuts the lineage): free them now, not
@@ -660,46 +630,75 @@ def dedup_clusters(
         )
     # the result reads only the last round's labels
     sym_blocks.unpersist(False)
-    out = lab.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+    return lab.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+
+def _clustered(
+    nodes: DataFrame, id_col: str, score_col: str | None, labels: DataFrame
+) -> DataFrame:
+    """`nodes`' ids as doc_id (and `score_col` as score) with a
+    cluster_id: the doc's label, or its own id where no pair names it
+    (a singleton)."""
+    score = [] if score_col is None else [F.col(score_col).alias("score")]
+    return (
+        nodes.select(F.col(id_col).alias("doc_id"), *score)
+        .join(labels, "doc_id", "left")
+        .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col("doc_id")))
     )
+
+
+def _winners(clustered: DataFrame) -> DataFrame:
+    """(cluster_id, doc_id) of each cluster's survivor in `clustered`
+    (doc_id, cluster_id[, score]). min(struct(-score, doc_id)) is (max
+    score, tie min id), a partial aggregate that shuffles one row per
+    cluster. Without a score every doc scores 0.0, so the min id wins.
+    A null score counts as -inf and LOSES (SQL 'ORDER BY score DESC
+    NULLS LAST'); Spark's struct ordering would sort it first."""
+    score = F.lit(0.0)
+    if "score" in clustered.columns:
+        score = F.coalesce(F.col("score").cast("double"), F.lit(float("-inf")))
+    return clustered.groupBy("cluster_id").agg(
+        F.min(F.struct((-score).alias("ns"), F.col("doc_id").alias("did")))["did"]
+        .alias("doc_id")
+    )
+
+
+def dedup_clusters(
+    pairs: DataFrame,
+    nodes: DataFrame | None = None,
+    max_iters: int = _MAX_ITERS,
+    score_col: str | None = None,
+) -> DataFrame:
+    """Connected components over near-dup pairs (id_a, id_b) by
+    iterative min-label propagation (`_labels`); the canonical
+    survivor per component is its smallest id.
+
+    Returns (doc_id, cluster_id, survivor). If `nodes` (first column =
+    doc id) is given, the rows are the nodes': isolated docs appear as
+    their own singletons, and ids that only `pairs` names are dropped
+    — the full survivor table a dedup pipeline feeds downstream
+    (reference precedent for pair->group formation:
+    /root/reference/api/load_matches.py:204-212).
+
+    `score_col` (requires `nodes` carrying that column) switches the
+    survivor policy from min-id to KEEP-BEST (`_winners`): the
+    cluster's survivor is its highest-scoring doc (ties -> smallest
+    doc_id), the standard corpus-dedup knob (e.g. keep the longest
+    document). Cluster ids stay min-id labels either way; the score is
+    deterministic data, so single-node oracles replay the choice
+    exactly.
+    """
     if score_col is not None and nodes is None:
         raise ValueError("score_col requires `nodes` carrying that column")
+    out = _labels(pairs, max_iters)
     if nodes is not None:
-        all_nodes = nodes.select(F.col(nodes.columns[0]).alias("doc_id"))
-        out = all_nodes.join(out, "doc_id", "left").select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-        )
+        out = _clustered(nodes, nodes.columns[0], score_col, out)
     if score_col is None:
+        # the labels are the min-id winners
         return out.withColumn("survivor", F.col("doc_id") == F.col("cluster_id"))
-    scored = out.join(
-        nodes.select(
-            F.col(nodes.columns[0]).alias("doc_id"),
-            # null scores LOSE (SQL 'ORDER BY score DESC NULLS LAST'
-            # semantics): without the coalesce, Spark's struct
-            # ordering sorts the null negated score FIRST and a
-            # null-scored row would win its cluster
-            F.coalesce(
-                F.col(score_col).cast("double"),
-                F.lit(float("-inf")),
-            ).alias("_score"),
-        ),
-        "doc_id",
-    )
-    # keep-best: min(struct(-score, doc_id)) == (max score, tie min id);
-    # partial aggregate, so the shuffle carries one row per cluster
-    best = scored.groupBy("cluster_id").agg(
-        F.min(
-            F.struct((-F.col("_score")).alias("ns"), F.col("doc_id").alias("did"))
-        )["did"].alias("_best_id")
-    )
-    return (
-        scored.join(best, "cluster_id")
-        .select(
-            "doc_id", "cluster_id",
-            (F.col("doc_id") == F.col("_best_id")).alias("survivor"),
-        )
+    best = _winners(out).select("cluster_id", F.col("doc_id").alias("_best_id"))
+    return out.join(best, "cluster_id").select(
+        "doc_id", "cluster_id", (F.col("doc_id") == F.col("_best_id")).alias("survivor")
     )
 
 

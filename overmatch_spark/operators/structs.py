@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from overmatch_spark.operators.dedup import h60
+
 # one real numeric token (sign, decimal, exponent) — serializers
 # emit 1e-05 for near-zero coords; the old [-0-9.]+ silently
 # NULLed those (and accepted malformed 1.2.3)
@@ -181,14 +183,7 @@ def deterministic_shuffle(df: DataFrame, seed: int, id_col: str) -> DataFrame:
     """W5: reproducible pseudo-random ordering (the reference's seeded
     Fisher-Yates); hash-of-(id, seed) ordering is stable across
     engines and partitionings, unlike rand(seed)."""
-    return df.orderBy(
-        F.conv(
-            F.substring(F.md5(F.concat(F.col(id_col), F.lit(f":{seed}"))), 1, 15),
-            16,
-            10,
-        ).cast("long"),
-        F.col(id_col),
-    )
+    return df.orderBy(h60(F.concat(F.col(id_col), F.lit(f":{seed}"))), F.col(id_col))
 
 
 def _xml_attr_escape(c: Column) -> Column:

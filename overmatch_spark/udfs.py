@@ -1,6 +1,11 @@
-"""The engine's Arrow-vectorized UDFs — the ONLY Python that runs on
-executors. Everything else is Catalyst expressions (see
-overmatch_spark.expressions)."""
+"""The engine's one Arrow-vectorized scalar UDF, the name similarity
+of conflation's join condition. It is not the only Python that runs
+on executors: the MVT encode (`pmtiles.mvt_tiles`), the media
+operators (`multimodal`) and the error budget (`errors`) map Arrow
+batches with `mapInPandas`, raster tiles (`raster`) render per tile
+with `applyInPandas`, and streaming sessions (`streaming.sessions`)
+keep state with `applyInPandasWithState`. The geometry, dedup and ANN
+math is Catalyst expressions (see overmatch_spark.expressions)."""
 
 from __future__ import annotations
 

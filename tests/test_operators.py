@@ -44,8 +44,9 @@ EAGER = {
     "write_raster_pmtiles": "writes the archive (write_pmtiles)",
     "dedup_clusters": "connected components run one checkpoint action "
     "per round",
-    "dedup_corpus": "runs dedup_clusters",
-    "dedup_images_by_content": "runs dedup_clusters",
+    "dedup_corpus": "runs the label rounds, one checkpoint action each",
+    "dedup_images_by_content": "runs the label rounds, one checkpoint "
+    "action each",
     "ConflationJob": "the checkpoint: prepare and run write the layers "
     "and each bucket's matches",
     "PartitionedSeenStore": "merge_batch and compact rewrite the "
@@ -1518,6 +1519,34 @@ class TestSimhashHamming:
         assert got.loc[[5, 6], "cluster_id"].tolist() == [5, 5]
         assert got.loc[7, "cluster_id"] == 7 and got.loc[8, "cluster_id"] == 8
         assert got["survivor"].sum() == 4  # 1, 5, 7, 8
+
+    def test_pair_ids_missing_from_nodes(self, spark):
+        """Ids that only `pairs` names (1, 4, 7) still link their
+        components, but the rows are the nodes'. Under min-id a cluster
+        whose min id is not a node keeps no row; keep-best picks among
+        the nodes, and a null score loses."""
+        from overmatch_spark.operators.dedup import dedup_clusters
+
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (4, 5), (5, 6), (7, 8)], "id_a long, id_b long"
+        )
+        nodes = spark.createDataFrame(
+            [(2, 1.0), (3, 5.0), (5, None), (6, 2.0), (8, 3.0), (10, 0.0)],
+            "doc_id long, score double",
+        )
+
+        def rows(**kw):
+            out = dedup_clusters(pairs, nodes=nodes, **kw).orderBy("doc_id")
+            return [tuple(r) for r in out.collect()]
+
+        assert rows() == [
+            (2, 1, False), (3, 1, False), (5, 4, False), (6, 4, False),
+            (8, 7, False), (10, 10, True),
+        ]
+        assert rows(score_col="score") == [
+            (2, 1, False), (3, 1, True), (5, 4, False), (6, 4, True),
+            (8, 7, True), (10, 10, True),
+        ]
 
     def test_deep_chain_converges_logarithmically(self, spark):
         """Pointer jumping makes a 200-node chain (diameter 200)

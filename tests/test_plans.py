@@ -14,8 +14,11 @@ assignment; a tile table with no join and no shuffle but (z, x, y);
 archives that Spark does not sort and a bounded job count per
 matches_to_pmtiles call; match ids assigned without a Window;
 signature projections (simhash, minhash, PQ lookup table) whose size
-does not grow with their constant tables; and IVF distances computed
-once per row.
+does not grow with their constant tables; IVF distances and
+multi-probe plane dots computed once per row; near-dup pair keys
+computed once per doc; and a corpus dedup that reads the corpus
+twice, runs a bounded number of jobs and checkpoints one aggregate
+per label round.
 
 The module runs under demo.BENCH_CONF. It turns size-based broadcasts
 off, so the joins that shuffle at scale shuffle here too (explicit
@@ -257,6 +260,94 @@ def test_pair_self_join_shuffles_only_keys_ids_and_carry(pair_plan, op):
     assert shuffled and all(cols <= allowed for cols in shuffled), shuffled
 
 
+@pytest.fixture(scope="module")
+def corpus(spark):
+    return spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "text", F.length("text").alias("score")
+    )
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "simhash_hamming_pairs"])
+def test_pair_keys_are_computed_once_per_doc(spark, corpus, op):
+    """The two self-join sides read one exchange on the keys, so each
+    doc's keys (shingles and minhashes, or the simhash) are computed
+    by one Generate, also where AQE may broadcast a side (the plain
+    session's threshold, not this module's)."""
+    from overmatch_spark.operators import dedup
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.unset(key)
+    try:
+        plan = executed(getattr(dedup, op)(corpus, "text", "doc_id"))
+    finally:
+        spark.conf.set(key, demo.BENCH_CONF[key])
+    assert len(plan.named("Generate")) == 1
+
+
+# --- corpus dedup: winners picked once, one aggregate per label round ---
+
+def test_dedup_corpus_reads_the_corpus_twice(corpus):
+    """The survivors are the corpus semi-joined to each cluster's
+    winner, picked once from the nodes' labels: one read for the
+    nodes, one for the rows, and no per-node survivor table."""
+    from overmatch_spark.operators.dedup import dedup_corpus
+
+    plan = executed(dedup_corpus(corpus, "text", "doc_id", score_col="score"))
+    assert len([n for n in plan.walk() if "ReadSchema" in n.meta]) == 2
+
+
+# Spark jobs one keep-best dedup_corpus call, its survivors collected,
+# runs on the sf0.01 documents: the pair query's stages, the
+# checkpoint of every label round and the survivor query.
+DEDUP_JOBS = 25
+
+
+def test_dedup_corpus_job_count(spark, corpus):
+    """Rounds and stages, not rows, are dedup's cost at this size, so
+    the number of jobs one call runs is bounded."""
+    from overmatch_spark.operators.dedup import dedup_corpus
+
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_corpus", "job-count check")
+    try:
+        dedup_corpus(corpus, "text", "doc_id", score_col="score").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup_corpus")
+    assert 0 < len(jobs) <= DEDUP_JOBS, len(jobs)
+
+
+def test_label_round_is_one_aggregate_over_two_joins(spark, monkeypatch):
+    """Each label round is one min per node over its offers (own label,
+    neighbours' labels, label's label): two joins and one aggregate in
+    the frame the round checkpoints."""
+    from overmatch_spark.operators import dedup
+
+    frames, checkpoint = [], dedup._checkpoint
+
+    def record(df):
+        frames.append(df)
+        return checkpoint(df)
+
+    monkeypatch.setattr(dedup, "_checkpoint", record)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 9), (5, 6)], "id_a long, id_b long"
+    )
+    dedup.dedup_clusters(pairs)
+
+    def names(p):
+        yield p.nodeName()
+        for k in _seq(p.children()):
+            yield from names(k)
+
+    rounds = [  # after the edge list's and the first labels' checkpoints
+        Counter(names(df._jdf.queryExecution().optimizedPlan())) for df in frames[2:]
+    ]
+    assert rounds and all(
+        (r["Join"], r["Aggregate"]) == (2, 1) for r in rounds
+    ), rounds
+
+
 # --- match ids: a range partition, no Window ---
 
 def test_match_ids_run_without_a_window(spark, layers):
@@ -436,18 +527,12 @@ def test_signature_plan_does_not_grow_with_its_constants(spark, monkeypatch, sig
     assert counts[0] == counts[1] > 0, counts
 
 
-def test_ivf_assign_computes_its_distances_once(spark):
-    """ivf_topk's `ivf` projection holds ONE transform over the
-    centroid literal: Spark does not share subexpressions that hold
-    lambdas, so ivf_assign binds the distances once."""
-    from overmatch_spark.operators import ann
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = ann.ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
-        ann.reference_ivf_centroids(16), k=5, nprobe=2,
-    )
-    jvm = spark.sparkContext._jvm
+def _transforms_over_literals(df, name: str) -> list[int]:
+    """For each expression aliased `name` in `df`'s optimized plan, the
+    transforms over a literal array (a constant table) it holds; no
+    job runs. Spark does not share subexpressions that hold lambdas,
+    so each one is evaluated."""
+    jvm = df.sparkSession.sparkContext._jvm
 
     def cls(name):
         return jvm.java.lang.Class.forName(
@@ -465,12 +550,41 @@ def test_ivf_assign_computes_its_distances_once(spark):
     def walk(p):
         counts.extend(
             over_literal(e) for e in _seq(p.expressions())
-            if alias.isInstance(e) and e.name() == "ivf"
+            if alias.isInstance(e) and e.name() == name
         )
         for k in _seq(p.children()):
             walk(k)
 
     walk(df._jdf.queryExecution().optimizedPlan())
+    return counts
+
+
+def test_ivf_assign_computes_its_distances_once(spark):
+    """ivf_topk's `ivf` projection holds ONE transform over the
+    centroid literal: ivf_assign binds the distances once."""
+    from overmatch_spark.operators import ann
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = ann.ivf_topk(
+        emb, emb.filter(F.col("vec_id") < 5), "embedding", "vec_id",
+        ann.reference_ivf_centroids(16), k=5, nprobe=2,
+    )
+    counts = _transforms_over_literals(df, "ivf")
+    assert counts == [1], counts
+
+
+def test_multiprobe_buckets_compute_their_plane_dots_once(spark):
+    """A probe's bucket list holds ONE transform over the hyperplane
+    literal: the base bucket, the margins and every flip read the dot
+    products multiprobe_buckets binds once."""
+    from overmatch_spark.operators import ann, dedup
+
+    row = spark.range(1).select(
+        F.array_repeat(F.col("id").cast("double"), 64).alias("v")
+    )
+    planes = dedup.hyperplanes(6, 64)
+    df = row.select(ann.multiprobe_buckets(F.col("v"), planes, 2).alias("buckets"))
+    counts = _transforms_over_literals(df, "buckets")
     assert counts == [1], counts
 
 
